@@ -97,9 +97,11 @@ def _spread(
     parallelism — ~2000-row slices amortize the per-task Arrow + numpy
     fixed costs (a measured spread-to-32 of a 2000-row corpus LOST 15-25%
     at sf0.1: 62-row batches are all overhead).  Callers pass ``n`` from
-    catalog stats / parquet footers (the registry wrappers do); with n
-    unknown the input is left alone — no surprise shuffles for library
-    callers or tiny test fixtures.  When the scan already has >= target
+    catalog stats / parquet footers (the registry wrappers do); an upper
+    bound (a filtered corpus's whole table, say) can only ask for more
+    tasks, still capped by the parallelism.  With n unknown the input is
+    left alone — no surprise shuffles for library callers or tiny test
+    fixtures.  When the scan already has >= target
     partitions (the 100 TB case: thousands of files) this is a no-op, so
     the shuffle only ever exists where the file layout starves the scan
     (guide §2: scale-adaptive partitioning, not a constant tuned for one
@@ -155,10 +157,12 @@ def brute_force_topk(
     ]
     top_n = k + 1
 
+    # ids keep the caller's type (string ids included); the per-batch
+    # lexsort tie-break orders them as Spark's c_id sort does
     out_schema = T.StructType(
         [
-            T.StructField("q_id", T.LongType()),
-            T.StructField("c_id", T.LongType()),
+            T.StructField("q_id", queries.schema[id_col].dataType),
+            T.StructField("c_id", emb.schema[id_col].dataType),
             T.StructField("cos", T.DoubleType()),
         ]
     )
@@ -1246,8 +1250,8 @@ def pq_topk(
 
     out_schema = T.StructType(
         [
-            T.StructField("q_id", T.LongType()),
-            T.StructField("c_id", T.LongType()),
+            T.StructField("q_id", queries.schema[id_col].dataType),
+            T.StructField("c_id", emb.schema[id_col].dataType),
             T.StructField("adc", T.DoubleType()),
             T.StructField("cos", T.DoubleType()),
         ]
@@ -1558,8 +1562,8 @@ def _ivfpq_topk_fused(
 
     out_schema = T.StructType(
         [
-            T.StructField("q_id", T.LongType()),
-            T.StructField("c_id", T.LongType()),
+            T.StructField("q_id", queries.schema[id_col].dataType),
+            T.StructField("c_id", emb.schema[id_col].dataType),
             T.StructField("adc", T.DoubleType()),
             T.StructField("cos", T.DoubleType()),
         ]
@@ -1762,8 +1766,8 @@ def _ivfpq_search(
 
     adc_schema = T.StructType(
         [
-            T.StructField("q_id", T.LongType()),
-            T.StructField("c_id", T.LongType()),
+            T.StructField("q_id", queries.schema[id_col].dataType),
+            T.StructField("c_id", emb.schema[id_col].dataType),
             T.StructField("adc", T.DoubleType()),
         ]
     )

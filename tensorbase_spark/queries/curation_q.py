@@ -406,6 +406,9 @@ def contamination_semantic(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     bench = emb.filter(F.col("label") == 0)
     corpus = emb.filter(F.col("label") != 0)
+    # n sizes the corpus spread: the whole table's footer count is an
+    # upper bound on the corpus side (the label-0 rows are the benchmark),
+    # and counting that side exactly would cost a job before the scan
     return similarity.semantic_contamination(
         corpus, bench, threshold=0.35,
         n=parquet_num_rows(sf_dir, "embeddings"),

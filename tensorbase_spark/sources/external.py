@@ -281,31 +281,30 @@ def remote_insert_native(addr: str, table: str, df: DataFrame) -> int:
     the CH NATIVE wire as typed columnar blocks (the reference's
     remote-insert block path, mgmt.rs:744-770).  Rows materialize at the
     driver (the reference ships whole blocks the same way)."""
-    from tensorbase_spark.sources.chnative import (
-        NativeClient,
-        _strip_nullable,
-        _wire_value,
-        spark_field_to_ch,
-    )
+    import pyarrow as pa
+
+    from tensorbase_spark.sources.batches import arrow_schema, result_batches
+    from tensorbase_spark.sources.chnative import NativeClient, spark_field_to_ch
 
     hostport, _, db = addr.split("://", 1)[1].partition("/")
     host, _, port = hostport.partition(":")
     qualified = f"{db}.{table}" if db else table
     fields = df.schema.fields
     ch_types = [spark_field_to_ch(f) for f in fields]
-    rows = df.collect()
-    # _wire_value normalizes collected values for the codec — notably it
-    # attaches the OS zone to Spark's local-naive datetimes so the
-    # naive==UTC wire convention cannot shift the instant (chnative.py)
+    # one block of Arrow columns: the codec encodes timestamps from their
+    # instants, so no zone handling is needed here
+    result = pa.Table.from_batches(
+        list(result_batches(df)), arrow_schema(df.schema, df.sparkSession)
+    ).combine_chunks()
     cols = [
-        (f.name, t, [_wire_value(_strip_nullable(t)[0], r[i]) for r in rows])
+        (f.name, t, result.column(i).combine_chunks())
         for i, (f, t) in enumerate(zip(fields, ch_types))
     ]
     with NativeClient(
         host=host or "127.0.0.1", port=int(port or 9000), compression=True
     ) as c:
         c.insert(qualified, cols)
-    return len(rows)
+    return result.num_rows
 
 
 def remote_insert_mysql(addr: str, table: str, df: DataFrame) -> int:

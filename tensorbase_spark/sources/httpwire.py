@@ -47,10 +47,10 @@ Surface (mirrors the public upstream-CH HTTP semantics):
   Summary, Server-Display-Name) and exception mapping to HTTP statuses
   with ``X-ClickHouse-Exception-Code`` + a ``Code: N. DB::Exception:``
   body, per the public interface;
-* SELECT results stream out CHUNKED — rows leave via
-  ``toLocalIterator()`` in bounded bites, so a result never needs to fit
-  on the driver heap; the query itself still runs fully distributed (the
-  HTTP endpoint is only the collect boundary).
+* SELECT results stream out CHUNKED — one chunk per Arrow batch of
+  ``batches.result_batches`` (one Spark partition in flight), so a result
+  never needs to fit on the driver heap; the query itself still runs
+  fully distributed (the HTTP endpoint is only the collect boundary).
 
 Authentication is accept-all, matching the reference's native front
 door (its ``on_auth`` accepts unconditionally).
@@ -74,6 +74,10 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any, Iterable, Iterator
 from urllib.parse import parse_qs, quote, urlsplit
 
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from tensorbase_spark.sources import batches
 from tensorbase_spark.sources.chnative import (
     Reader,
     compress_frame,
@@ -301,21 +305,12 @@ def encode_rows(
         return
     if fmt.startswith("TabSeparated"):
         raw = fmt == "TabSeparatedRaw"
-        if fmt == "TabSeparatedWithNames":
-            yield ("\t".join(tsv_escape(n) for n in names) + "\n").encode()
-        elif fmt == "TabSeparatedWithNamesAndTypes":
-            yield ("\t".join(tsv_escape(n) for n in names) + "\n").encode()
-            yield ("\t".join(ch_types) + "\n").encode()
+        yield from _text_header(fmt, names, ch_types)
         for r in rows:
             yield ("\t".join(_tsv_field(v, raw) for v in r) + "\n").encode()
         return
     if fmt.startswith("CSV"):
-        if fmt in ("CSVWithNames", "CSVWithNamesAndTypes"):
-            yield (",".join('"%s"' % n.replace('"', '""') for n in names)
-                   + "\n").encode()
-        if fmt == "CSVWithNamesAndTypes":
-            yield (",".join('"%s"' % t.replace('"', '""') for t in ch_types)
-                   + "\n").encode()
+        yield from _text_header(fmt, names, ch_types)
         for r in rows:
             yield (",".join(_csv_field(v) for v in r) + "\n").encode()
         return
@@ -359,6 +354,154 @@ def encode_rows(
         yield from _encode_arrow(fmt, names, ch_types, rows)
         return
     raise ValueError(f"unknown FORMAT {fmt!r}")
+
+
+def _text_header(fmt: str, names: list[str], ch_types: list[str]) -> list[bytes]:
+    """Name / type lines of the TSV and CSV families."""
+    out = []
+    if fmt.startswith("TabSeparated"):
+        if fmt in ("TabSeparatedWithNames", "TabSeparatedWithNamesAndTypes"):
+            out.append(("\t".join(tsv_escape(n) for n in names) + "\n").encode())
+        if fmt == "TabSeparatedWithNamesAndTypes":
+            out.append(("\t".join(ch_types) + "\n").encode())
+        return out
+    if fmt in ("CSVWithNames", "CSVWithNamesAndTypes"):
+        out.append((",".join('"%s"' % n.replace('"', '""') for n in names)
+                    + "\n").encode())
+    if fmt == "CSVWithNamesAndTypes":
+        out.append((",".join('"%s"' % t.replace('"', '""') for t in ch_types)
+                    + "\n").encode())
+    return out
+
+
+# ---------------------------------------------------------------------------
+# the result path: Arrow batches in, one chunk per batch out
+# ---------------------------------------------------------------------------
+
+
+def encode_batches(
+    fmt: str,
+    names: list[str],
+    ch_types: list[str],
+    fields: list,
+    batch_iter: Iterable,
+    quote64: bool = True,
+) -> Iterator[bytes]:
+    """Encode Arrow result batches (Spark ``fields``) as FORMAT ``fmt``.
+    The TSV and CSV families are built column by column, one chunk per
+    batch, byte-identical to ``encode_rows`` over the rows a Spark
+    ``collect()`` returns; Native leaves as blocks of the batch columns;
+    the other formats go through ``encode_rows`` on each batch's Python
+    values."""
+    if fmt == "Null":
+        for _ in batch_iter:
+            pass
+        return
+    if fmt.startswith(("TabSeparated", "CSV")):
+        yield from _text_header(fmt, names, ch_types)
+        for b in batch_iter:
+            if b.num_rows:
+                yield _text_lines(fmt, fields, b)
+        return
+    if fmt == "Native":
+        yield from _native_blocks(names, ch_types, batch_iter)
+        return
+    yield from encode_rows(
+        fmt, names, ch_types, _batch_rows(fields, batch_iter), quote64=quote64)
+
+
+def _batch_rows(fields, batch_iter) -> Iterator[tuple]:
+    for b in batch_iter:
+        yield from zip(*[
+            batches.py_values(c, f.dataType) for c, f in zip(b.columns, fields)
+        ])
+
+
+def _text_lines(fmt: str, fields, batch) -> bytes:
+    if fmt.startswith("CSV"):
+        cols = [_csv_text(c, f.dataType) for c, f in zip(batch.columns, fields)]
+        sep = ","
+    else:
+        raw = fmt == "TabSeparatedRaw"
+        cols = [_tsv_text(c, f.dataType, raw)
+                for c, f in zip(batch.columns, fields)]
+        sep = "\t"
+    cols = [pc.fill_null(c, "\\N") for c in cols]
+    lines = pc.binary_join_element_wise(*cols, sep)
+    # line + "\n" + "": every line newline-terminated
+    lines = pc.binary_join_element_wise(lines, pa.scalar(""), "\n")
+    return batches.joined_bytes(batches.as_binary(lines))
+
+
+def _plain_column(arr, dt):
+    """``_plain_text`` of a column, vectorized; None for the types it
+    leaves to the per-value path."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        return pc.cast(arr, pa.string())
+    if isinstance(dt, T.BooleanType):
+        return pc.if_else(arr, pa.scalar("true"), pa.scalar("false"))
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        return batches.float_text(arr, _fmt_float, keep_point=False)
+    if isinstance(dt, T.DecimalType) and dt.scale <= 6:
+        # below 7 decimal places Arrow's and Python's notation agree
+        return pc.cast(arr, pa.string())
+    if isinstance(dt, T.DateType):
+        return pc.cast(arr, pa.string())
+    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+        wall = batches.local_wall_us(arr)
+        if wall is not None and (
+                not len(wall) or wall.min() >= batches.MIN_PADDED_YEAR_US):
+            return pc.if_else(pc.is_null(arr), pa.scalar(None, pa.string()),
+                              batches.seconds_text(wall))
+    return None
+
+
+def _tsv_text(arr, dt, raw: bool):
+    """``_tsv_field`` of a column (NULLs stay NULL)."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.StringType):
+        if not raw:
+            for ch, rep in _TSV_ESC.items():  # backslash first
+                arr = pc.replace_substring(arr, ch, rep)
+        return arr
+    text = _plain_column(arr, dt)
+    if text is None:
+        text = batches.text_with(arr, dt, lambda v: _tsv_field(v, raw))
+    return text
+
+
+def _csv_text(arr, dt):
+    """``_csv_field`` of a column (NULLs stay NULL)."""
+    from pyspark.sql import types as T
+
+    text = arr if isinstance(dt, T.StringType) else _plain_column(arr, dt)
+    if text is None:
+        return batches.text_with(arr, dt, _csv_field)
+    if isinstance(dt, (T.StringType, T.DateType, T.TimestampType,
+                       T.TimestampNTZType)):
+        text = pc.binary_join_element_wise(
+            pa.scalar('"'), pc.replace_substring(text, '"', '""'),
+            pa.scalar('"'), "")
+    return text
+
+
+def _native_blocks(names, ch_types, batch_iter) -> Iterator[bytes]:
+    from tensorbase_spark.sources.chnative import Block, batches_to_blocks
+
+    # the block codec speaks UInt8 for booleans (Bool is the TEXT-format
+    # spelling; the native wire carries u8, like chnative's own mapping)
+    ch_types = [re.sub(r"\bBool\b", "UInt8", t) for t in ch_types]
+    any_out = False
+    for blk in batches_to_blocks(names, ch_types, batch_iter):
+        any_out = True
+        yield blk.encode_body()
+    if not any_out:
+        # zero-row structure block when the result is empty (CH's shape)
+        yield Block([(n, t, []) for n, t in zip(names, ch_types)],
+                    nrows=0, bucket=0).encode_body()
 
 
 def _encode_json_envelope(fmt, names, ch_types, rows, quote64):
@@ -442,22 +585,28 @@ def _encode_pretty(fmt: str, names: list[str], rows: Iterable[tuple]) -> bytes:
 NATIVE_BLOCK_ROWS = 8192
 
 
+def _native_value(v: Any) -> Any:
+    """A row value for the block codec: a naive datetime is OS-local wall
+    time here, as in the text formats, so attach that zone (the codec
+    reads naive values as UTC)."""
+    if isinstance(v, _dt.datetime) and v.tzinfo is None:
+        return v.astimezone()
+    if isinstance(v, list):
+        return [_native_value(x) for x in v]
+    return v
+
+
 def _encode_native(names, ch_types, rows):
-    from tensorbase_spark.sources.chnative import (
-        Block,
-        _strip_nullable,
-        _wire_value,
-    )
+    from tensorbase_spark.sources.chnative import Block
 
     # the block codec speaks UInt8 for booleans (Bool is the TEXT-format
     # spelling; the native wire carries u8, like chnative's own mapping)
     ch_types = [re.sub(r"\bBool\b", "UInt8", t) for t in ch_types]
-    bases = [_strip_nullable(t)[0] for t in ch_types]
 
     def _flush(batch):
         cols = [
-            (n, t, [_wire_value(b, r[j]) for r in batch])
-            for j, (n, t, b) in enumerate(zip(names, ch_types, bases))
+            (n, t, [_native_value(r[j]) for r in batch])
+            for j, (n, t) in enumerate(zip(names, ch_types))
         ]
         return Block(cols, nrows=len(batch), bucket=0).encode_body()
 
@@ -1587,26 +1736,22 @@ class _HttpHandler(BaseHTTPRequestHandler):
         fields = df.schema.fields
         names = [f.name for f in fields]
         ch_types = [_ch_type_or_string(f) for f in fields]
+        eng = self.server.engine  # type: ignore[attr-defined]
         if eager_rows is not None:
-            rows: Iterable[tuple] = eager_rows
+            source: Iterable = [
+                batches.local_batch(eager_rows, df.schema, eng.spark)]
         else:
-            # kill poll every few thousand rows via the shared engine
-            # helper (explicit query_id: the first chunk may be pulled
-            # on the progress helper thread, which has no thread-local
-            # binding) — _stream's mid-stream handler appends CH's
-            # exception text and closes (VERDICT r11 #6, HTTP half).
-            # toLocalIterator is called EAGERLY (like the genexp it
-            # replaces): prefetch submits the first job here, so an
-            # immediate failure (timeout, analysis) surfaces BEFORE the
-            # 200 status line goes out
-            eng = self.server.engine  # type: ignore[attr-defined]
-            rows = (
-                tuple(r) for r in eng.kill_checked(
-                    df.toLocalIterator(prefetchPartitions=True),
-                    qid=one.get("query_id"),
-                )
-            )
-        chunks = encode_rows(fmt, names, ch_types, rows, quote64=quote64)
+            # kill poll between batches via the shared engine helper
+            # (explicit query_id: the first chunk may be pulled on the
+            # progress helper thread, which has no thread-local binding)
+            # — _stream's mid-stream handler appends CH's exception text
+            # and closes (VERDICT r11 #6, HTTP half).  result_batches
+            # plans EAGERLY, so an immediate failure (timeout, analysis)
+            # surfaces BEFORE the 200 status line goes out
+            source = eng.kill_checked(
+                batches.result_batches(df), qid=one.get("query_id"), every=1)
+        chunks = encode_batches(
+            fmt, names, ch_types, fields, source, quote64=quote64)
         self._stream(one, fmt, chunks, head_only=head_only)
 
     # WithNames formats re-expressed headless for batches after the first
@@ -1963,7 +2108,14 @@ class _HttpHandler(BaseHTTPRequestHandler):
         if head_only:
             return
         chunks = _chain_chunks(first_chunks, chunks)
+        try:
+            self._send_chunks(chunks, use_gzip, use_lz4)
+        finally:
+            # an abandoned result (client gone, error) stops the
+            # JVM-side serving of the rest now, not at garbage collection
+            chunks.close()
 
+    def _send_chunks(self, chunks, use_gzip: bool, use_lz4: bool):
         def _chunk(b: bytes):
             if b:
                 self.wfile.write(("%x\r\n" % len(b)).encode() + b + b"\r\n")

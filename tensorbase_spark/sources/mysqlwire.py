@@ -31,8 +31,9 @@ Protocol scope (matches the reference server's reachable surface):
   0xFB NULLs (encode.rs), EOF; errors as ERR packets with the
   errorcodes.rs code + sqlstate.
 
-Scale note: the server streams rows out via ``toLocalIterator()`` in
-partition-sized bites, so a SELECT result never needs to fit on the
+Scale note: the server streams rows out a batch at a time
+(``batches.result_batches``, one Spark partition in flight, one socket
+write per Arrow batch), so a SELECT result never needs to fit on the
 driver heap all at once; the query itself still runs fully distributed —
 the wire endpoint is only the collect boundary, same as the reference's
 single-node resultset writer.
@@ -49,6 +50,12 @@ import struct
 import threading
 from decimal import Decimal
 from typing import Any, Iterable
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from tensorbase_spark.sources import batches
 
 # ---------------------------------------------------------------------------
 # constants (myc::constants — public protocol numbers)
@@ -173,16 +180,39 @@ class PacketIO:
         self.wfile = wfile
         self.seq = 0
 
-    def send(self, payload: bytes) -> None:
+    def frame(self, payload: bytes) -> bytes:
+        """The packet(s) carrying ``payload``; advances the sequence id."""
+        out = bytearray()
         view = memoryview(payload)
         while True:
             chunk = view[:MAX_PAYLOAD]
-            header = len(chunk).to_bytes(3, "little") + bytes([self.seq & 0xFF])
-            self.wfile.write(header + bytes(chunk))
+            out += len(chunk).to_bytes(3, "little") + bytes([self.seq & 0xFF])
+            out += chunk
             self.seq = (self.seq + 1) & 0xFF
             view = view[MAX_PAYLOAD:]
             if len(chunk) < MAX_PAYLOAD:
-                break
+                return bytes(out)
+
+    def send(self, payload: bytes) -> None:
+        self.wfile.write(self.frame(payload))
+        self.wfile.flush()
+
+    def send_rows(self, payloads: pa.Array) -> None:
+        """One packet per payload of a binary column, in ONE socket write:
+        the 4-byte headers are built as a column and joined to the
+        payloads."""
+        n = len(payloads)
+        lengths = batches.value_lengths(payloads)
+        if n and lengths.max() >= MAX_PAYLOAD:  # split packets: rare
+            data = b"".join(self.frame(p) for p in payloads.to_pylist())
+        else:
+            head = np.empty((n, 4), dtype=np.uint8)
+            head[:, :3] = lengths.astype("<u4").view(np.uint8).reshape(n, 4)[:, :3]
+            head[:, 3] = (self.seq + np.arange(n)) & 0xFF
+            self.seq = (self.seq + n) & 0xFF
+            data = batches.joined_bytes(batches.concat([
+                batches.binary_from_matrix(head, np.full(n, 4)), payloads]))
+        self.wfile.write(data)
         self.wfile.flush()
 
     def recv(self) -> bytes | None:
@@ -287,6 +317,11 @@ def encode_text_value(out: bytearray, v: Any) -> None:
     if v is None:
         out.append(0xFB)  # encode.rs:47
         return
+    write_lenenc_bytes(out, text_bytes(v))
+
+
+def text_bytes(v: Any) -> bytes:
+    """Text-protocol bytes of one non-NULL value."""
     if isinstance(v, bool):
         b = b"1" if v else b"0"
     elif isinstance(v, (int, Decimal)):
@@ -315,7 +350,7 @@ def encode_text_value(out: bytearray, v: Any) -> None:
         b = repr(list(v)).encode()
     else:
         b = str(v).encode()
-    write_lenenc_bytes(out, b)
+    return b
 
 
 def spark_type_to_mysql(dt) -> tuple[int, int]:
@@ -434,6 +469,181 @@ def decode_bin_value(buf: bytes, pos: int, coltype: int) -> tuple[Any, int]:
     if coltype == MYSQL_TYPE_DECIMAL:
         return Decimal(b.decode()), pos
     return b.decode("utf-8", "replace"), pos
+
+
+# ---------------------------------------------------------------------------
+# result rows from Arrow batches, column at a time — byte-identical to
+# encode_text_value / encode_bin_value over the rows a Spark collect()
+# returns; the per-value encoders stay the fallback for rare types
+# ---------------------------------------------------------------------------
+
+
+def _lenenc_prefixes(lengths: np.ndarray, null: np.ndarray) -> pa.Array:
+    """Column of lenenc length prefixes (0xFB for NULL cells)."""
+    n = len(lengths)
+    mat = np.zeros((n, 9), dtype=np.uint8)
+    counts = np.ones(n, dtype=np.int64)
+    mat[:, 0] = np.where(lengths < 0xFB, lengths, 0)
+    le = lengths.astype("<u8").view(np.uint8).reshape(n, 8)
+    for lo, hi, marker, width in ((0xFB, 0xFFFF, 0xFC, 2),
+                                  (0x10000, 0xFFFFFF, 0xFD, 3),
+                                  (0x1000000, None, 0xFE, 8)):
+        m = (lengths >= lo) & (True if hi is None else lengths <= hi)
+        if m.any():
+            mat[m, 0] = marker
+            mat[m, 1:1 + width] = le[m, :width]
+            counts[m] = 1 + width
+    mat[null, 0] = 0xFB
+    counts[null] = 1
+    return batches.binary_from_matrix(mat, counts)
+
+
+def _lenenc_cells(text: pa.Array) -> pa.Array:
+    """Non-NULL binary column: each value lenenc-prefixed, NULL -> 0xFB."""
+    data = batches.as_binary(text)
+    null = pc.is_null(text).to_numpy(zero_copy_only=False)
+    return batches.concat(
+        [_lenenc_prefixes(batches.value_lengths(data), null), data])
+
+
+def _datetime_text(arr: pa.Array):
+    """``YYYY-MM-DD HH:MM:SS[.ffffff]`` of the local wall time, or None
+    when the local zone is not one Arrow knows."""
+    wall = batches.local_wall_us(arr)
+    if wall is None:
+        return None
+    micro = wall % 1_000_000
+    frac = pc.if_else(
+        pa.array(micro != 0),
+        pc.binary_join_element_wise(
+            pa.scalar("."),
+            pc.utf8_lpad(pc.cast(pa.array(micro), pa.string()), 6, "0"), ""),
+        pa.scalar(""))
+    text = pc.binary_join_element_wise(batches.seconds_text(wall), frac, "")
+    return pc.if_else(pc.is_null(arr), pa.scalar(None, pa.string()), text)
+
+
+def _text_column(arr: pa.Array, dt):
+    """``text_bytes`` of each value (NULLs stay NULL)."""
+    from pyspark.sql import types as T
+
+    text = None
+    if isinstance(dt, (T.StringType, T.BinaryType)):
+        text = arr
+    elif isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        text = pc.cast(arr, pa.string())
+    elif isinstance(dt, T.BooleanType):
+        text = pc.if_else(arr, pa.scalar("1"), pa.scalar("0"))
+    elif isinstance(dt, (T.FloatType, T.DoubleType)):
+        text = batches.float_text(arr, repr, keep_point=True)
+    elif isinstance(dt, T.DecimalType) and dt.scale <= 6:
+        # below 7 decimal places Arrow's and Python's notation agree
+        text = pc.cast(arr, pa.string())
+    elif isinstance(dt, T.DateType):
+        text = pc.cast(arr, pa.string())
+    elif isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+        text = _datetime_text(arr)
+    if text is None:
+        text = pa.array([None if v is None else text_bytes(v)
+                         for v in batches.py_values(arr, dt)], pa.binary())
+    return text
+
+
+_BIN_FIXED = {
+    MYSQL_TYPE_TINY: "<i1", MYSQL_TYPE_SHORT: "<i2", MYSQL_TYPE_YEAR: "<i2",
+    MYSQL_TYPE_LONG: "<i4", MYSQL_TYPE_INT24: "<i4",
+    MYSQL_TYPE_FLOAT: "<f4", MYSQL_TYPE_DOUBLE: "<f8",
+}
+
+
+def _bin_cells(arr: pa.Array, dt, coltype: int) -> pa.Array:
+    """``encode_bin_value`` of each value as a non-NULL binary column
+    (b"" for NULL: those live in the row's null bitmap)."""
+    from pyspark.sql import types as T
+
+    n = len(arr)
+    valid = ~pc.is_null(arr).to_numpy(zero_copy_only=False)
+    mat = width = None
+    if coltype in _BIN_FIXED:
+        if pa.types.is_boolean(arr.type):
+            arr = arr.cast(pa.uint8())
+        v = arr.fill_null(0).to_numpy(zero_copy_only=False).astype(
+            _BIN_FIXED[coltype])
+        mat = v.view(np.uint8).reshape(n, v.itemsize)
+        width = np.where(valid, v.itemsize, 0)
+    elif coltype == MYSQL_TYPE_LONGLONG and pa.types.is_decimal(arr.type):
+        # decimal(20,0), the engine's UInt64 carrier: the low 64 bits are
+        # the '<q' / '<Q' bytes of every value that fits one of them
+        lo, hi = batches.decimal_words(arr)
+        fits = (hi == (lo >> 63)) | ((hi == 0) & (lo < 0))
+        if (valid & ~fits).any():
+            raise ValueError("UInt64 value out of range")
+        mat = lo.astype("<i8").view(np.uint8).reshape(n, 8)
+        width = np.where(valid, 8, 0)
+    elif coltype == MYSQL_TYPE_LONGLONG:
+        v = arr.fill_null(0).to_numpy(zero_copy_only=False).astype("<i8")
+        mat = v.view(np.uint8).reshape(n, 8)
+        width = np.where(valid, 8, 0)
+    elif coltype == MYSQL_TYPE_DATE:
+        y, m, d = batches.date_parts(arr.cast(pa.int32()).fill_null(0).to_numpy())
+        mat = np.empty((n, 5), dtype=np.uint8)
+        mat[:, 0] = 4
+        mat[:, 1:3] = y.astype("<u2").view(np.uint8).reshape(n, 2)
+        mat[:, 3] = m
+        mat[:, 4] = d
+        width = np.where(valid, 5, 0)
+    elif coltype in (MYSQL_TYPE_DATETIME, MYSQL_TYPE_TIMESTAMP):
+        wall = batches.local_wall_us(arr)
+        if wall is not None:
+            secs, us = np.divmod(wall, 1_000_000)
+            y, m, d = batches.date_parts(secs // 86400)
+            sod = secs % 86400
+            mat = np.empty((n, 12), dtype=np.uint8)
+            mat[:, 0] = np.where(us != 0, 11, 7)
+            mat[:, 1:3] = y.astype("<u2").view(np.uint8).reshape(n, 2)
+            mat[:, 3] = m
+            mat[:, 4] = d
+            mat[:, 5] = sod // 3600
+            mat[:, 6] = sod // 60 % 60
+            mat[:, 7] = sod % 60
+            mat[:, 8:12] = us.astype("<u4").view(np.uint8).reshape(n, 4)
+            width = np.where(valid, np.where(us != 0, 12, 8), 0)
+    elif isinstance(dt, (T.StringType, T.BinaryType)) or (
+            isinstance(dt, T.DecimalType) and dt.scale <= 6):
+        text = arr if not pa.types.is_decimal(arr.type) else pc.cast(
+            arr, pa.string())
+        cells = _lenenc_cells(text)
+        return pc.if_else(pa.array(valid), cells, pa.scalar(b""))
+    if mat is not None:
+        return batches.binary_from_matrix(mat, width)
+    out = []
+    for v in batches.py_values(arr, dt):
+        cell = bytearray()
+        if v is not None:
+            encode_bin_value(cell, v, coltype)
+        out.append(bytes(cell))
+    return pa.array(out, pa.binary())
+
+
+def batch_row_payloads(batch: pa.RecordBatch, fields, coltypes,
+                       binary: bool) -> pa.Array:
+    """The row packet payloads of one batch as a binary column: text rows
+    (lenenc cells) or binary rows (0x00, null bitmap at bit offset 2,
+    non-NULL values)."""
+    if not binary:
+        return batches.concat([
+            _lenenc_cells(_text_column(c, f.dataType))
+            for c, f in zip(batch.columns, fields)])
+    n = batch.num_rows
+    # the 0x00 row header, then the bitmap (resultset.rs:219)
+    bitmap = np.zeros((n, 1 + (len(fields) + 7 + 2) // 8), dtype=np.uint8)
+    for i, c in enumerate(batch.columns):
+        null = pc.is_null(c).to_numpy(zero_copy_only=False)
+        bitmap[:, 1 + (i + 2) // 8] |= null.astype(np.uint8) << ((i + 2) % 8)
+    return batches.concat(
+        [batches.binary_from_matrix(bitmap, np.full(n, bitmap.shape[1]))]
+        + [_bin_cells(c, f.dataType, t)
+           for c, f, t in zip(batch.columns, fields, coltypes)])
 
 
 def sql_literal(v: Any) -> str:
@@ -612,11 +822,16 @@ class _MyConn(socketserver.StreamRequestHandler):
             # lib.rs:661-680: answer @@max_allowed_packet, OK anything else
             var = q.split(b"@@", 1)[1].strip()
             if var == b"max_allowed_packet":
+                from pyspark.sql.types import LongType, StructField
+
                 self._send_resultset(
                     pio,
                     [("", "@@max_allowed_packet", MYSQL_TYPE_LONG, UNSIGNED_FLAG)],
-                    iter([(67108864,)]),
+                    [StructField("@@max_allowed_packet", LongType())],
+                    [pa.record_batch([pa.array([67108864], pa.int64())],
+                                     names=["@@max_allowed_packet"])],
                 )
+                pio.send(build_eof())
             else:
                 pio.send(build_ok())
             return
@@ -628,17 +843,13 @@ class _MyConn(socketserver.StreamRequestHandler):
         # streaming fetch — listable/killable from another connection
         with engine.track_query(text, interface="mysql"):
             df = engine.sql(text)
-            if df is None or not df.columns:
-                # DDL / INSERT / session command (mysql/mod.rs:110-134)
-                pio.send(build_ok())
-                return
-            cols = [
-                ("", f.name) + spark_type_to_mysql(f.dataType)
-                for f in df.schema.fields
-            ]
-            self._send_resultset(
-                pio, cols, (tuple(r) for r in df.toLocalIterator(prefetchPartitions=True))
-            )
+            # DDL / INSERT / session command answer OK (mysql/mod.rs:110-134)
+            rows = df is not None and bool(df.columns)
+            if rows:
+                self._send_df(pio, df)
+        # the final packet leaves once the query is off the processlist, so
+        # a client holding the whole answer never still finds it listed
+        pio.send(build_eof() if rows else build_ok())
 
     def _stmt_prepare(self, pio: PacketIO, sql: str) -> None:
         """COM_STMT_PREPARE_OK (writers.rs:93-120): stmt id, column count
@@ -713,29 +924,31 @@ class _MyConn(socketserver.StreamRequestHandler):
         bound = substitute_placeholders(st["sql"], params)
         with engine.track_query(bound, interface="mysql"):
             df = engine.sql(bound)
-            if df is None or not df.columns:
-                pio.send(build_ok())
-                return
-            cols = [
-                ("", f.name) + spark_type_to_mysql(f.dataType)
-                for f in df.schema.fields
-            ]
-            self._send_resultset(
-                pio, cols, (tuple(r) for r in df.toLocalIterator(prefetchPartitions=True)),
-                binary=True,
-            )
+            rows = df is not None and bool(df.columns)
+            if rows:
+                self._send_df(pio, df, binary=True)
+        pio.send(build_eof() if rows else build_ok())  # as in _query
+
+    def _send_df(self, pio: PacketIO, df, binary: bool = False) -> None:
+        fields = df.schema.fields
+        cols = [("", f.name) + spark_type_to_mysql(f.dataType) for f in fields]
+        self._send_resultset(
+            pio, cols, fields, batches.result_batches(df), binary=binary)
 
     def _send_resultset(
         self,
         pio: PacketIO,
         cols: list[tuple[str, str, int, int]],
-        rows: Iterable[tuple],
+        fields: list,
+        batch_iter: Iterable[pa.RecordBatch],
         binary: bool = False,
     ) -> None:
-        """resultset.rs:139-349 start/write_row/finish over the text
-        protocol: column count, definitions, EOF, rows, EOF.
+        """resultset.rs:139-349 start/write_row: column count,
+        definitions, EOF, rows; the caller sends the closing EOF.  Rows are
+        built a batch at a time (text or binary protocol) and leave in one
+        socket write per batch.
 
-        Polls the kill flag every few thousand rows (the shared
+        Polls the kill flag between batches (the shared
         engine.kill_checked helper): a KILL QUERY from another
         connection cancels the victim's Spark jobs, but between jobs
         (iterator prefetched) nothing would raise — same seam the
@@ -747,25 +960,17 @@ class _MyConn(socketserver.StreamRequestHandler):
         for table, name, ctype, flags in cols:
             pio.send(build_column_definition(table, name, ctype, flags))
         pio.send(build_eof())
-        bitmap_len = (len(cols) + 7 + 2) // 8  # resultset.rs:219
-        for row in engine.kill_checked(rows):
-            out = bytearray()
-            if binary:
-                # binary row: 0x00 header + null bitmap (offset 2) + values
-                out.append(0x00)
-                bitmap = bytearray(bitmap_len)
-                body = bytearray()
-                for i, v in enumerate(row):
-                    if v is None:
-                        bitmap[(i + 2) // 8] |= 1 << ((i + 2) % 8)
-                    else:
-                        encode_bin_value(body, v, cols[i][2])
-                out += bitmap + body
-            else:
-                for v in row:
-                    encode_text_value(out, v)
-            pio.send(bytes(out))
-        pio.send(build_eof())
+        coltypes = [c[2] for c in cols]
+        try:
+            for b in engine.kill_checked(batch_iter, every=1):
+                if b.num_rows:
+                    pio.send_rows(batch_row_payloads(b, fields, coltypes, binary))
+        finally:
+            # an abandoned result (client gone, KILL) stops the JVM-side
+            # serving of the rest now
+            close = getattr(batch_iter, "close", None)
+            if close is not None:
+                close()
 
 
 def parse_handshake_response(payload: bytes) -> dict:

@@ -37,12 +37,19 @@ def test_entry_queries_wrap_registry(spark):
     registry query at sf0.001 (compare_query for the oracle-backed set,
     count() for the rows-only set).  The entry contract itself — wrapper
     keys match the registry, wrappers apply tune_session and return the
-    underlying DataFrame — is fully exercised by a spot-build."""
+    underlying DataFrame — is exercised by a spot-build plus the
+    structural check that every wrapper is that one template."""
     from tensorbase_spark.queries import registry
 
     SF0001 = "/root/testdata/sf0.001"
     qs = entrymod.queries()
-    assert set(qs) == set(registry())
+    reg = registry()
+    assert set(qs) == set(reg)
+    # every wrapper is the SAME closure template bound to its own query's
+    # function, so the spot-build below speaks for all ~321 of them
+    assert len({w.__code__ for w in qs.values()}) == 1
+    for name, w in qs.items():
+        assert [c.cell_contents for c in w.__closure__] == [reg[name].fn], name
     for name in ("q1_pricing_summary", "dedup_exact", "events_sessionize"):
         df = qs[name](spark, SF0001)
         assert df.columns, f"{name} returned no columns"

@@ -141,6 +141,25 @@ def test_ann_parameter_auto_scaling():
     assert 8 <= auto_n_centroids(10_000_000, 1024) / auto_n_centroids(1_000_000, 1024) <= 12
 
 
+def test_brute_force_topk_keeps_string_ids(spark):
+    """Library callers' id type survives the top-k scan: string ids come
+    back as strings, with the same neighbours, scores and tie order as
+    the integer ids they spell (zero-padded, so both sort alike)."""
+    emb = spark.read.parquet(f"{SF0001}/embeddings.parquet")
+    q = emb.filter(F.col("vec_id") % 100 == 0)
+
+    def spelled(df):
+        return df.withColumn("vec_id", F.format_string("v%08d", "vec_id"))
+
+    want = similarity.brute_force_topk(emb, q, k=5)
+    got = similarity.brute_force_topk(spelled(emb), spelled(q), k=5)
+    assert dict(got.dtypes)["q_id"] == "string"
+    assert dict(got.dtypes)["c_id"] == "string"
+    assert sorted(tuple(r) for r in got.collect()) == sorted(
+        (f"v{r.q_id:08d}", f"v{r.c_id:08d}", *r[2:]) for r in want.collect()
+    )
+
+
 def test_ivf_recall_vs_brute_force(spark):
     emb = spark.read.parquet(f"{SF0001}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") % 100 == 0)
