@@ -13,6 +13,12 @@ MySQL doors encode these batches column by column (``chnative``,
 result (the jobless introspection answers) into one batch for the same
 encoders.
 
+The insert path runs the other way: each door decodes an INSERT block
+into Arrow columns and ``insert_table`` hands them to Spark as one Arrow
+table, a LocalRelation that the engine's guard and write read in the JVM
+without a Python worker.  ``from_values`` builds such a column from Python
+values for the row-shaped input formats.
+
 The rest of this module is the vector kit the door encoders share: the
 Python values a classic ``collect()`` would have produced for one column
 (the per-value fallback and test reference), OS-local wall clocks for
@@ -23,12 +29,15 @@ variable-width cells.
 from __future__ import annotations
 
 import os
+from decimal import ROUND_HALF_UP, Decimal
 from typing import Callable
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.serializers import read_int, write_int
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.util import _create_local_socket
 
 
@@ -128,6 +137,47 @@ def local_batch(rows: list, schema, spark) -> pa.RecordBatch:
         return pa.RecordBatch.from_pylist([], schema=target)
     table = LocalDataToArrowConversion.convert(list(rows), schema, False)
     return table.combine_chunks().to_batches()[0]
+
+
+# ---------------------------------------------------------------------------
+# the insert path: one door INSERT block enters Spark as one Arrow table
+# ---------------------------------------------------------------------------
+
+
+def insert_table(engine, name: str, columns: list[pa.Array], schema,
+                 subset: list[str] | None) -> int:
+    """Append one block of Arrow ``columns`` (of Spark ``schema``) to table
+    ``name`` through ``engine.insert_df``; returns its row count."""
+    for arr, f in zip(columns, schema.fields):
+        if not f.nullable and arr.null_count:
+            raise ValueError(f"field {f.name}: This field is not nullable, but got None")
+    table = pa.Table.from_arrays(columns, names=[f.name for f in schema.fields])
+    engine.insert_df(name, engine.spark.createDataFrame(table, schema), subset=subset)
+    return table.num_rows
+
+
+def from_values(values: list, data_type) -> pa.Array:
+    """Python values as the Arrow column of Spark ``data_type`` holding what
+    ``createDataFrame(rows, schema)`` stores for them: a naive datetime is
+    OS-local wall time (``TimestampType.toInternal``), a decimal rounds
+    half up to the type's scale and NaN is NULL, an integer out of the
+    type's range raises."""
+    if isinstance(data_type, (T.TimestampType, T.TimestampNTZType)):
+        us = [None if v is None else data_type.toInternal(v) for v in values]
+        tz = "UTC" if isinstance(data_type, T.TimestampType) else None
+        return pa.array(us, pa.int64()).cast(pa.timestamp("us", tz=tz))
+    if isinstance(data_type, T.DecimalType):
+        q = Decimal(1).scaleb(-data_type.scale)
+        values = [None if v is None or v.is_nan() else v.quantize(q, ROUND_HALF_UP)
+                  for v in values]
+    elif isinstance(data_type, T.ArrayType):
+        offsets = np.zeros(len(values) + 1, dtype=np.int32)
+        np.cumsum([0 if v is None else len(v) for v in values], out=offsets[1:])
+        flat = [x for v in values if v is not None for x in v]
+        return pa.ListArray.from_arrays(
+            pa.array(offsets), from_values(flat, data_type.elementType),
+            mask=pa.array([v is None for v in values], pa.bool_()))
+    return pa.array(values, to_arrow_type(data_type))
 
 
 # ---------------------------------------------------------------------------

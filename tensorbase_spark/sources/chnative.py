@@ -54,6 +54,7 @@ from typing import Any, Callable, Iterator
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark.sql import types as T
 
 from tensorbase_spark.sources import batches
 
@@ -153,6 +154,45 @@ class Reader:
 
     def read_varbytes(self) -> bytes:
         return self.read(self.read_varint())
+
+    def read_strings(self, n: int) -> pa.Array:
+        """``n`` varint-length-prefixed values as one binary array."""
+        if self._f is not None:
+            return pa.array([self.read_varbytes() for _ in range(n)], pa.binary())
+        buf, pos, end = self._buf, self._pos, len(self._buf)
+        starts, lengths = [0] * n, [0] * n
+        for i in range(n):
+            if pos >= end:
+                raise EOFError("wire format underrun")
+            b = buf[pos]
+            pos += 1
+            ln, shift = b & 0x7F, 7
+            while b & 0x80:
+                if pos >= end:
+                    raise EOFError("wire format underrun")
+                if shift > 63:
+                    raise ValueError("varint too long")
+                b = buf[pos]
+                pos += 1
+                ln |= (b & 0x7F) << shift
+                shift += 7
+            starts[i], lengths[i] = pos, ln
+            pos += ln
+        if pos > end:
+            raise EOFError("wire format underrun")
+        lens = np.array(lengths, dtype=np.int64)
+        offsets = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(lens, out=offsets[1:])
+        if offsets[-1] > 0x7FFFFFFF:
+            raise ValueError("string column larger than 2 GiB")
+        # value bytes back to back: each value's run of positions in buf
+        idx = np.repeat(np.array(starts, dtype=np.int64) - offsets[:-1], lens)
+        idx += np.arange(offsets[-1], dtype=np.int64)
+        data = np.frombuffer(buf, dtype=np.uint8)[idx]
+        self._pos = pos
+        return pa.Array.from_buffers(
+            pa.binary(), n,
+            [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)])
 
     def read_str(self) -> str:
         return self.read_varbytes().decode("utf-8")
@@ -666,27 +706,38 @@ def _encode_arrow(out: bytearray, ch_type: str, arr: pa.Array) -> None:
     raise ValueError(f"unsupported wire type {ch_type!r}")
 
 
-def decode_column(r: Reader, nrows: int) -> tuple[str, str, list]:
+def decode_column(
+    r: Reader, nrows: int, arrow: bool = False
+) -> tuple[str, str, list | pa.Array]:
+    """One column off the wire: its values as a list, or with ``arrow`` as
+    the Arrow array of its ingest type (``decode_arrow``)."""
     name = r.read_str()
     ch_type = r.read_str()
     if ch_type == "LowCardinality(String)":  # blocks.rs:480-534 (decode-only)
-        ver = r.read_u64le()
-        if ver != 1:
-            raise ValueError("unsupported LowCardinality dict version")
-        flags = r.read_u64le()
-        if (flags & 0x0100) or not (flags & 0x0200):
-            raise ValueError("unsupported LowCardinality serialization")
-        key_size = [1, 2, 4, 8][flags & 0x0F]
-        ndict = r.read_u64le()
-        dictionary = [r.read_varbytes().decode("utf-8") for _ in range(ndict)]
-        size = r.read_u64le()
-        if size != nrows:
-            raise ValueError("LowCardinality row count mismatch")
-        keys = struct.unpack(
-            f"<{nrows}{'BHIQ'[[1, 2, 4, 8].index(key_size)]}", r.read(nrows * key_size)
-        )
-        return name, "String", [dictionary[k] for k in keys]
+        dictionary, keys = _read_low_cardinality(r, nrows)
+        if arrow:
+            return name, "String", pa.array(dictionary, pa.string()).take(keys)
+        return name, "String", [dictionary[k] for k in keys.tolist()]
+    if arrow:
+        return name, ch_type, decode_arrow(r, ch_type, nrows)
     return name, ch_type, _decode_values(r, ch_type, nrows)
+
+
+def _read_low_cardinality(r: Reader, nrows: int) -> tuple[list[str], np.ndarray]:
+    """(dictionary, per-row keys) of a LowCardinality(String) column."""
+    ver = r.read_u64le()
+    if ver != 1:
+        raise ValueError("unsupported LowCardinality dict version")
+    flags = r.read_u64le()
+    if (flags & 0x0100) or not (flags & 0x0200):
+        raise ValueError("unsupported LowCardinality serialization")
+    key_size = [1, 2, 4, 8][flags & 0x0F]
+    ndict = r.read_u64le()
+    dictionary = [r.read_varbytes().decode("utf-8") for _ in range(ndict)]
+    size = r.read_u64le()
+    if size != nrows:
+        raise ValueError("LowCardinality row count mismatch")
+    return dictionary, np.frombuffer(r.read(nrows * key_size), f"<u{key_size}")
 
 
 def _decode_values(r: Reader, ch_type: str, nrows: int) -> list:
@@ -745,13 +796,115 @@ def _decode_values(r: Reader, ch_type: str, nrows: int) -> list:
 
 
 # ---------------------------------------------------------------------------
+# columnar decode (the INSERT path): a wire column straight into the Arrow
+# array of the Spark type it is ingested as — the mirror of _encode_arrow,
+# and value for value the list decode above (which the client keeps).
+# UInt widths widen to the next signed type and UInt64 becomes
+# decimal(20,0), as in the engine's storage (types.py); DateTime seconds
+# are UTC instants.
+# ---------------------------------------------------------------------------
+
+_WIDEN = {"UInt8": np.int16, "UInt16": np.int32, "UInt32": np.int64}
+_INGEST_SIMPLE = {
+    "Int8": T.ByteType(), "Int16": T.ShortType(),
+    "Int32": T.IntegerType(), "Int64": T.LongType(),
+    "UInt8": T.ShortType(), "UInt16": T.IntegerType(),
+    "UInt32": T.LongType(), "UInt64": T.DecimalType(20, 0),
+    "Float32": T.FloatType(), "Float64": T.DoubleType(),
+    "String": T.StringType(), "Date": T.DateType(),
+}
+
+
+def ingest_type(ch_type: str) -> T.DataType:
+    """The Spark type a wire column is ingested as."""
+    base, _ = _strip_nullable(ch_type)
+    if base in _INGEST_SIMPLE:
+        return _INGEST_SIMPLE[base]
+    if base.startswith("DateTime"):
+        return T.TimestampType()
+    if base.startswith("Decimal"):
+        return T.DecimalType(*_decimal_params(base))
+    if base.startswith("FixedString") or base == "UUID":
+        return T.StringType()
+    if base.startswith("Array("):
+        return T.ArrayType(ingest_type(base[6:-1]))
+    raise ValueError(f"no ingest mapping for {ch_type}")
+
+
+def decode_arrow(r: Reader, ch_type: str, nrows: int) -> pa.Array:
+    """The body of a ``ch_type`` wire column of ``nrows`` rows as an Arrow
+    array of ``ingest_type(ch_type)``; malformed data raises."""
+    base, nullable = _strip_nullable(ch_type)
+    if base.startswith("Array("):
+        ends = np.frombuffer(r.read(nrows * 8), "<u8")
+        if nrows and (ends[-1] > 0x7FFFFFFF
+                      or (np.diff(ends.astype(np.int64), prepend=0) < 0).any()):
+            raise ValueError(f"bad {base} offsets")
+        offsets = np.zeros(nrows + 1, dtype=np.int32)
+        offsets[1:] = ends
+        flat = decode_arrow(r, base[6:-1], int(offsets[-1]))
+        return pa.ListArray.from_arrays(pa.array(offsets), flat)
+    if base == "UUID":  # rare: the list decode's text
+        return pa.array(_decode_values(r, ch_type, nrows), pa.string())
+    null = np.frombuffer(r.read(nrows), np.uint8) != 0 if nullable else None
+    if base == "UInt64":
+        words = np.zeros((nrows, 2), dtype="<i8")
+        words[:, 0] = np.frombuffer(r.read(nrows * 8), "<i8")
+        arr = pa.Array.from_buffers(
+            pa.decimal128(20, 0), nrows, [None, pa.py_buffer(words)])
+    elif base in _NP_FIXED:
+        v = np.frombuffer(r.read(nrows * _FIXED[base][1]), _NP_FIXED[base])
+        arr = pa.array(v.astype(_WIDEN.get(base, v.dtype)))
+    elif base == "String":
+        arr = _utf8(r.read_strings(nrows))
+    elif base.startswith("FixedString"):
+        n = int(re.fullmatch(r"FixedString\((\d+)\)", base).group(1))
+        mat = np.frombuffer(r.read(nrows * n), np.uint8).reshape(nrows, n)
+        # rstrip(b"\x00"): up to the last non-NUL byte
+        nonzero = mat != 0
+        last = np.argmax(nonzero[:, ::-1], axis=1) if n else 0
+        lengths = np.where(nonzero.any(axis=1), n - last, 0)
+        arr = _utf8(batches.binary_from_matrix(mat, lengths))
+    elif base == "Date":
+        days = np.frombuffer(r.read(nrows * 2), "<u2").astype(np.int32)
+        arr = pa.array(days).view(pa.date32())
+    elif base.startswith("DateTime"):
+        secs = np.frombuffer(r.read(nrows * 4), "<u4").astype(np.int64)
+        arr = pa.array(secs * 1_000_000).view(pa.timestamp("us", tz="UTC"))
+    elif base.startswith("Decimal"):
+        p, s = _decimal_params(base)
+        if p > 18:
+            raise ValueError("Decimal precision > 18 unsupported on the wire")
+        raw = np.frombuffer(r.read(nrows * (4 if p <= 9 else 8)),
+                            "<i4" if p <= 9 else "<i8").astype(np.int64)
+        words = np.stack([raw, raw >> 63], axis=1)
+        arr = pa.Array.from_buffers(
+            pa.decimal128(p, s), nrows, [None, pa.py_buffer(words)])
+    else:
+        raise ValueError(f"unsupported wire type {ch_type!r}")
+    if null is not None and null.any():
+        arr = pc.if_else(pa.array(null), pa.scalar(None, arr.type), arr)
+    return arr
+
+
+def _utf8(arr: pa.Array) -> pa.Array:
+    """Binary values as strings; invalid UTF-8 decodes with U+FFFD
+    replacements, as the list decode's ``decode("utf-8", "replace")``."""
+    try:
+        return arr.cast(pa.string())
+    except pa.ArrowInvalid:
+        return pa.array([v.decode("utf-8", "replace") for v in arr.to_pylist()],
+                        pa.string())
+
+
+# ---------------------------------------------------------------------------
 # Block (blocks.rs:122-381)
 # ---------------------------------------------------------------------------
 
 
 class Block:
     """columns: list of (name, ch_type, values); values are a list, or a
-    pyarrow Array on the result path.  ``bucket`` mirrors the reference:
+    pyarrow Array on the result path and off the INSERT decode.  ``bucket`` mirrors the reference:
     -1 default, 0 for blocks built from data (blocks.rs:130-162)."""
 
     def __init__(
@@ -788,7 +941,7 @@ class Block:
         return bytes(out)
 
     @classmethod
-    def decode_body(cls, r: Reader) -> "Block":
+    def decode_body(cls, r: Reader, arrow: bool = False) -> "Block":
         r.read_varint()  # field 1
         overflow = r.read_u8() != 0
         r.read_varint()  # field 2
@@ -796,7 +949,7 @@ class Block:
         r.read_varint()  # terminator 0
         ncols = r.read_varint()
         nrows = r.read_varint()
-        cols = [decode_column(r, nrows) for _ in range(ncols)]
+        cols = [decode_column(r, nrows, arrow) for _ in range(ncols)]
         return cls(cols, nrows=nrows, overflow=overflow, bucket=bucket)
 
     def header(self) -> "Block":
@@ -837,12 +990,19 @@ def write_data_packet(
     out += compress_frame(body) if compressed else body
 
 
-def read_data_packet_body(r: Reader, compressed: bool) -> Block:
-    """After the packet-id varint: tmp-name + (frame|raw block)."""
+def read_data_packet_body(r: Reader, compressed: bool, arrow: bool = False) -> Block:
+    """After the packet-id varint: tmp-name + (frame|raw block); with
+    ``arrow`` the columns decode to Arrow arrays (``decode_arrow``)."""
     r.read_str()  # temporary table name
-    if compressed:
-        return Block.decode_body(Reader(read_frame(r)))
-    return Block.decode_body(r)
+    if not compressed:
+        return Block.decode_body(r, arrow)
+    body = Reader(read_frame(r))
+    try:
+        return Block.decode_body(body, arrow)
+    except EOFError:
+        # the frame was read whole: a short block inside it is malformed
+        # data, not a closed connection
+        raise ValueError("block truncated inside its compressed frame")
 
 
 # ---------------------------------------------------------------------------
@@ -954,6 +1114,31 @@ _INSERT_WIRE_RE = re.compile(
     r"(?:\(\s*(?P<cols>[\w\s,]+?)\s*\)\s*)?"
     r"(?:values|format\s+\w+)?\s*$"
 )
+
+
+def _check_structure(blk: Block, declared: list[tuple[str, str]]) -> None:
+    """A data block must carry the header's columns: as many, each of the
+    same kind (number, string, date, timestamp, or an array of one) as its
+    header column; within a kind the engine's cast converts, as CH
+    converts a block to its header.  A header type with no ingest mapping
+    (Enum, Nested, ...) accepts any column."""
+    if len(blk.columns) != len(declared):
+        raise _WireError(
+            7, f"block has {len(blk.columns)} columns, header {len(declared)}")
+    for (name, t, _), (_n, want) in zip(blk.columns, declared):
+        try:
+            want_kind = _kind(ingest_type(want))
+        except ValueError:
+            continue
+        if _kind(ingest_type(t)) != want_kind:
+            raise _WireError(
+                53, f"column {name}: type {t} does not match header type {want}")
+
+
+def _kind(dt: T.DataType):
+    if isinstance(dt, T.ArrayType):
+        return ("array", _kind(dt.elementType))
+    return "number" if isinstance(dt, T.NumericType) else dt.typeName()
 
 
 class _Conn(socketserver.StreamRequestHandler):
@@ -1221,19 +1406,16 @@ class _Conn(socketserver.StreamRequestHandler):
         # first empty block = external-tables EOD (DataEODPInsertQuery),
         # then data blocks until the closing empty block (DataPacket)
         self._drain_external_tables(r)
-        got_any = False
         while True:
             engine.check_not_killed()  # kill aborts between wire blocks
             code = r.read_varint()
             if code != CLIENT_DATA:
                 raise _WireError(104, f"expected data packet, got {code}")
-            blk = read_data_packet_body(r, self._compressed)
+            blk = read_data_packet_body(r, self._compressed, arrow=True)
             if blk.is_empty:
-                break
-            got_any = True
+                break  # a zero-row insert is legal
+            _check_structure(blk, declared)
             self._write_block(engine, qualified, blk, subset)
-        if not got_any:
-            pass  # zero-row insert is legal
         self._send(self._eos())
 
     def _drain_external_tables(self, r: Reader) -> None:
@@ -1248,61 +1430,12 @@ class _Conn(socketserver.StreamRequestHandler):
             raise _WireError(104, f"expected data packet, got {code}")
 
     def _write_block(self, engine, qualified: str, blk: Block, subset) -> None:
-        names = [c[0] for c in blk.columns]
-        rows = list(zip(*[c[2] for c in blk.columns])) if blk.columns else []
-        from pyspark.sql import types as T
-
-        def _spark_type(ch: str):
-            base, _ = _strip_nullable(ch)
-            m = {
-                "Int8": T.ByteType(), "Int16": T.ShortType(),
-                "Int32": T.IntegerType(), "Int64": T.LongType(),
-                "UInt8": T.ShortType(), "UInt16": T.IntegerType(),
-                "UInt32": T.LongType(), "UInt64": T.DecimalType(20, 0),
-                "Float32": T.FloatType(), "Float64": T.DoubleType(),
-                "String": T.StringType(), "Date": T.DateType(),
-            }
-            if base in m:
-                return m[base]
-            if base.startswith("DateTime"):
-                return T.TimestampType()
-            if base.startswith("Decimal"):
-                p, s = _decimal_params(base)
-                return T.DecimalType(p, s)
-            if base.startswith("FixedString") or base == "UUID":
-                return T.StringType()
-            if base.startswith("Array("):
-                return T.ArrayType(_spark_type(base[6:-1]))
-            raise _WireError(29, f"no ingest mapping for {ch}")
-
         schema = T.StructType(
-            [T.StructField(n, _spark_type(t), True) for n, t, _ in blk.columns]
+            [T.StructField(n, ingest_type(t), True) for n, t, _ in blk.columns]
         )
-
-        def _conv(base: str, v):
-            if v is None:
-                return None
-            if base == "UInt64":
-                return Decimal(v)
-            if base.startswith("DateTime") and isinstance(v, datetime) and v.tzinfo is None:
-                # decode produces UTC-naive; pyspark's toInternal would
-                # re-interpret a naive value in OS-LOCAL time — make the
-                # instant explicit so non-UTC hosts don't shift it
-                return v.replace(tzinfo=timezone.utc)
-            if base.startswith("Array("):
-                inner, _ = _strip_nullable(base[6:-1])
-                return [_conv(inner, x) for x in v]
-            return v
-
-        conv_rows = [
-            tuple(
-                _conv(_strip_nullable(t)[0], v)
-                for (n, t, _), v in zip(blk.columns, row)
-            )
-            for row in rows
-        ]
-        src = engine.spark.createDataFrame(conv_rows, schema)
-        engine.insert_df(qualified, src, subset=names if subset else None)
+        batches.insert_table(
+            engine, qualified, [c[2] for c in blk.columns], schema,
+            subset=[c[0] for c in blk.columns] if subset else None)
 
     # -- plumbing -------------------------------------------------------------
 

@@ -76,6 +76,8 @@ from urllib.parse import parse_qs, quote, urlsplit
 
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from tensorbase_spark.sources import batches
 from tensorbase_spark.sources.chnative import (
@@ -436,8 +438,6 @@ def _text_lines(fmt: str, fields, batch) -> bytes:
 def _plain_column(arr, dt):
     """``_plain_text`` of a column, vectorized; None for the types it
     leaves to the per-value path."""
-    from pyspark.sql import types as T
-
     if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
         return pc.cast(arr, pa.string())
     if isinstance(dt, T.BooleanType):
@@ -460,8 +460,6 @@ def _plain_column(arr, dt):
 
 def _tsv_text(arr, dt, raw: bool):
     """``_tsv_field`` of a column (NULLs stay NULL)."""
-    from pyspark.sql import types as T
-
     if isinstance(dt, T.StringType):
         if not raw:
             for ch, rep in _TSV_ESC.items():  # backslash first
@@ -475,8 +473,6 @@ def _tsv_text(arr, dt, raw: bool):
 
 def _csv_text(arr, dt):
     """``_csv_field`` of a column (NULLs stay NULL)."""
-    from pyspark.sql import types as T
-
     text = arr if isinstance(dt, T.StringType) else _plain_column(arr, dt)
     if text is None:
         return batches.text_with(arr, dt, _csv_field)
@@ -730,23 +726,24 @@ def _encode_arrow(fmt, names, ch_types, rows):
     yield sink.getvalue()
 
 
-def decode_arrow_body(fmt: str, data: bytes):
-    """Arrow/ArrowStream/Parquet INSERT payload -> (names, rows of
-    plain-Python values)."""
-    import pyarrow as pa
-
+def decode_arrow_table(fmt: str, data: bytes) -> pa.Table:
+    """An Arrow/ArrowStream/Parquet payload as its Arrow table."""
     src = io.BytesIO(data)
     if fmt == "Parquet":
         import pyarrow.parquet as pq
 
-        table = pq.read_table(src)
-    elif fmt == "Arrow":
-        table = pa.ipc.open_file(src).read_all()
-    else:
-        table = pa.ipc.open_stream(src).read_all()
-    names = table.column_names
+        return pq.read_table(src)
+    if fmt == "Arrow":
+        return pa.ipc.open_file(src).read_all()
+    return pa.ipc.open_stream(src).read_all()
+
+
+def decode_arrow_body(fmt: str, data: bytes):
+    """Arrow/ArrowStream/Parquet payload -> (names, rows of plain-Python
+    values)."""
+    table = decode_arrow_table(fmt, data)
     rows = list(zip(*[c.to_pylist() for c in table.columns]))
-    return names, [list(r) for r in rows]
+    return table.column_names, [list(r) for r in rows]
 
 
 # ---------------------------------------------------------------------------
@@ -918,18 +915,14 @@ def decode_rowbinary_with_names_and_types(data: bytes):
 # ---------------------------------------------------------------------------
 
 def decode_body_rows(fmt: str, data: bytes) -> tuple[list, list | None]:
-    """INSERT payload -> (rows, col_names_from_data_or_None).  Text rows
-    carry strings (``None`` for NULL); JSON rows carry typed values."""
+    """Row-shaped INSERT payload -> (rows, col_names_from_data_or_None).
+    Text rows carry strings (``None`` for NULL); JSON and RowBinary rows
+    carry typed values.  Native and the Arrow formats decode to Arrow
+    columns instead (``chnative.decode_arrow``, ``decode_arrow_table``)."""
     fmt = canonical_format(fmt)
-    if fmt == "Native":
-        names, _types, rows = decode_native(data)
-        return [list(r) for r in rows], names
     if fmt == "RowBinaryWithNamesAndTypes":
         names, _types, rows = decode_rowbinary_with_names_and_types(data)
         return [list(r) for r in rows], names
-    if fmt in ("Arrow", "ArrowStream", "Parquet"):
-        names, rows = decode_arrow_body(fmt, data)
-        return rows, names
     text = data.decode()
     if fmt == "JSONEachRow":
         rows, names = [], None
@@ -981,6 +974,20 @@ def decode_body_rows(fmt: str, data: bytes) -> tuple[list, list | None]:
             rows.append(vals)
         return rows, names
     raise ValueError(f"INSERT FORMAT {fmt}: unsupported body format")
+
+
+def _conform(arr, data_type):
+    """A decoded column as the Arrow column of its target Spark type: as
+    is when the types agree, integers cast (out of range raises), and
+    anything else through ``_coerce`` per value, as the row path did."""
+    target = to_arrow_type(data_type)
+    if arr.type == target:
+        return arr
+    if pa.types.is_integer(arr.type) and pa.types.is_integer(target):
+        return arr.cast(target)
+    simple = data_type.simpleString()
+    return batches.from_values(
+        [_coerce(v, simple) for v in arr.to_pylist()], data_type)
 
 
 def _coerce(v: Any, simple: str) -> Any:
@@ -1815,6 +1822,15 @@ class _HttpHandler(BaseHTTPRequestHandler):
             while not r.at_end():
                 rows.append([_rb_decode_nullable(r, t) for t in types])
             return self._typed_insert(eng, name, cols, rows, None)
+        if fmt == "Native":
+            from tensorbase_spark.sources.chnative import Reader as _R
+
+            r = _R(data)
+            return self._insert_native_blocks(eng, name, cols, r, r.at_end)
+        if fmt in ("Arrow", "ArrowStream", "Parquet"):
+            table = decode_arrow_table(fmt, data)
+            target = self._insert_target(eng, name, cols, table.column_names)
+            return self._write(eng, target, self._conformed(target, table.columns))
         rows, data_names = decode_body_rows(fmt, data)
         return self._typed_insert(eng, name, cols, rows, data_names)
 
@@ -1861,10 +1877,8 @@ class _HttpHandler(BaseHTTPRequestHandler):
     def _insert_native_streaming(self, eng, name, cols,
                                  data0: bytes, stream) -> int:
         """FORMAT Native INSERT body decoded block by block off the
-        stream — groups of blocks are inserted once they reach the batch
-        row threshold, so the bulk CH interchange format also ingests in
+        stream, so the bulk CH interchange format also ingests in
         bounded memory (the line-format streaming counterpart)."""
-        from tensorbase_spark.sources.chnative import Block
         from tensorbase_spark.sources.chnative import Reader as _R
 
         class _StreamFile:
@@ -1898,42 +1912,54 @@ class _HttpHandler(BaseHTTPRequestHandler):
                 return out
 
         sf = _StreamFile(data0, stream)
-        r = _R(sf)
-        batch_rows = max(
-            1,
-            int(os.environ.get("TB_HTTP_INSERT_BATCH_BYTES", str(8 << 20)))
-            // 64,
-        )
-        written, names, pend = 0, None, []
-        while not sf.at_eof():
-            eng.check_not_killed()  # kill aborts between wire blocks
-            blk = Block.decode_body(r)
-            if names is None and blk.columns:
-                names = [c[0] for c in blk.columns]
-            if blk.nrows:
-                pend.extend(zip(*[c[2] for c in blk.columns]))
-            if len(pend) >= batch_rows:
-                written += self._typed_insert(
-                    eng, name, cols, [list(t) for t in pend], names)
-                pend = []
-        if pend:
-            written += self._typed_insert(
-                eng, name, cols, [list(t) for t in pend], names)
+        written = self._insert_native_blocks(eng, name, cols, _R(sf), sf.at_eof)
         srv = self.server
         srv.max_insert_buffer = max(
             getattr(srv, "max_insert_buffer", 0), sf.max_buffered)
         return written
 
-    def _typed_insert(self, eng, name: str, cols, rows, data_names) -> int:
+    def _insert_native_blocks(self, eng, name, cols, r, at_eof) -> int:
+        """Native blocks off ``r`` until ``at_eof()``, each decoded to
+        Arrow columns of the target types; pending blocks are inserted
+        together once their Arrow data reaches TB_HTTP_INSERT_BATCH_BYTES."""
+        from tensorbase_spark.sources.chnative import Block
+
+        batch_bytes = int(
+            os.environ.get("TB_HTTP_INSERT_BATCH_BYTES", str(8 << 20)))
+        written, names, target, pend, pend_bytes = 0, None, None, [], 0
+        while not at_eof():
+            eng.check_not_killed()  # kill aborts between wire blocks
+            blk = Block.decode_body(r, arrow=True)
+            if names is None and blk.columns:
+                names = [c[0] for c in blk.columns]
+                target = self._insert_target(eng, name, cols, names)
+            if blk.nrows and len(blk.columns) != len(names):
+                raise ValueError(
+                    f"Cannot parse input: INSERT into {name}: a Native block "
+                    f"has {len(blk.columns)} columns, the first {len(names)}")
+            if blk.nrows:
+                part = pa.Table.from_arrays(
+                    self._conformed(target, [c[2] for c in blk.columns]),
+                    names=[f.name for f in target[1]])
+                pend.append(part)
+                pend_bytes += part.nbytes
+            if pend_bytes >= batch_bytes:
+                written += self._write(eng, target, pa.concat_tables(pend).columns)
+                pend, pend_bytes = [], 0
+        if pend:
+            written += self._write(eng, target, pa.concat_tables(pend).columns)
+        return written
+
+    def _insert_target(self, eng, name: str, cols, data_names):
+        """(qualified name, target fields, data column of each target
+        field or None for all in order) of an INSERT."""
         qualified = eng._qualify(name)
         schema = eng.spark.table(qualified).schema
         target_cols = cols or data_names or [
             f.name for f in schema.fields if not f.name.startswith("__")
         ]
-        if data_names and cols:
-            # column list wins; reorder JSON fields to it
-            idx = [data_names.index(c) for c in cols]
-            rows = [[r[i] for i in idx] for r in rows]
+        # a column list wins over the data's own names: reorder to it
+        idx = [data_names.index(c) for c in cols] if data_names and cols else None
         by_name = {f.name: f for f in schema.fields}
         unknown = [c for c in target_cols if c not in by_name]
         if unknown:
@@ -1941,25 +1967,46 @@ class _HttpHandler(BaseHTTPRequestHandler):
                 f"INSERT into {name}: unknown column(s) {unknown} "
                 f"(table has {sorted(by_name)})"
             )
+        return qualified, [by_name[c] for c in target_cols], idx
+
+    def _typed_insert(self, eng, name: str, cols, rows, data_names) -> int:
+        """Insert the rows of a row-shaped format: each value through
+        ``_coerce``, then one Arrow column per target field."""
+        target = self._insert_target(eng, name, cols, data_names)
+        _q, fields, idx = target
+        if idx is not None:
+            rows = [[r[i] for i in idx] for r in rows]
         for i, r in enumerate(rows):
-            # zip() below would silently truncate a too-wide row and a
-            # too-narrow one would only fail later with an opaque
-            # createDataFrame error — CH rejects arity mismatches loudly
-            if len(r) != len(target_cols):
+            # a too-wide row would silently lose values and a too-narrow
+            # one fail with an opaque IndexError — CH rejects arity
+            # mismatches loudly
+            if len(r) != len(fields):
                 raise ValueError(
                     f"Cannot parse input: INSERT into {name} expects "
-                    f"{len(target_cols)} columns but row {i + 1} has "
+                    f"{len(fields)} columns but row {i + 1} has "
                     f"{len(r)}"
                 )
-        simples = [by_name[c].dataType.simpleString() for c in target_cols]
-        typed = [
-            tuple(_coerce(v, s) for v, s in zip(r, simples)) for r in rows
+        columns = [
+            batches.from_values(
+                [_coerce(r[j], f.dataType.simpleString()) for r in rows],
+                f.dataType)
+            for j, f in enumerate(fields)
         ]
-        from pyspark.sql import types as T
-        sub_schema = T.StructType([by_name[c] for c in target_cols])
-        src = eng.spark.createDataFrame(typed, schema=sub_schema)
-        eng.insert_df(qualified, src, subset=target_cols)
-        return len(typed)
+        return self._write(eng, target, columns)
+
+    def _conformed(self, target, columns: list) -> list:
+        """Decoded Arrow columns, ordered and typed as the target's."""
+        _q, fields, idx = target
+        if idx is not None:
+            columns = [columns[i] for i in idx]
+        return [_conform(c, f.dataType) for c, f in zip(columns, fields)]
+
+    def _write(self, eng, target, columns: list) -> int:
+        """Insert Arrow columns already in the target's order and types."""
+        qualified, fields, _idx = target
+        return batches.insert_table(
+            eng, qualified, columns, T.StructType(fields),
+            subset=[f.name for f in fields])
 
     # -- response writers ---------------------------------------------------
 

@@ -1173,6 +1173,79 @@ def test_kill_during_native_insert(engine):
         srv.server_close()
 
 
+def _malformed_insert_packet(case: str) -> bytes:
+    """One client data packet for table (a Int64, s String) that is bad in
+    the way ``case`` names."""
+    import struct
+
+    from tensorbase_spark.sources.chnative import (
+        CLIENT_DATA, LZ4_METHOD, Block, city_hash_128, compress_frame,
+        lz4_compress, write_str, write_varint)
+
+    cols = [("a", "Int64", [1, 2]), ("s", "String", ["x", "y"])]
+    if case == "column_count":
+        cols = cols[:1]
+    if case == "column_type":
+        cols = [("a", "String", ["1", "2"]), cols[1]]
+    body = Block(cols, bucket=0).encode_body()
+    if case == "truncated":  # a whole frame around a block cut short
+        frame = compress_frame(body[:-3])
+    elif case == "checksum":
+        frame = bytearray(compress_frame(body))
+        frame[3] ^= 0xFF
+    elif case == "lz4_size":  # the raw size lies, under a valid checksum
+        lz = lz4_compress(body)
+        payload = bytes([LZ4_METHOD]) + struct.pack("<II", 9 + len(lz), len(body) + 5) + lz
+        frame = struct.pack("<QQ", *city_hash_128(payload)) + payload
+    else:
+        frame = compress_frame(body)
+    out = bytearray()
+    write_varint(out, CLIENT_DATA)
+    write_str(out, "")
+    return bytes(out + frame)
+
+
+@pytest.mark.parametrize(
+    "case", ["truncated", "checksum", "lz4_size", "column_count", "column_type"])
+def test_malformed_insert_block_is_refused(engine, case):
+    """A malformed data packet in a native INSERT:
+    the door answers an Exception packet and keeps serving the
+    connection, the table stays as it was, the processlist drains and
+    the connection's thread ends when the client leaves."""
+    import threading
+    import time
+
+    from tensorbase_spark.sources.chnative import (
+        SERVER_DATA, SERVER_EXCEPTION, read_data_packet_body, serve_native)
+
+    srv, port = serve_native(engine)
+    baseline = threading.active_count()
+    try:
+        with NativeClient(port=port) as setup:
+            setup.execute("create table tmal (a Int64, s String)")
+            setup.insert("tmal", [("a", "Int64", [0]), ("s", "String", ["keep"])])
+        c = NativeClient(port=port)
+        c._send_query("INSERT INTO tmal (a, s) VALUES")
+        c._send_empty_block()  # external-tables EOD
+        assert c._r.read_varint() == SERVER_DATA
+        read_data_packet_body(c._r, True)  # header block
+        c._send(_malformed_insert_packet(case))
+        c._send_empty_block()
+        assert c._r.read_varint() == SERVER_EXCEPTION
+        c._read_exception()
+        assert c.ping()
+        c.close()
+        assert engine.sql("select a, s from tmal").collect() == [(0, "keep")]
+        assert wait_processlist_drained(engine) == 0
+        deadline = time.time() + 20
+        while threading.active_count() > baseline and time.time() < deadline:
+            time.sleep(0.1)
+        assert threading.active_count() <= baseline
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
 def test_processlist_and_kill_over_native(served):
     """A long scan over the NATIVE wire is listed in system.processes
     with interface='native' and KILL QUERY (matched on the query text)
