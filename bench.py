@@ -57,17 +57,11 @@ def main() -> int:
     # min-of-N also filters co-tenant CPU noise (measured: the same 1.2s
     # plan spiked to 30-100s under co-tenant bursts).
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    # Cold-path queries that train + encode + search in one shot are
-    # structurally noisier run-to-run (sim_pq_topk bounced 2.25→1.69→2.23 s
-    # across r3/r4/r5 with an unchanged plan); min-of-5 stabilizes their
-    # best so round deltas stop whipsawing.  Their steady-state indexed
-    # twins (sim_ivfpq_indexed, sim_ivf_indexed) are tracked separately.
-    noisy = {"sim_pq_topk"}
     timings: dict[str, float] = {}
     p50s: dict[str, float] = {}
     for name, q in reg.items():
         samples: list[float] = []
-        for _ in range(max(runs, 5) if name in noisy else runs):
+        for _ in range(runs):
             # Measurement-hygiene fix (r15, VERDICT r14 "what's wrong" #2):
             # queries that persist() an intermediate (bm25 per-doc table,
             # corpus_build deduped stream, the dedup feature passes)

@@ -1231,6 +1231,22 @@ _MONOTONIC_PTK_FNS = {
 }
 
 
+def _local_distinct_count(keys: DataFrame) -> int | None:
+    """Distinct rows of the one-column ``keys`` counted on the driver, with
+    no Spark job, when its optimized plan is a LocalRelation: a block that
+    arrived as driver-local data (a door's Arrow block, VALUES) whose key
+    projection Catalyst already folded into rows (ConvertToLocalRelation).
+    The rows' equality is Spark's for every key type but floating point
+    (-0.0 vs 0.0), so those, and every other plan, return None and keep
+    the distinct job.  A NULL key is one value, as ``distinct`` counts it."""
+    if isinstance(keys.schema.fields[0].dataType, (T.FloatType, T.DoubleType)):
+        return None
+    plan = keys._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return None
+    return plan.data().distinct().size()
+
+
 @dataclass(frozen=True)
 class PartitionSpec:
     """Parsed PARTITION BY clause: identity column, CH fn over a column, or
@@ -5421,7 +5437,8 @@ class TensorBaseEngine:
         computation + the >=1000-parts guard, partition-aligned shuffle,
         bloom writer options, MV insert triggers."""
         spec = self._spec_for(name)
-        if (self._table_props(name).get("tb.engine") or "").lower() == "null":
+        props = self._table_props(name)
+        if (props.get("tb.engine") or "").lower() == "null":
             # ENGINE = Null: the write is discarded, reads stay empty — but
             # MV insert triggers still fire over the cast block (CH's
             # standard ingest-through-Null fan-out idiom).  Checked BEFORE
@@ -5446,12 +5463,12 @@ class TensorBaseEngine:
                 # own bench_ingestion.rs shape, rem(a,100) at 134M rows)
                 nparts = spec.rem_n
             else:
-                nparts = (
-                    out.select(PTK_COL)
-                    .distinct()
-                    .limit(MAX_PARTS_PER_INSERT + 1)
-                    .count()
-                )
+                # a driver-local block counts its keys without a job (the
+                # distinct job was 3 of an Arrow block's 5 insert jobs)
+                keys = out.select(PTK_COL)
+                nparts = _local_distinct_count(keys)
+                if nparts is None:
+                    nparts = keys.distinct().limit(MAX_PARTS_PER_INSERT + 1).count()
                 if nparts >= MAX_PARTS_PER_INSERT:
                     raise ValueError(
                         f"insert spans {nparts} partitions >= {MAX_PARTS_PER_INSERT} "
@@ -5473,7 +5490,7 @@ class TensorBaseEngine:
                 out = out.repartition(width, F.col(PTK_COL))
         bloom = [
             c.strip()
-            for c in self._table_props(name).get("tb.bloom_cols", "").split(",")
+            for c in props.get("tb.bloom_cols", "").split(",")
             if c.strip()
         ]
         if bloom:

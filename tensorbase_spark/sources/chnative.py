@@ -25,9 +25,10 @@ whole compressed frame stack at once — CityHash128 checksum, LZ4 body,
 CSZ/DSZ framing (``blocks.rs:62-70``).
 
 Scale note: this endpoint is the STOCK-CLIENT front door, not the bulk data
-path (that is parquet + the Spark readers).  Pure-Python LZ4/CityHash run at
-front-door speeds; blocks are chunked (8192 rows) far under the reference's
-4 MiB frame guard (``messages.rs:414``).
+path (that is parquet + the Spark readers).  Frames are LZ4-compressed by
+Arrow's C codec and checksummed by a pure-Python CityHash128 that reads
+whole 64-bit words; blocks are chunked (8192 rows) far under the
+reference's 4 MiB frame guard (``messages.rs:414``).
 
 Compression framing (``blocks.rs:62-70``)::
 
@@ -115,17 +116,40 @@ class Reader:
     The reference juggles IncompletedWireFormat retries over nonblocking
     BytesMut reads (messages.rs:204-232); blocking exact reads make the
     Python state machine trivial — a legitimately different transport
-    architecture for the same wire format."""
+    architecture for the same wire format.
 
-    def __init__(self, src: bytes | Any):
+    A buffer reader may be given ``more``, a callable returning the next
+    piece of a streamed body (b"" at its end): an underrun then appends
+    pieces instead of failing, so a stream keeps the buffer's vectorized
+    string path.  ``peak_buffered`` is the most bytes it ever held."""
+
+    def __init__(self, src: bytes | Any, more: Callable[[], bytes] | None = None):
         if isinstance(src, (bytes, bytearray, memoryview)):
             self._buf, self._pos, self._f = bytes(src), 0, None
         else:
             self._buf, self._pos, self._f = b"", 0, src  # file-like
+        self._more = more
+        self.peak_buffered = len(self._buf)
+
+    def _refill(self, need: int) -> bool:
+        """Append pieces of ``more`` until ``need`` unread bytes are held;
+        False if the stream ends first."""
+        held = len(self._buf) - self._pos
+        pieces = [self._buf[self._pos:]]
+        while held < need and self._more is not None:
+            piece = self._more()
+            if not piece:
+                break
+            pieces.append(piece)
+            held += len(piece)
+        if len(pieces) > 1:
+            self._buf, self._pos = b"".join(pieces), 0
+            self.peak_buffered = max(self.peak_buffered, len(self._buf))
+        return held >= need
 
     def read(self, n: int) -> bytes:
         if self._f is None:
-            if self._pos + n > len(self._buf):
+            if self._pos + n > len(self._buf) and not self._refill(n):
                 raise EOFError("wire format underrun")
             out = self._buf[self._pos : self._pos + n]
             self._pos += n
@@ -139,7 +163,7 @@ class Reader:
         return bytes(out)
 
     def at_end(self) -> bool:
-        return self._f is None and self._pos >= len(self._buf)
+        return self._f is None and self._pos >= len(self._buf) and not self._refill(1)
 
     def read_varint(self) -> int:
         shift, v = 0, 0
@@ -159,29 +183,44 @@ class Reader:
         """``n`` varint-length-prefixed values as one binary array."""
         if self._f is not None:
             return pa.array([self.read_varbytes() for _ in range(n)], pa.binary())
-        buf, pos, end = self._buf, self._pos, len(self._buf)
-        starts, lengths = [0] * n, [0] * n
-        for i in range(n):
-            if pos >= end:
+        parts = []
+        while True:
+            k = self._scan_strings(n, parts)
+            n -= k
+            if not n:
+                break
+            if not self._refill(len(self._buf) - self._pos + 1):
                 raise EOFError("wire format underrun")
+        return parts[0] if len(parts) == 1 else pa.concat_arrays(parts)
+
+    def _scan_strings(self, n: int, parts: list) -> int:
+        """Take up to ``n`` values whole in the buffer into ``parts`` as one
+        array; returns how many (fewer where the buffer ends in a value)."""
+        buf, pos, end = self._buf, self._pos, len(self._buf)
+        starts, lengths = [], []
+        for _ in range(n):
+            if pos >= end:
+                break
             b = buf[pos]
-            pos += 1
+            p = pos + 1
             ln, shift = b & 0x7F, 7
             while b & 0x80:
-                if pos >= end:
-                    raise EOFError("wire format underrun")
+                if p >= end:
+                    break
                 if shift > 63:
                     raise ValueError("varint too long")
-                b = buf[pos]
-                pos += 1
+                b = buf[p]
+                p += 1
                 ln |= (b & 0x7F) << shift
                 shift += 7
-            starts[i], lengths[i] = pos, ln
-            pos += ln
-        if pos > end:
-            raise EOFError("wire format underrun")
+            if b & 0x80 or p + ln > end:
+                break
+            starts.append(p)
+            lengths.append(ln)
+            pos = p + ln
+        k = len(starts)
         lens = np.array(lengths, dtype=np.int64)
-        offsets = np.zeros(n + 1, dtype=np.int64)
+        offsets = np.zeros(k + 1, dtype=np.int64)
         np.cumsum(lens, out=offsets[1:])
         if offsets[-1] > 0x7FFFFFFF:
             raise ValueError("string column larger than 2 GiB")
@@ -190,9 +229,10 @@ class Reader:
         idx += np.arange(offsets[-1], dtype=np.int64)
         data = np.frombuffer(buf, dtype=np.uint8)[idx]
         self._pos = pos
-        return pa.Array.from_buffers(
-            pa.binary(), n,
-            [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)])
+        parts.append(pa.Array.from_buffers(
+            pa.binary(), k,
+            [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)]))
+        return k
 
     def read_str(self) -> str:
         return self.read_varbytes().decode("utf-8")
@@ -215,7 +255,8 @@ class Reader:
 # it via clickhouse_rs_cityhash_sys, blocks.rs:5,289).  Pure-Python port of
 # the public-domain city.cc 1.0.2.  The short paths (<128 bytes — every
 # frame header/empty block) are pinned by the reference's 38-byte golden;
-# the >=128 path follows city.cc and is exercised by round-trip tests.
+# the >=128 path is pinned by C known-answer vectors
+# (tests/test_chnative.py::test_city_hash_128_long_known_answers).
 # ---------------------------------------------------------------------------
 
 _M64 = (1 << 64) - 1
@@ -311,27 +352,46 @@ def _city_hash_128_with_seed(
     ln = len(s)
     if ln < 128:
         return _city_murmur(s, seed_lo, seed_hi)
+    # every frame checksum runs this loop over its whole payload, so the
+    # 128-byte blocks are read as little-endian words in one unpack and the
+    # body inlines _rotr and _weak_hash_len_32
+    nblk = ln // 128
+    W = struct.unpack_from(f"<{nblk * 16}Q", s)
+    M, K1 = _M64, _K1
     x, y = seed_lo, seed_hi
-    z = (ln * _K1) & _M64
-    v0 = (_rotr((y ^ _K1) & _M64, 49) * _K1 + _f64(s, 0)) & _M64
-    v1 = (_rotr(v0, 42) * _K1 + _f64(s, 8)) & _M64
-    w0 = (_rotr((y + z) & _M64, 35) * _K1 + x) & _M64
-    w1 = (_rotr((x + _f64(s, 88)) & _M64, 53) * _K1) & _M64
-    pos, rem = 0, ln
-    while True:
-        for _ in range(2):  # the manually-unrolled 64B halves (city.cc)
-            x = (_rotr((x + y + v0 + _f64(s, pos + 16)) & _M64, 37) * _K1) & _M64
-            y = (_rotr((y + v1 + _f64(s, pos + 48)) & _M64, 42) * _K1) & _M64
-            x ^= w1
-            y ^= v0
-            z = _rotr((z ^ w0) & _M64, 33)
-            v0, v1 = _weak_hash_len_32(s, pos, (v1 * _K1) & _M64, (x + w0) & _M64)
-            w0, w1 = _weak_hash_len_32(s, pos + 32, (z + w1) & _M64, y)
-            z, x = x, z
-            pos += 64
-        rem -= 128
-        if rem < 128:
-            break
+    z = (ln * K1) & M
+    t = (y ^ K1) & M
+    v0 = ((((t >> 49) | (t << 15)) & M) * K1 + W[0]) & M
+    v1 = ((((v0 >> 42) | (v0 << 22)) & M) * K1 + W[1]) & M
+    t = (y + z) & M
+    w0 = ((((t >> 35) | (t << 29)) & M) * K1 + x) & M
+    t = (x + W[11]) & M
+    w1 = ((((t >> 53) | (t << 11)) & M) * K1) & M
+    for i in range(0, nblk * 16, 8):  # the manually-unrolled 64B halves
+        t = (x + y + v0 + W[i + 2]) & M
+        x = ((((t >> 37) | (t << 27)) & M) * K1) & M ^ w1
+        t = (y + v1 + W[i + 6]) & M
+        y = ((((t >> 42) | (t << 22)) & M) * K1) & M ^ v0
+        t = z ^ w0
+        z = ((t >> 33) | (t << 31)) & M
+        # v = WeakHashLen32WithSeeds(s + pos, v1 * k1, x + w0)
+        a = (v1 * K1 + W[i]) & M
+        d = W[i + 3]
+        t = (x + w0 + a + d) & M
+        b = ((t >> 21) | (t << 43)) & M
+        c = a
+        a = (a + W[i + 1] + W[i + 2]) & M
+        v0, v1 = (a + d) & M, (b + (((a >> 44) | (a << 20)) & M) + c) & M
+        # w = WeakHashLen32WithSeeds(s + pos + 32, z + w1, y)
+        a = (z + w1 + W[i + 4]) & M
+        d = W[i + 7]
+        t = (y + a + d) & M
+        b = ((t >> 21) | (t << 43)) & M
+        c = a
+        a = (a + W[i + 5] + W[i + 6]) & M
+        w0, w1 = (a + d) & M, (b + (((a >> 44) | (a << 20)) & M) + c) & M
+        z, x = x, z
+    pos, rem = nblk * 128, ln - nblk * 128
     y = (y + _rotr(w0, 37) * _K0 + z) & _M64
     x = (x + _rotr((v0 + z) & _M64, 49) * _K0) & _M64
     tail_done = 0
@@ -371,99 +431,58 @@ def city_hash_128(s: bytes) -> tuple[int, int]:
 
 
 # ---------------------------------------------------------------------------
-# LZ4 block codec.  Decompress implements the full sequence grammar (any
-# compliant encoder's output decodes); compress emits the always-valid
-# literals-only form — which is byte-identical to the reference's lz4 output
-# for small/incompressible payloads (the 38-byte golden proves it for the
-# empty block).  Wire compression is a front-door nicety here, not the bulk
-# path, so trading ratio for a dependency-free encoder is deliberate.
+# LZ4 block codec: Arrow's C LZ4 in the raw block format ("lz4_raw"), the
+# format CH frames carry.  It emits real matches (a result frame is ~0.7x its
+# body), and its output for a small or incompressible body is the
+# literals-only form the reference's lz4 emits (the 38-byte golden pins it
+# for the empty block).
 # ---------------------------------------------------------------------------
 
 
 def lz4_decompress(src: bytes, raw_size: int) -> bytes:
-    out = bytearray()
-    i, n = 0, len(src)
-    while i < n:
-        token = src[i]
-        i += 1
-        lit = token >> 4
-        if lit == 15:
-            while True:
-                b = src[i]
-                i += 1
-                lit += b
-                if b != 255:
-                    break
-        out += src[i : i + lit]
-        i += lit
-        if i >= n:
-            break  # last sequence is literals-only
-        off = src[i] | (src[i + 1] << 8)
-        i += 2
-        if off == 0:
-            raise ValueError("invalid LZ4 offset 0")
-        mlen = token & 0x0F
-        if mlen == 15:
-            while True:
-                b = src[i]
-                i += 1
-                mlen += b
-                if b != 255:
-                    break
-        mlen += 4
-        start = len(out) - off
-        if start < 0:
-            raise ValueError("LZ4 offset before window start")
-        for j in range(mlen):  # byte-wise: overlapping matches are the norm
-            out.append(out[start + j])
-    if len(out) != raw_size:
-        raise ValueError(f"LZ4 raw size mismatch: {len(out)} != {raw_size}")
-    return bytes(out)
+    """One LZ4 block that must decode to exactly ``raw_size`` bytes."""
+    if raw_size > 255 * max(len(src), 1):  # past LZ4's largest expansion
+        raise ValueError(f"LZ4 raw size {raw_size} impossible for {len(src)} bytes")
+    try:
+        out = pa.decompress(src, raw_size, codec="lz4_raw", asbytes=True)
+    except OSError as e:  # longer than raw_size, or not an LZ4 block
+        raise ValueError(f"LZ4 block does not decode to {raw_size} bytes: {e}")
+    # the C decoder fills at most raw_size bytes but does not say how many:
+    # a block that also fits raw_size - 1 decoded to fewer
+    if raw_size:
+        try:
+            pa.decompress(src, raw_size - 1, codec="lz4_raw")
+        except OSError:
+            return out
+        raise ValueError(f"LZ4 block decodes to fewer than {raw_size} bytes")
+    return out
 
 
 def lz4_compress(data: bytes) -> bytes:
-    n = len(data)
-    out = bytearray()
-    if n < 15:
-        out.append(n << 4)
-    else:
-        out.append(0xF0)
-        r = n - 15
-        while r >= 255:
-            out.append(255)
-            r -= 255
-        out.append(r)
-    out += data
-    return bytes(out)
+    return pa.compress(data, codec="lz4_raw", asbytes=True)
 
 
 def compress_frame(body: bytes) -> bytes:
     """CTH+ALG+CSZ+DSZ+LZ4 frame (blocks.rs:246-295 encode_to)."""
     lz = lz4_compress(body)
-    payload = bytearray([LZ4_METHOD])
-    payload += struct.pack("<I", 9 + len(lz))
-    payload += struct.pack("<I", len(body))
-    payload += lz
-    lo, hi = city_hash_128(bytes(payload))
-    return struct.pack("<QQ", lo, hi) + bytes(payload)
+    payload = struct.pack("<BII", LZ4_METHOD, 9 + len(lz), len(body)) + lz
+    return struct.pack("<QQ", *city_hash_128(payload)) + payload
 
 
 def read_frame(r: Reader) -> bytes:
     """Read + verify one compressed frame, return the raw body
     (messages.rs:415-505 process_data_blk)."""
     lo, hi = struct.unpack("<QQ", r.read(16))
-    payload = bytearray(r.read(1 + 4 + 4))
-    if payload[0] != LZ4_METHOD:
-        raise ValueError(f"unsupported compression method 0x{payload[0]:02x}")
-    csz = struct.unpack("<I", payload[1:5])[0]
-    dsz = struct.unpack("<I", payload[5:9])[0]
+    head = r.read(1 + 4 + 4)
+    method, csz, dsz = struct.unpack("<BII", head)
+    if method != LZ4_METHOD:
+        raise ValueError(f"unsupported compression method 0x{method:02x}")
     if csz < 9 or csz - 9 > MAX_FRAME_BYTES:
         raise ValueError("bad compressed frame size")  # messages.rs:444
-    payload += r.read(csz - 9)
-    got_lo, got_hi = city_hash_128(bytes(payload))
-    if (got_lo, got_hi) != (lo, hi):
+    payload = head + r.read(csz - 9)
+    if city_hash_128(payload) != (lo, hi):
         raise ValueError("compressed frame checksum mismatch")
-    return lz4_decompress(bytes(payload[9:]), dsz)
+    return lz4_decompress(memoryview(payload)[9:], dsz)
 
 
 # ---------------------------------------------------------------------------
@@ -967,9 +986,10 @@ class Block:
         )
 
 
-# Raw-body budget per data packet: one literals-only LZ4 frame adds
-# ~len/255 + 11 bytes, so 3.5 MiB raw stays safely under the reference's
-# 4 MiB compressed-frame guard (messages.rs:414).
+# Raw-body budget per data packet: an LZ4 block is at most len/255 + 16
+# bytes longer than its input (an incompressible body), so 3.5 MiB raw stays
+# safely under the reference's 4 MiB compressed-frame guard
+# (messages.rs:414).
 BODY_BYTES_BUDGET = 3_500_000
 
 

@@ -1881,41 +1881,11 @@ class _HttpHandler(BaseHTTPRequestHandler):
         bounded memory (the line-format streaming counterpart)."""
         from tensorbase_spark.sources.chnative import Reader as _R
 
-        class _StreamFile:
-            """Exact-read file adapter over (prefix bytes + _BodyReader)."""
-
-            def __init__(self, first: bytes, src):
-                self._buf = bytearray(first)
-                self._src = src
-                self.max_buffered = len(first)
-
-            def at_eof(self) -> bool:
-                if self._buf:
-                    return False
-                piece = self._src.read_piece()
-                if not piece:
-                    return True
-                self._buf += piece
-                self.max_buffered = max(self.max_buffered, len(self._buf))
-                return False
-
-            def read(self, n: int) -> bytes:
-                while len(self._buf) < n:
-                    piece = self._src.read_piece()
-                    if not piece:
-                        break
-                    self._buf += piece
-                    self.max_buffered = max(
-                        self.max_buffered, len(self._buf))
-                out = bytes(self._buf[:n])
-                del self._buf[:n]
-                return out
-
-        sf = _StreamFile(data0, stream)
-        written = self._insert_native_blocks(eng, name, cols, _R(sf), sf.at_eof)
+        r = _R(data0, more=stream.read_piece)
+        written = self._insert_native_blocks(eng, name, cols, r, r.at_end)
         srv = self.server
         srv.max_insert_buffer = max(
-            getattr(srv, "max_insert_buffer", 0), sf.max_buffered)
+            getattr(srv, "max_insert_buffer", 0), r.peak_buffered)
         return written
 
     def _insert_native_blocks(self, eng, name, cols, r, at_eof) -> int:

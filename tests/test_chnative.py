@@ -137,9 +137,9 @@ def test_block_header_encode_golden():
 
 
 def test_lz4_and_frame_roundtrip():
-    """Literals-only compress decodes under the full LZ4 grammar; frames
-    (checksum + sizes) verify and reject corruption; a handcrafted
-    match-sequence payload (the shape a real encoder emits) decodes."""
+    """LZ4 blocks round-trip; frames (checksum + sizes) verify and reject
+    corruption; a handcrafted match-sequence block that keeps LZ4's
+    end-of-block rules decodes, and one that breaks them is refused."""
     for payload in (b"", b"x", b"abc" * 100, bytes(range(256)) * 40):
         assert lz4_decompress(lz4_compress(payload), len(payload)) == payload
         frame = compress_frame(payload)
@@ -149,11 +149,15 @@ def test_lz4_and_frame_roundtrip():
             bad[-1] ^= 0xFF
             with pytest.raises(ValueError, match="checksum"):
                 read_frame(Reader(bytes(bad)))
-    # token 0x14: 1 literal 'A', match len 4+1... wait 0x4 -> 4+4=8? no:
-    # low nibble 4 => match 4+4. offset 1 replicates 'A' eight times,
-    # then a last literals-only sequence "BC".
-    seq = bytes([0x14]) + b"A" + bytes([0x01, 0x00]) + bytes([0x20]) + b"BC"
-    assert lz4_decompress(seq, 11) == b"A" + b"A" * 8 + b"BC"
+    # token 0x14: 1 literal 'A', then a match of 4 + 4 bytes at offset 1
+    # that replicates 'A' eight times; the last sequence is 12 literals, so
+    # the match starts >= 12 bytes and ends >= 5 bytes before the block end
+    seq = bytes([0x14]) + b"A" + bytes([0x01, 0x00]) + bytes([0xC0]) + b"BCDEFGHIJKLM"
+    assert lz4_decompress(seq, 21) == b"A" * 9 + b"BCDEFGHIJKLM"
+    # the same match followed by only 2 literals ends inside the last 5
+    bad_seq = bytes([0x14]) + b"A" + bytes([0x01, 0x00]) + bytes([0x20]) + b"BC"
+    with pytest.raises(ValueError):
+        lz4_decompress(bad_seq, 11)
 
 
 def test_city_hash_128_paths():
@@ -340,6 +344,20 @@ def test_native_insert_error_paths(served):
         # connection still usable after the failed dance
         _, rows = c.execute("select 1 as one")
         assert rows == [(1,)]
+
+
+def test_native_insert_partition_guard(served):
+    """A native INSERT block spanning 1200 partitions is refused with an
+    Exception packet and writes nothing; the connection keeps serving."""
+    engine, port = served
+    with NativeClient(port=port) as c:
+        c.execute("create table npg (k Int64, v Int64) partition by k")
+        c.insert("npg", [("k", "Int64", [1, 2]), ("v", "Int64", [1, 2])])
+        keys = list(range(1200))
+        with pytest.raises(RuntimeError, match="partitions >= 1000"):
+            c.insert("npg", [("k", "Int64", keys), ("v", "Int64", keys)])
+        _, rows = c.execute("select count(*) as n from npg")
+        assert rows == [(2,)]
 
 
 def test_remote_hive2_url_conf():

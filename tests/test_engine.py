@@ -394,6 +394,52 @@ def test_insert_parts_guard(engine):
         )
 
 
+def _arrow_block(engine, keys):
+    import pyarrow as pa
+
+    table = pa.table({"k": pa.array(keys, pa.int64()),
+                      "v": pa.array(range(len(keys)), pa.int64())})
+    return engine.spark.createDataFrame(table)
+
+
+def test_insert_parts_guard_driver_local_block(engine):
+    """An Arrow block (a LocalRelation, what the doors insert) has its
+    partition keys counted on the driver: 1200 keys are refused before
+    anything is written, and 999 keys plus a NULL key are 1000 partitions,
+    as Spark's distinct counts them."""
+    engine.sql("create table pgl(k Nullable(Int64), v Int64) partition by k")
+    engine.insert_df("pgl", _arrow_block(engine, [1, 2, None]))
+    with pytest.raises(ValueError, match=r"insert spans \d+ partitions >= 1000"):
+        engine.insert_df("pgl", _arrow_block(engine, list(range(1200))))
+    with pytest.raises(ValueError, match="spans 1000 partitions"):
+        engine.insert_df("pgl", _arrow_block(engine, list(range(999)) + [None]))
+    engine.insert_df("pgl", _arrow_block(engine, list(range(998)) + [None, None]))
+    assert engine.sql("select count(*) as n from pgl").collect()[0].n == 1003
+
+
+def _insert_jobs(engine, table: str, keys) -> int:
+    sc = engine.spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "insert job count")
+    try:
+        engine.insert_df(table, _arrow_block(engine, keys))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_driver_local_insert_runs_no_guard_job(engine):
+    """A small driver-local block into a partitioned table runs only its
+    write jobs: as many as the same block into a rem(k, 10) table, whose
+    guard is static, and fewer than a guard that launches a job would."""
+    engine.sql("create table pgj(k Int64, v Int64) partition by k")
+    engine.sql("create table pgr(k Int64, v Int64) partition by rem(k, 10)")
+    keys = [i % 6 for i in range(60)]
+    _insert_jobs(engine, "pgj", keys)  # first insert: warm the table's caches
+    _insert_jobs(engine, "pgr", keys)
+    assert _insert_jobs(engine, "pgj", keys) == _insert_jobs(engine, "pgr", keys)
+
+
 def test_uint64_sum_does_not_overflow(engine):
     # SURVEY §7(a): UInt64 -> Decimal(20,0) so sum() exceeds Int64 range
     engine.sql("create table u64(a UInt64)")

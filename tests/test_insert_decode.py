@@ -150,6 +150,29 @@ def test_arrow_decode_matches_list_decode(col, from_file):
     assert _same(got, want), (t, got, want)
 
 
+@given(st.lists(st.binary(max_size=300), max_size=40), st.data())
+@settings(max_examples=300, deadline=None)
+def test_streamed_reader_reads_strings_across_pieces(values, data):
+    """A buffer reader fed piece by piece (a streamed HTTP Native body)
+    reads a String column whose varints and values are cut anywhere by the
+    piece boundaries to the same array as one whole buffer does, and an
+    underrun at the stream's end raises EOFError."""
+    out = bytearray()
+    for v in values:
+        write_varbytes(out, v)
+    body = bytes(out) + b"tail"
+    cuts = sorted(data.draw(st.lists(st.integers(0, len(body)), max_size=8)))
+    pieces = [body[a:b] for a, b in zip([0] + cuts, cuts + [len(body)])]
+    it = iter([p for p in pieces[1:] if p])  # b"" only ends the stream
+    r = Reader(pieces[0], more=lambda: next(it, b""))
+    assert r.read_strings(len(values)).to_pylist() == values
+    assert r.read(4) == b"tail" and r.at_end()
+    assert r.peak_buffered <= len(body)
+    if values:
+        with pytest.raises(EOFError):
+            Reader(bytes(out)[:-1], more=lambda: b"").read_strings(len(values))
+
+
 def _low_cardinality(dictionary: list[str], keys: list[int], key_size: int) -> bytes:
     out = bytearray()
     write_str(out, "lc")
