@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import contextlib
 import datetime as _dt
+import functools
 import os as _os
 import re
 import threading
@@ -1231,20 +1232,33 @@ _MONOTONIC_PTK_FNS = {
 }
 
 
-def _local_distinct_count(keys: DataFrame) -> int | None:
-    """Distinct rows of the one-column ``keys`` counted on the driver, with
-    no Spark job, when its optimized plan is a LocalRelation: a block that
-    arrived as driver-local data (a door's Arrow block, VALUES) whose key
-    projection Catalyst already folded into rows (ConvertToLocalRelation).
-    The rows' equality is Spark's for every key type but floating point
-    (-0.0 vs 0.0), so those, and every other plan, return None and keep
-    the distinct job.  A NULL key is one value, as ``distinct`` counts it."""
-    if isinstance(keys.schema.fields[0].dataType, (T.FloatType, T.DoubleType)):
-        return None
-    plan = keys._jdf.queryExecution().optimizedPlan()
-    if plan.getClass().getSimpleName() != "LocalRelation":
-        return None
-    return plan.data().distinct().size()
+def _check_parts(nparts: int) -> None:
+    if nparts >= MAX_PARTS_PER_INSERT:
+        raise ValueError(
+            f"insert spans {nparts} partitions >= {MAX_PARTS_PER_INSERT} "
+            "(reference guard, crates/runtime/src/write.rs:52-56)"
+        )
+
+
+# The partition directory of a driver-side write is named by this column:
+# the key cast to a string in the session time zone, as Spark's writer
+# names it, with '' read as NULL (Spark's Empty2Null), the default partition.
+_PTK_PATH = "__ptk_path"
+
+
+@functools.cache
+def _ptk_path_column() -> F.Column:
+    return F.nullif(F.col(PTK_COL).cast("string"), F.lit(""))
+
+# Parquet codecs the driver-side write produces as Spark's writer does:
+# pyarrow's name, parquet-mr's default level and Spark's file extension.
+_LOCAL_CODECS = {
+    "snappy": ("snappy", None, ".snappy"),
+    "zstd": ("zstd", 3, ".zstd"),
+    "gzip": ("gzip", 6, ".gz"),
+    "uncompressed": ("none", None, ""),
+    "none": ("none", None, ""),
+}
 
 
 @dataclass(frozen=True)
@@ -1256,7 +1270,10 @@ class PartitionSpec:
     fn: str | None = None  # None = identity
     rem_n: int | None = None
 
+    @functools.cache
     def ptk_column(self) -> F.Column:
+        """The key as a Column, built once per spec: each step of building
+        it is a py4j round trip, ~120 of them for a ``toYYYYMM`` key."""
         if self.fn is None:
             return F.col(self.source_col)
         if self.fn == "rem":
@@ -1725,7 +1742,11 @@ class TensorBaseEngine:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._partition_specs: dict[str, PartitionSpec] = {}
+        # declared BQL column types per table (_bql_cols_for); dropped
+        # wherever _partition_specs is, and on CREATE
+        self._bql_cols_cache: dict[str, dict] = {}
         self._create_scripts: dict[str, str] = {}
+        self._jclasses: dict[str, object] = {}  # _jclass lookups
         # materialized views: src table -> [(mv, tgt, select, src_as_written)]
         self._mvs: dict[str, list[tuple[str, str, str, str]]] = {}
         self._mv_depth = 0
@@ -1774,9 +1795,10 @@ class TensorBaseEngine:
         # concurrent front-door ingest (the reference's ingest bench pools
         # 12 connections, bench_ingestion.rs:6-40): _buffer_lock guards
         # the pending-list bookkeeping (append/steal must not lose a block
-        # arriving mid-flush); _buffer_write_lock serializes the actual
-        # flush writes (two concurrent Spark appends to one table race on
-        # the committer's _temporary dir)
+        # arriving mid-flush); _buffer_write_lock serializes every append,
+        # engine-wide (two concurrent Spark appends to one table race on
+        # the committer's _temporary dir; the driver-side write of a
+        # driver-local block uses no _temporary dir but takes it too)
         self._buffer_lock = threading.Lock()
         # REENTRANT: _write_block fires materialized-view propagation,
         # which re-enters insert_df (and thus this lock) on the same
@@ -2024,50 +2046,75 @@ class TensorBaseEngine:
             return name
         return f"{self.spark.catalog.currentDatabase()}.{name}"
 
-    def _table_props(self, qualified: str) -> dict:
-        """tb.* properties of a MANAGED engine table; {} for temp views /
-        missing tables without going through a failing (and noisily logged)
-        SHOW TBLPROPERTIES analysis.
+    def _catalog_table(self, qualified: str):
+        """The session catalog's JVM ``CatalogTable`` for ``qualified``, or
+        None for temp views and missing tables.  One ``getTableMetadata``
+        call (~0.5 ms); ``spark.catalog.getTable`` costs ~10 ms more."""
+        db, _, tbl = qualified.rpartition(".")
+        if not db:
+            db = self.spark.catalog.currentDatabase()
+        try:
+            return self._jcatalog.getTableMetadata(self._jident(tbl, db))
+        except Exception:
+            return None
 
-        Read through the JVM catalog metadata, NOT ``SHOW TBLPROPERTIES``:
+    @functools.cached_property
+    def _jcatalog(self):
+        return self.spark._jsparkSession.sessionState().catalog()
+
+    def _jident(self, tbl: str, db: str):
+        return self._jclass("org.apache.spark.sql.catalyst.TableIdentifier")(
+            tbl, self._jclass("scala.Some")(db)
+        )
+
+    def _jclass(self, dotted: str):
+        """A JVM class, or the Scala object of a name ending in ``$``, looked
+        up once per engine: each step of a py4j package path is a round
+        trip."""
+        hit = self._jclasses.get(dotted)
+        if hit is None:
+            hit = self.spark.sparkContext._jvm
+            for step in dotted.split("."):
+                hit = getattr(hit, step)
+            if dotted.endswith("$"):
+                hit = getattr(hit, "MODULE$")
+            self._jclasses[dotted] = hit
+        return hit
+
+    @staticmethod
+    def _jprops(jmap) -> dict:
+        """A Scala ``Map[String, String]`` (a table's properties or storage
+        options) as a dict, in four py4j round trips rather than four per
+        entry: keys and values each joined on a control character, or read
+        entry by entry when a value holds it."""
+        keys = jmap.keys().mkString("\x01")
+        if not keys:
+            return {}
+        ks, vs = keys.split("\x01"), jmap.values().mkString("\x01").split("\x01")
+        if len(ks) == len(vs):
+            return dict(zip(ks, vs))
+        it = jmap.iterator()
+        out: dict = {}
+        while it.hasNext():
+            kv = it.next()
+            out[kv._1()] = kv._2()
+        return out
+
+    def _table_props(self, qualified: str) -> dict:
+        """tb.* properties of a MANAGED engine table; {} for temp views,
+        views and missing tables.
+
+        Read from the JVM catalog metadata, NOT ``SHOW TBLPROPERTIES``:
         the SQL command redacts any property whose key OR value matches
         ``spark.sql.redaction.options.regex`` (default ``(?i)url``) — a
         column literally NAMED ``url`` in ``tb.columns`` came back as
         ``*********(redacted)`` and silently broke insert typing, DESC and
         partition-spec recovery.  The engine's own metadata is not a
         credential; the redacted SQL surface remains for users."""
-        try:
-            t = self.spark.catalog.getTable(qualified)
-        except Exception:
+        meta = self._catalog_table(qualified)
+        if meta is None or meta.tableType().name() not in ("MANAGED", "EXTERNAL"):
             return {}
-        if (t.tableType or "").upper() not in ("MANAGED", "EXTERNAL"):
-            return {}
-        try:
-            jvm = self.spark.sparkContext._jvm
-            db, _, tbl = qualified.rpartition(".")
-            if not db:
-                db = self.spark.catalog.currentDatabase()
-            ident = jvm.org.apache.spark.sql.catalyst.TableIdentifier(
-                tbl, jvm.scala.Option.apply(db)
-            )
-            meta = (
-                self.spark._jsparkSession.sessionState()
-                .catalog()
-                .getTableMetadata(ident)
-            )
-            it = meta.properties().iterator()
-            out: dict = {}
-            while it.hasNext():
-                kv = it.next()
-                out[kv._1()] = kv._2()
-            return out
-        except Exception:
-            pass
-        try:  # fallback: the (redaction-subject) SQL surface
-            rows = self.spark.sql(f"SHOW TBLPROPERTIES {qualified}").collect()
-        except Exception:
-            return {}
-        return {r.key: r.value for r in rows}
+        return self._jprops(meta.properties())
 
     def _resolve_alias(self, qualified: str) -> str:
         """Distributed/Buffer alias -> local target table.  The in-memory
@@ -2126,27 +2173,8 @@ class TensorBaseEngine:
 
     def _table_props_view(self, qualified: str) -> dict:
         """View properties via the JVM catalog (tb.* on alias views)."""
-        try:
-            jvm = self.spark.sparkContext._jvm
-            db, _, tbl = qualified.rpartition(".")
-            if not db:
-                db = self.spark.catalog.currentDatabase()
-            ident = jvm.org.apache.spark.sql.catalyst.TableIdentifier(
-                tbl, jvm.scala.Option.apply(db)
-            )
-            meta = (
-                self.spark._jsparkSession.sessionState()
-                .catalog()
-                .getTableMetadata(ident)
-            )
-            it = meta.properties().iterator()
-            out: dict = {}
-            while it.hasNext():
-                kv = it.next()
-                out[kv._1()] = kv._2()
-            return out
-        except Exception:
-            return {}
+        meta = self._catalog_table(qualified)
+        return {} if meta is None else self._jprops(meta.properties())
 
     def flush_buffer(self, alias: str) -> None:
         """Flush a Buffer alias's pending blocks to its target as ONE
@@ -3249,6 +3277,7 @@ class TensorBaseEngine:
                 return self.spark.sql("SELECT 1 AS ok")
             df = self.sql(cm.group("q"))
             df.write.saveAsTable(name)
+            self._bql_cols_cache.pop(name, None)
             return self.spark.sql("SELECT 1 AS ok")
         m = _match_create_table(c)
         if not m:
@@ -3485,6 +3514,7 @@ class TensorBaseEngine:
         )
         self._reconcile_orphan_location(name)
         out = self.spark.sql(ddl)
+        self._bql_cols_cache.pop(name, None)
         if spec is not None:
             self._partition_specs[name] = spec
         self._create_scripts[name] = c
@@ -3636,6 +3666,7 @@ class TensorBaseEngine:
             except Exception:
                 pass
             self._partition_specs.pop(q, None)
+            self._bql_cols_cache.pop(q, None)
             for spec in self._projections.pop(q, []):  # projections die too
                 self.spark.sql(f"DROP TABLE IF EXISTS {spec.table}")
             self._mvs.pop(q, None)
@@ -4777,7 +4808,10 @@ class TensorBaseEngine:
                 )
         for src, dst in pairs:
             self.spark.sql(f"ALTER TABLE {src} RENAME TO {dst}")
-            for reg in (self._partition_specs, self._create_scripts):
+            for reg in (
+                self._partition_specs, self._bql_cols_cache, self._create_scripts
+            ):
+                reg.pop(dst, None)
                 if src in reg:
                     reg[dst] = reg.pop(src)
             # materialized views follow the rename: re-key views whose
@@ -4919,6 +4953,7 @@ class TensorBaseEngine:
 
         self.spark.sql(f"DROP TABLE {name}")
         self._partition_specs.pop(name, None)
+        self._bql_cols_cache.pop(name, None)
         self._create_scripts.pop(name, None)
         self._create_table(new_script)
         order = self.spark.table(name).columns
@@ -5213,8 +5248,6 @@ class TensorBaseEngine:
     def _bql_cols_for(self, name: str) -> dict:
         """BQL-declared column types from table properties (cached):
         carries information Spark's schema loses, e.g. FixedString(n)."""
-        if not hasattr(self, "_bql_cols_cache"):
-            self._bql_cols_cache = {}
         if name in self._bql_cols_cache:
             return self._bql_cols_cache[name]
         out: dict = {}
@@ -5236,7 +5269,10 @@ class TensorBaseEngine:
         """Append a DataFrame: positional cast to the table schema, DateTime
         second-truncation (reference Timestamp32 is unix seconds,
         crates/arrow/src/datatypes/datatype.rs:95), partition-key computation,
-        and the >=1000-parts-per-block guard (write.rs:52-56)."""
+        and the >=1000-parts-per-block guard (write.rs:52-56).  A
+        driver-local ``src`` (a door's Arrow block, VALUES) is written from
+        the driver with no Spark job; any other goes through Spark's
+        ``insertInto`` (``_write_block``)."""
         name = self._qualify(name)
         if self._alias_kind(name) == "buffer":
             # ENGINE = Buffer: the block parks in the in-memory pending list
@@ -5258,9 +5294,10 @@ class TensorBaseEngine:
         # Distributed alias: writes land in the local target table
         name = self._resolve_alias(name)
         out = self._cast_block(name, src, subset)
-        # serialize appends: two concurrent front-door inserts into one
-        # table race on the committer's _temporary dir (engine-wide lock,
-        # conservative; within one job the write itself is parallel)
+        # serialize appends: two concurrent Spark writes into one table race
+        # on the committer's _temporary dir.  Driver-side writes use no
+        # _temporary dir (unique hidden temp names, then renames), but the
+        # lock stays engine-wide for both paths for now.
         with self._buffer_write_lock:
             return self._write_block(name, out)
 
@@ -5433,11 +5470,17 @@ class TensorBaseEngine:
         return q
 
     def _write_block(self, name: str, out: DataFrame) -> DataFrame:
-        """Write tail of the insert path: Null-engine discard, partition-key
-        computation + the >=1000-parts guard, partition-aligned shuffle,
-        bloom writer options, MV insert triggers."""
+        """Write tail of the insert path: Null-engine discard, the partition
+        key and the >=1000-parts guard, the write, MV insert triggers.
+
+        The cast block and its key are one projection.  When Catalyst folds
+        it into driver-local rows (a door's Arrow block, ``INSERT ...
+        VALUES``), the driver writes the files with no Spark job
+        (``_write_local``); any other source, and a table whose write needs
+        Spark's writer, takes ``_write_spark``."""
         spec = self._spec_for(name)
-        props = self._table_props(name)
+        meta = self._catalog_table(name)
+        props = {} if meta is None else self._jprops(meta.properties())
         if (props.get("tb.engine") or "").lower() == "null":
             # ENGINE = Null: the write is discarded, reads stay empty — but
             # MV insert triggers still fire over the cast block (CH's
@@ -5456,6 +5499,156 @@ class TensorBaseEngine:
             return self.spark.sql("SELECT 1 AS ok")
         if spec is not None:
             out = out.withColumn(PTK_COL, spec.ptk_column())
+        bloom = [
+            c.strip()
+            for c in props.get("tb.bloom_cols", "").split(",")
+            if c.strip()
+        ]
+        # pyarrow writes no bloom filters
+        if bloom or not self._write_local(name, meta, out, spec is not None):
+            self._write_spark(name, out, spec, bloom)
+        if self._mvs.get(name):
+            # CH materialized views are insert triggers: each view's SELECT
+            # runs over the inserted block only (cast, target-named), and
+            # chains are allowed with a cycle guard
+            if self._mv_depth >= 8:
+                raise ValueError("materialized-view chain deeper than 8 (cycle?)")
+            self._mv_depth += 1
+            try:
+                self._propagate_mvs(name, out.drop(PTK_COL))
+            finally:
+                self._mv_depth -= 1
+        return self.spark.sql("SELECT 1 AS ok")
+
+    def _write_local(self, name: str, meta, out: DataFrame, keyed: bool) -> bool:
+        """Append a driver-local block from the driver, with no Spark job,
+        as the reference appends a block on its server (write.rs:69-136).
+
+        The rows Catalyst folded the cast and the key into are read out as
+        Arrow in the JVM; the guard counts their keys; one parquet file per
+        partition is written under a hidden temp name, which Spark's listing
+        skips; new partitions are registered in one catalog call; and only
+        then are the files renamed into place.  A reader so sees none of the
+        block, or its files appearing whole, never a row twice.  A failure
+        before the renames removes the temp files and the directories it
+        made.  There is no ``_temporary`` committer directory.
+
+        Returns False, having written nothing, when the block does not fold
+        to a LocalRelation or the table needs Spark's writer: buckets, a
+        float key (Spark's key equality is not Arrow's), storage options or
+        a codec pyarrow does not write, or a non-local location."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        from tensorbase_spark.sources import batches
+
+        if meta is None or meta.bucketSpec().isDefined():
+            return False
+        opts = self._jprops(meta.storage().properties())
+        codec = _LOCAL_CODECS.get(
+            (
+                opts.pop("compression", None)
+                or opts.pop("parquet.compression", None)
+                or self.spark.conf.get("spark.sql.parquet.compression.codec")
+            ).lower()
+        )
+        loc = meta.location()
+        if opts or codec is None or loc.getScheme() != "file":
+            return False
+        if keyed:
+            out = out.withColumn(_PTK_PATH, _ptk_path_column())
+        plan = out._jdf.queryExecution().optimizedPlan()
+        if plan.getClass().getSimpleName() != "LocalRelation":
+            return False
+        block = batches.local_rows(plan, self.spark)
+        if block is None:
+            return True  # no rows: nothing to write
+        if keyed and pa.types.is_floating(block.schema.field(PTK_COL).type):
+            return False
+        data = block.drop_columns([PTK_COL, _PTK_PATH] if keyed else [])
+        parts = [("", data)]
+        if keyed:
+            _check_parts(pc.count_distinct(block[PTK_COL], mode="all").as_py())
+            enc = block[_PTK_PATH].combine_chunks().dictionary_encode("encode")
+            idx = enc.indices.to_numpy(zero_copy_only=False)
+            counts = np.bincount(idx, minlength=len(enc.dictionary))
+            data = data.take(np.argsort(idx, kind="stable"))
+            path = self._jclass(
+                "org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils"
+            ).getPartitionPathString
+            starts = np.cumsum(counts) - counts
+            parts = [
+                (path(PTK_COL, key), data.slice(st, n))
+                for key, st, n in zip(enc.dictionary.to_pylist(), starts, counts)
+            ]
+        comp, level, ext = codec
+        # dictionary pages on strings only: parquet-mr writes integers
+        # PLAIN, and a dictionary per small block only grows them
+        strings = [
+            f.name for f in data.schema
+            if pa.types.is_string(f.type) or pa.types.is_large_string(f.type)
+        ]
+        root, stamp = loc.getPath(), _uuid.uuid4()
+        staged: list[tuple[str, str]] = []  # (temp, final) file paths
+        made: list[str] = []  # partition directories this write created
+        try:
+            for i, (frag, part) in enumerate(parts):
+                d = _os.path.join(root, frag)
+                if not _os.path.isdir(d):
+                    _os.makedirs(d)
+                    made.append(d)
+                tmp = _os.path.join(d, f".tb-{stamp}-{i:05d}.tmp")
+                staged.append(
+                    (tmp, _os.path.join(d, f"part-{i:05d}-{stamp}-c000{ext}.parquet"))
+                )
+                pq.write_table(
+                    part, tmp, compression=comp, compression_level=level,
+                    use_dictionary=strings, store_schema=False,
+                )
+            if keyed and meta.tracksPartitionsInCatalog():
+                self._add_partitions(name, [frag for frag, _ in parts])
+        except BaseException:
+            for tmp, _ in staged:
+                with contextlib.suppress(OSError):
+                    _os.remove(tmp)
+            for d in reversed(made):
+                with contextlib.suppress(OSError):
+                    _os.rmdir(d)
+            raise
+        for tmp, final in staged:
+            _os.rename(tmp, final)
+        self.spark.catalog.refreshTable(name)
+        return True
+
+    def _add_partitions(self, name: str, frags: list[str]) -> None:
+        """Register the partition directories ``frags`` (``__ptk=v``) with
+        one ``ALTER TABLE ADD IF NOT EXISTS PARTITION`` command, their specs
+        parsed as Spark's writer parses the directories it wrote."""
+        parse = self._jclass(
+            "org.apache.spark.sql.execution.datasources.PartitioningUtils$"
+        ).parsePathFragment
+        none = self._jclass("scala.Option").empty()
+        tuple2 = self._jclass("scala.Tuple2")
+        db, _, tbl = name.rpartition(".")
+        self._jclass(
+            "org.apache.spark.sql.execution.command.AlterTableAddPartitionCommand"
+        )(
+            self._jident(tbl, db),
+            self._jclass("org.apache.spark.api.python.PythonUtils").toSeq(
+                [tuple2(parse(f), none) for f in frags]
+            ),
+            True,
+        ).run(self.spark._jsparkSession)
+
+    def _write_spark(
+        self, name: str, out: DataFrame, spec: PartitionSpec | None, bloom: list
+    ) -> None:
+        """Spark's write of a keyed block: the guard (a job, unless the
+        key's partition count is static), the partition-aligned shuffle,
+        bloom writer options and ``insertInto``."""
+        if spec is not None:
             if spec.fn == "rem" and spec.rem_n < MAX_PARTS_PER_INSERT:
                 # rem(col, n) bounds the partition count STATICALLY at n —
                 # the guard needs no job at all (measured: the distinct
@@ -5463,17 +5656,13 @@ class TensorBaseEngine:
                 # own bench_ingestion.rs shape, rem(a,100) at 134M rows)
                 nparts = spec.rem_n
             else:
-                # a driver-local block counts its keys without a job (the
-                # distinct job was 3 of an Arrow block's 5 insert jobs)
-                keys = out.select(PTK_COL)
-                nparts = _local_distinct_count(keys)
-                if nparts is None:
-                    nparts = keys.distinct().limit(MAX_PARTS_PER_INSERT + 1).count()
-                if nparts >= MAX_PARTS_PER_INSERT:
-                    raise ValueError(
-                        f"insert spans {nparts} partitions >= {MAX_PARTS_PER_INSERT} "
-                        "(reference guard, crates/runtime/src/write.rs:52-56)"
-                    )
+                nparts = (
+                    out.select(PTK_COL)
+                    .distinct()
+                    .limit(MAX_PARTS_PER_INSERT + 1)
+                    .count()
+                )
+                _check_parts(nparts)
             # partition-aligned write: without this every task writes one
             # file per ptk value it happens to see (tasks x partitions small
             # files — the classic Hive-partitioned-append failure at scale);
@@ -5488,11 +5677,6 @@ class TensorBaseEngine:
             if nparts > 1:
                 width = min(nparts, max(self.spark.sparkContext.defaultParallelism, 8))
                 out = out.repartition(width, F.col(PTK_COL))
-        bloom = [
-            c.strip()
-            for c in props.get("tb.bloom_cols", "").split(",")
-            if c.strip()
-        ]
         if bloom:
             # The per-column bloom keys live on the process-global Hadoop
             # configuration (insertInto carries no writer options), so
@@ -5520,18 +5704,6 @@ class TensorBaseEngine:
             # engine session's cached file listing for the table is stale
             # until refreshed (same-session writes invalidate automatically)
             self.spark.catalog.refreshTable(name)
-        if self._mvs.get(name):
-            # CH materialized views are insert triggers: each view's SELECT
-            # runs over the inserted block only (cast, target-named), and
-            # chains are allowed with a cycle guard
-            if self._mv_depth >= 8:
-                raise ValueError("materialized-view chain deeper than 8 (cycle?)")
-            self._mv_depth += 1
-            try:
-                self._propagate_mvs(name, out.drop(PTK_COL))
-            finally:
-                self._mv_depth -= 1
-        return self.spark.sql("SELECT 1 AS ok")
 
     # -- SELECT translation + partition pruning ------------------------------
 

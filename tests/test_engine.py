@@ -429,15 +429,42 @@ def _insert_jobs(engine, table: str, keys) -> int:
 
 
 def test_driver_local_insert_runs_no_guard_job(engine):
-    """A small driver-local block into a partitioned table runs only its
-    write jobs: as many as the same block into a rem(k, 10) table, whose
-    guard is static, and fewer than a guard that launches a job would."""
+    """A driver-local block into a partitioned table runs no Spark job at
+    all: neither the guard's distinct count nor the write; a rem(k, 10)
+    table, whose guard is static, likewise."""
     engine.sql("create table pgj(k Int64, v Int64) partition by k")
     engine.sql("create table pgr(k Int64, v Int64) partition by rem(k, 10)")
     keys = [i % 6 for i in range(60)]
-    _insert_jobs(engine, "pgj", keys)  # first insert: warm the table's caches
-    _insert_jobs(engine, "pgr", keys)
-    assert _insert_jobs(engine, "pgj", keys) == _insert_jobs(engine, "pgr", keys)
+    assert _insert_jobs(engine, "pgj", keys) == 0
+    assert _insert_jobs(engine, "pgr", keys) == 0
+    assert engine.sql("select count(*) as n from pgj").collect()[0].n == 60
+
+
+def test_table_props_reads_catalog_metadata(engine):
+    """_table_props reads the catalog's own metadata: a table's tb.*
+    properties (a value holding the control character the keys and values
+    are joined on included), and {} for a temp view and a missing table."""
+    engine.sql("create table tpm (k Int64) partition by k")
+    q = engine._qualify("tpm")
+    props = engine._table_props(q)
+    assert props["tb.partition_expr"] == "k" and props["tb.columns"] == "k Int64"
+    engine.spark.sql(f"alter table {q} set tblproperties ('x' = 'a\x01b')")
+    assert engine._table_props(q)["x"] == "a\x01b"
+    assert engine._table_props(q)["tb.partition_expr"] == "k"
+    engine.spark.range(1).createOrReplaceTempView("tpm_tmp")
+    assert engine._table_props(engine._qualify("tpm_tmp")) == {}
+    assert engine._table_props(engine._qualify("tpm_missing")) == {}
+
+
+def test_recreated_table_drops_cached_column_types(engine):
+    """DROP and CREATE of a table under the same name forget its declared
+    BQL column types: the new FixedString width applies."""
+    engine.sql("create table fx (id Int64, fs FixedString(2))")
+    engine.sql("insert into fx values (1, 'ab')")
+    engine.sql("drop table fx")
+    engine.sql("create table fx (id Int64, fs FixedString(8))")
+    engine.sql("insert into fx values (2, 'abcdef')")
+    assert [tuple(r) for r in engine.sql("select * from fx").collect()] == [(2, "abcdef")]
 
 
 def test_uint64_sum_does_not_overflow(engine):
