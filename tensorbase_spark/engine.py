@@ -1840,6 +1840,7 @@ class TensorBaseEngine:
         stats query; never a data scan), file counts and bytes on disk.
         Un-partitioned tables report partition='all'."""
         import os
+        from urllib.parse import unquote
 
         import pyarrow.parquet as pq
 
@@ -1868,7 +1869,8 @@ class TensorBaseEngine:
                 if not pfs:
                     continue
                 rel = os.path.relpath(dirpath, loc)
-                partition = rel.split("=", 1)[1] if "=" in rel else "all"
+                # the key value, not Spark's %XX-escaped directory name
+                partition = unquote(rel.split("=", 1)[1]) if "=" in rel else "all"
                 agg = parts.setdefault(partition, [0, 0, 0])
                 for f in pfs:
                     p = os.path.join(dirpath, f)
@@ -2378,11 +2380,11 @@ class TensorBaseEngine:
         """Wrap a row iterator with a periodic kill/timeout poll — the
         ONE implementation every front door's result stream shares.  A
         KILL from another connection cancels the victim's Spark jobs,
-        but once the local iterator has prefetched its partitions
-        nothing is left to cancel; this poll is what truncates the
-        stream (VERDICT r11 #6, r12 review dedup).  ``qid`` binds the
-        check to the tracked query regardless of which thread consumes
-        the iterator."""
+        but once a result window has been computed nothing is left to
+        cancel while it is read; this poll is what truncates the stream
+        (VERDICT r11 #6, r12 review dedup).  ``qid`` binds the check to
+        the tracked query regardless of which thread consumes the
+        iterator."""
         # resolve the thread-local binding EAGERLY (a generator body
         # runs lazily, possibly on a helper thread with no binding)
         qid = qid or getattr(self._track_tls, "qid", None)
@@ -3018,7 +3020,9 @@ class TensorBaseEngine:
             df = self.spark.sql(self._translate_query(c[len("explain analyze"):]))
             # drain the query's own execution (like AnalyzeExec consuming and
             # discarding the stream) so the AQE-final plan is observable
-            for _ in df.toLocalIterator():
+            from tensorbase_spark.sources.batches import result_batches
+
+            for _ in result_batches(df):
                 pass
             plan = df._jdf.queryExecution().executedPlan().toString()
             return self.spark.createDataFrame(
@@ -4074,15 +4078,18 @@ class TensorBaseEngine:
         scan — and refreshes registered projections afterward."""
         import shutil
 
+        # a quoted value may hold spaces ('2021-03-14 02:30:00'); a bare
+        # one is a single token
         pm = re.match(
-            r"(?is)^'?(?P<v>[^'\s]+)'?\s*(?:\s+to\s+table\s+(?P<tgt>[\w.]+))?\s*$",
-            rest or "",
+            r"(?is)^(?:'(?P<q>[^']*)'|(?P<v>[^'\s]+))"
+            r"(?:\s+to\s+table\s+(?P<tgt>[\w.]+))?\s*$",
+            (rest or "").strip(),
         )
         if not pm:
             raise ValueError(f"cannot parse: {verb.upper()} PARTITION {rest!r}")
         if self._spec_for(name) is None:
             raise ValueError(f"{name} is not partitioned")
-        v = pm.group("v")
+        v = pm.group("v") if pm.group("q") is None else pm.group("q")
         wh = self.spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
         parked = f"{wh}/{name}__detached/{v}"  # name keeps its db.table dot
         part_rows = self.spark.table(name).filter(
@@ -5069,10 +5076,11 @@ class TensorBaseEngine:
                 from tensorbase_spark.sources.chnative import (
                     spark_field_to_ch,
                 )
+                from tensorbase_spark.sources.batches import result_batches
                 from tensorbase_spark.sources.external import post_url
                 from tensorbase_spark.sources.httpwire import (
                     canonical_format,
-                    encode_rows,
+                    encode_batches,
                 )
 
                 canon = canonical_format(
@@ -5086,9 +5094,9 @@ class TensorBaseEngine:
                     except ValueError:
                         ch_types.append("String")
                 body = b"".join(
-                    encode_rows(
-                        canon, names, ch_types,
-                        (tuple(r) for r in src.toLocalIterator()),
+                    encode_batches(
+                        canon, names, ch_types, src.schema.fields,
+                        result_batches(src),
                     )
                 )
                 post_url(path, body)

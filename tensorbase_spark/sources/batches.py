@@ -4,10 +4,11 @@ The reference encodes each result block column by column as the engine
 yields it (``crates/runtime/src/ch/messages.rs:343-357``,
 ``blocks.rs:192-210``).  ``result_batches(df)`` is that shape on Spark: the
 JVM converts each partition to Arrow record batches
-(``Dataset.toArrowBatchRdd``) and serves them over the same
-one-partition-at-a-time socket that ``DataFrame.toLocalIterator`` uses
-(``PythonRDD.toLocalIteratorAndServe`` with prefetch), so at most one
-partition is in flight and no Python worker starts.  The native, HTTP and
+(``Dataset.toArrowBatchRdd``), one ``PythonRDD.runJob`` per window of
+``defaultParallelism`` partitions computes them, and ``serveIterator``
+writes the window through a buffered stream to a local socket, so at
+most one window is held in the JVM, a result pays one job and no socket
+stall per partition, and no Python worker starts.  The native, HTTP and
 MySQL doors encode these batches column by column (``chnative``,
 ``httpwire``, ``mysqlwire``); ``local_batch`` turns a small driver-side
 result (the jobless introspection answers) into one batch for the same
@@ -32,12 +33,12 @@ from __future__ import annotations
 
 import os
 from decimal import ROUND_HALF_UP, Decimal
-from typing import Callable
+from typing import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.serializers import read_int, write_int
+from pyspark.serializers import read_int
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.util import _create_local_socket
@@ -55,78 +56,66 @@ def arrow_schema(schema, spark) -> pa.Schema:
     return to_arrow_schema(schema, timestamp_utc=True, prefers_large_types=large)
 
 
-def result_batches(df) -> "BatchStream":
-    """Stream ``df``'s result as record batches, one partition at a time.
+def result_batches(df) -> Iterator[pa.RecordBatch]:
+    """Stream ``df``'s result as record batches in partition order, one
+    window of ``defaultParallelism`` partitions at a time.
 
-    Planning, and with AQE the stages before the last, run here, eagerly,
-    so an analysis error or a timeout surfaces before a door commits to a
-    response; the returned iterator then fetches partitions on demand."""
-    schema = arrow_schema(df.schema, df.sparkSession)
-    jvm = df.sparkSession.sparkContext._jvm
-    served = jvm.PythonRDD.toLocalIteratorAndServe(df._jdf.toArrowBatchRdd(), True)
-    return BatchStream(served, schema)
+    Planning, the stages before the last (with AQE) and the first window's
+    job run here, eagerly, so an analysis error, a timeout or a failure of
+    the final stage surfaces before a door commits to a response.  Each
+    later window is one more job, started when the previous window has
+    been read, so at most one window of Arrow bytes is held in the JVM.
+    Every window's job runs with the local properties (job group,
+    interrupt-on-cancel) of the thread that called this, whichever thread
+    pulls it, so KILL QUERY and ``max_execution_time`` cancel it."""
+    spark = df.sparkSession
+    schema = arrow_schema(df.schema, spark)
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    rdd = df._jdf.toArrowBatchRdd().toJavaRDD()
+    n = rdd.getNumPartitions()
+    step = max(1, sc.defaultParallelism)
+    props = jsc.getLocalProperties().clone()
 
-
-class BatchStream:
-    """Client of the JVM's local-iterator socket (the protocol of
-    ``pyspark.util._local_iterator_from_socket``): ask for a partition,
-    read its length-prefixed Arrow messages, repeat.  ``close()`` — also
-    run when the stream is dropped unfinished (client gone, KILL) — drains
-    the partition being read and tells the JVM to stop serving."""
-
-    def __init__(self, served, schema: pa.Schema):
-        port, secret, self._server = served
-        self._schema = schema
-        self._in_partition = False
-        self._done = True  # until the socket is open
-        self._sock = _create_local_socket((port, secret))
-        self._done = False
-
-    def __iter__(self):
-        return self
-
-    def __next__(self) -> pa.RecordBatch:
-        if self._done:
-            raise StopIteration
-        while True:
-            if self._in_partition:
-                n = read_int(self._sock)
-                if n >= 0:
-                    return pa.ipc.read_record_batch(
-                        pa.py_buffer(self._sock.read(n)), self._schema)
-                self._in_partition = False  # END_OF_DATA_SECTION
-            write_int(1, self._sock)  # ask for the next partition
-            self._sock.flush()
-            status = read_int(self._sock)
-            if status == 1:
-                self._in_partition = True
-                continue
-            self._finish()
-            if status == -1:
-                self._server.getResult()  # re-raises the JVM-side failure
-                raise RuntimeError("result stream failed")
-            raise StopIteration
-
-    def _finish(self) -> None:
-        self._done = True
-        self._sock.close()
-
-    def close(self) -> None:
-        if self._done:
-            return
+    def serve(lo: int):
+        parts = list(range(lo, min(lo + step, n)))
+        prev = jsc.getLocalProperties()
+        jsc.setLocalProperties(props)
         try:
-            while self._in_partition:  # the JVM writes whole partitions
-                n = read_int(self._sock)
-                if n < 0:
-                    break
-                self._sock.read(n)
-            write_int(0, self._sock)
-            self._sock.flush()
-        except (OSError, EOFError):
-            pass
-        self._finish()
+            return _create_local_socket(sc._jvm.PythonRDD.runJob(jsc, rdd, parts))
+        finally:
+            jsc.setLocalProperties(prev)
 
-    __del__ = close
+    windows = (serve(lo) for lo in range(0, n, step))
+    stream = _window_batches(next(windows, None), windows, schema)
+    next(stream)  # inside its try: close() now closes the first window
+    return stream
+
+
+def _window_batches(sock, windows: Iterator,
+                    schema: pa.Schema) -> Iterator[pa.RecordBatch]:
+    """Read each window's length-prefixed Arrow messages (the stream
+    ``PythonRDD.serveIterator`` writes), then start the next window.
+    Closing the generator — also on being dropped unfinished (client
+    gone, KILL) — closes the socket, which ends the JVM's serving
+    thread."""
+    try:
+        yield None  # primed by result_batches
+        while sock is not None:
+            while True:
+                try:
+                    size = read_int(sock)
+                except EOFError:
+                    break
+                buf = sock.read(size)
+                if len(buf) < size:
+                    raise EOFError("result window cut short")
+                yield pa.ipc.read_record_batch(pa.py_buffer(buf), schema)
+            sock.close()
+            sock = next(windows, None)
+    finally:
+        if sock is not None:
+            sock.close()
 
 
 def local_batch(rows: list, schema, spark) -> pa.RecordBatch:

@@ -1101,8 +1101,9 @@ def _result_header(df) -> tuple[list[str], list[str], Block]:
 
 def df_to_block_iter(df) -> tuple[Block, "Iterator[Block]"]:
     """Header block + LAZY data-block generator over ``result_batches``:
-    at most one Spark partition (JVM-side) and one Arrow batch
-    (Python-side) exist in server RAM at a time — the reference encodes
+    at most one window of ``defaultParallelism`` partitions (JVM-side) and
+    one Arrow batch (Python-side) exist in server RAM at a time, and the
+    first window's job has run when this returns — the reference encodes
     and sends result blocks incrementally as the engine yields them
     (crates/runtime/src/ch/messages.rs:343-357).  Raises ValueError for a
     column type the wire cannot carry, before any job runs."""
@@ -1352,14 +1353,14 @@ class _Conn(socketserver.StreamRequestHandler):
                 for blk in block_iter:
                     # a stock client's Cancel packet mid-stream stops the
                     # result (CH answers the truncated stream with EOS);
-                    # cancel the job group too so abandoned partitions of
-                    # the local iterator stop computing
+                    # cancel the job group too so a result window still
+                    # computing stops
                     if self._cancel_requested(r):
                         engine.cancel_query(qid)
                         break
                     # a KILL QUERY from ANOTHER connection must truncate
                     # this stream too — the reaper cancels the Spark jobs,
-                    # but between blocks (iterator prefetched) nothing
+                    # but between blocks (window computed) nothing
                     # would raise, so poll the flag and surface CH's
                     # QUERY_WAS_CANCELLED exception as the terminator
                     engine.check_not_killed()

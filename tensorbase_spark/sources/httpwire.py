@@ -48,9 +48,12 @@ Surface (mirrors the public upstream-CH HTTP semantics):
   with ``X-ClickHouse-Exception-Code`` + a ``Code: N. DB::Exception:``
   body, per the public interface;
 * SELECT results stream out CHUNKED — one chunk per Arrow batch of
-  ``batches.result_batches`` (one Spark partition in flight), so a result
-  never needs to fit on the driver heap; the query itself still runs
-  fully distributed (the HTTP endpoint is only the collect boundary).
+  ``batches.result_batches`` (one Spark job per window of
+  ``defaultParallelism`` partitions, one window held at a time), so a
+  result never needs to fit on the driver heap; the query itself still
+  runs fully distributed (the HTTP endpoint is only the collect boundary);
+* ``HttpClient.execute`` decodes a TabSeparatedWithNamesAndTypes answer
+  a column at a time (``decode_tsv_typed``).
 
 Authentication is accept-all, matching the reference's native front
 door (its ``on_auth`` accepts unconditionally).
@@ -63,6 +66,7 @@ import gzip as _gzip
 import io
 import json as _json
 import math
+import operator
 import os
 import re
 import threading
@@ -71,7 +75,7 @@ import zlib as _zlib
 import uuid as _uuid
 from decimal import Decimal
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from typing import Any, Iterable, Iterator
+from typing import Any, Callable, Iterable, Iterator
 from urllib.parse import parse_qs, quote, urlsplit
 
 import pyarrow as pa
@@ -2046,9 +2050,8 @@ class _HttpHandler(BaseHTTPRequestHandler):
         eng = self.server.engine  # type: ignore[attr-defined]
         sc = eng.spark.sparkContext
         qid = one.get("query_id") or ""
-        # the tracked entry's per-run unique job group — binding the
-        # helper thread to the bare query_id would leave its job outside
-        # the cancellable group (and invisible to the tracker below)
+        # the tracked entry's per-run unique job group, whose tasks the
+        # tracker below counts
         jgrp = eng.job_group_for(qid) if qid else ""
         interval = max(
             int(one.get("http_headers_progress_interval_ms") or 100), 10
@@ -2057,12 +2060,9 @@ class _HttpHandler(BaseHTTPRequestHandler):
         err: list = []
 
         def pull():
-            # a fresh Python thread carries no Spark local properties —
-            # rebind the request's job group so the prefetched job stays
-            # in the group and killable via KILL QUERY
+            # a window pulled here runs in the request's job group:
+            # result_batches re-applies it on whichever thread pulls
             try:
-                sc.setLocalProperty("spark.jobGroup.id", jgrp)
-                sc.setLocalProperty("spark.job.interruptOnCancel", "true")
                 c = next(chunks, None)
                 if c is not None:
                     got.append(c)
@@ -2246,30 +2246,66 @@ def _map_exception(e: Exception) -> tuple[int, int]:
 # the client
 # ---------------------------------------------------------------------------
 
-def _typed_from_text(s: str | None, ch_type: str) -> Any:
-    if s is None:
-        return None
+def _text_parser(ch_type: str) -> Callable[[str], Any] | None:
+    """The parser of one non-NULL text cell of CH type ``ch_type``, or
+    None when the text is the value."""
     base = ch_type
     if base.startswith("Nullable(") and base.endswith(")"):
         base = base[9:-1]
     if base == "Bool":
-        return s.strip().lower() in ("true", "1", "t")
+        return lambda s: s.strip().lower() in ("true", "1", "t")
     if base in _INT_SPEC:
-        return int(s)
+        return int
     if base in ("Float32", "Float64"):
-        return float(s)
+        return float
     if base.startswith("Decimal("):
-        return Decimal(s)
+        return Decimal
     if base == "Date":
-        return _dt.date.fromisoformat(s)
+        return _dt.date.fromisoformat
     if base.startswith("DateTime"):
-        return _dt.datetime.fromisoformat(s)
+        return _dt.datetime.fromisoformat
     if base.startswith("Array("):
-        return [
-            _typed_from_text(x, base[6:-1]) if x is not None else None
-            for x in _parse_array_text(s)
-        ]
-    return s
+        inner = _text_parser(base[6:-1]) or str
+        return lambda s: [None if x is None else inner(x)
+                          for x in _parse_array_text(s)]
+    return None
+
+
+def decode_tsv_typed(data: bytes) -> tuple[list[str], list[str], list[tuple]]:
+    """A TabSeparatedWithNamesAndTypes body as (names, types, rows), each
+    value parsed from its text by the column's type; empty lines are
+    skipped.
+
+    The body is split into columns once and each column converted with
+    one parser (``int``, ``float``, ``Decimal``, ``date.fromisoformat``,
+    ...); ``tsv_unescape`` runs only on cells that hold a backslash."""
+    lines = data.decode().split("\n")
+    names = [tsv_unescape(x) for x in lines[0].split("\t")] if lines[0] else []
+    types = lines[1].split("\t") if len(lines) > 1 else []
+    lines = [ln for ln in lines[2:] if ln]
+    n = len(types)
+    if not n:
+        return names, types, [()] * len(lines)
+    if set(map(operator.methodcaller("count", "\t"), lines)) - {n - 1}:
+        # a failure after the header went out ends the body with its text
+        bad = next(ln for ln in lines if ln.count("\t") != n - 1)
+        raise ValueError(f"TSV row of {bad.count(chr(9)) + 1} cells for "
+                         f"{n} columns: {bad[:500]!r}")
+    cells = "\t".join(lines).split("\t") if lines else []
+    cols = [_tsv_column(cells[j::n], t) for j, t in enumerate(types)]
+    return names, types, list(zip(*cols))
+
+
+def _tsv_column(col: list[str], ch_type: str) -> list:
+    if "\\" in "\t".join(col):
+        col = [None if c == "\\N" else tsv_unescape(c) if "\\" in c else c
+               for c in col]
+    parse = _text_parser(ch_type)
+    if parse is None:
+        return col
+    if None in col:
+        return [None if c is None else parse(c) for c in col]
+    return list(map(parse, col))
 
 
 class HttpClient:
@@ -2367,21 +2403,7 @@ class HttpClient:
             )
         if not is_read:
             return [], [], []
-        lines = data.decode().split("\n")
-        names = [tsv_unescape(x) for x in lines[0].split("\t")] if lines[0] else []
-        types = lines[1].split("\t") if len(lines) > 1 else []
-        rows = []
-        for ln in lines[2:]:
-            if ln == "":
-                continue
-            cells = ln.split("\t")
-            rows.append(tuple(
-                _typed_from_text(
-                    None if c == "\\N" else tsv_unescape(c), t
-                )
-                for c, t in zip(cells, types)
-            ))
-        return names, types, rows
+        return decode_tsv_typed(data)
 
     def insert_rows(self, table: str, names: list[str], rows: list[tuple],
                     fmt: str = "JSONEachRow",

@@ -32,11 +32,14 @@ Protocol scope (matches the reference server's reachable surface):
   errorcodes.rs code + sqlstate.
 
 Scale note: the server streams rows out a batch at a time
-(``batches.result_batches``, one Spark partition in flight, one socket
+(``batches.result_batches``, one Spark job per window of
+``defaultParallelism`` partitions, one window held at a time, one socket
 write per Arrow batch), so a SELECT result never needs to fit on the
 driver heap all at once; the query itself still runs fully distributed —
 the wire endpoint is only the collect boundary, same as the reference's
-single-node resultset writer.
+single-node resultset writer.  ``MySQLClient.query`` reads a resultset's
+row packets first and decodes them a column at a time
+(``decode_text_rows``).
 """
 
 from __future__ import annotations
@@ -951,7 +954,7 @@ class _MyConn(socketserver.StreamRequestHandler):
         Polls the kill flag between batches (the shared
         engine.kill_checked helper): a KILL QUERY from another
         connection cancels the victim's Spark jobs, but between jobs
-        (iterator prefetched) nothing would raise — same seam the
+        (window computed) nothing would raise — same seam the
         native door closes between blocks (VERDICT r11 #6)."""
         engine = self.server.engine  # type: ignore[attr-defined]
         head = bytearray()
@@ -1129,7 +1132,7 @@ class MySQLClient:
         for _ in range(ncols):
             cols.append(self._parse_column_def(self.pio.recv()))
         self._expect_eof()
-        rows: list[tuple] = []
+        pkts: list[bytes] = []
         while True:
             pkt = self.pio.recv()
             if pkt is None:
@@ -1138,8 +1141,8 @@ class MySQLClient:
                 raise RuntimeError(self._err_msg(pkt))
             if pkt[0] == 0xFE and len(pkt) < 9:
                 break  # EOF
-            rows.append(self._parse_text_row(pkt, cols))
-        return cols, rows
+            pkts.append(pkt)
+        return cols, decode_text_rows(pkts, [t for _, t in cols])
 
     def query_drop(self, sql: str) -> None:
         self.query(sql)
@@ -1276,19 +1279,6 @@ class MySQLClient:
         name, coltype, _ = cls._parse_column_def_full(pkt)
         return name, coltype
 
-    @staticmethod
-    def _parse_text_row(pkt: bytes, cols: list[tuple[str, int]]) -> tuple:
-        pos = 0
-        vals: list[Any] = []
-        for _, coltype in cols:
-            if pkt[pos] == 0xFB:
-                vals.append(None)
-                pos += 1
-                continue
-            raw, pos = read_lenenc_bytes(pkt, pos)
-            vals.append(_from_text(raw, coltype))
-        return tuple(vals)
-
 
 def _param_type(v: Any) -> int:
     """Pick the binary-protocol type tag for a Python parameter value."""
@@ -1309,23 +1299,101 @@ def _param_type(v: Any) -> int:
     return MYSQL_TYPE_VARCHAR  # str / Decimal as text
 
 
-def _from_text(raw: bytes, coltype: int) -> Any:
-    text = raw.decode("utf-8")
-    if coltype in (
-        MYSQL_TYPE_TINY,
-        MYSQL_TYPE_SHORT,
-        MYSQL_TYPE_LONG,
-        MYSQL_TYPE_INT24,
-        MYSQL_TYPE_LONGLONG,
-        MYSQL_TYPE_YEAR,
-    ):
-        return int(text)
-    if coltype in (MYSQL_TYPE_FLOAT, MYSQL_TYPE_DOUBLE):
-        return float(text)
-    if coltype == MYSQL_TYPE_DECIMAL:
-        return Decimal(text)
-    if coltype == MYSQL_TYPE_DATE:
-        return _dt.date.fromisoformat(text)
-    if coltype in (MYSQL_TYPE_DATETIME, MYSQL_TYPE_TIMESTAMP):
-        return _dt.datetime.fromisoformat(text)
-    return text
+# column type -> (the Arrow type pyarrow parses the text as, Python parser)
+_TEXT_NUMBERS = {
+    **dict.fromkeys((MYSQL_TYPE_TINY, MYSQL_TYPE_SHORT, MYSQL_TYPE_LONG,
+                     MYSQL_TYPE_INT24, MYSQL_TYPE_LONGLONG, MYSQL_TYPE_YEAR),
+                    (pa.int64(), int)),
+    MYSQL_TYPE_FLOAT: (pa.float64(), float),
+    MYSQL_TYPE_DOUBLE: (pa.float64(), float),
+}
+_TEXT_PARSE = {
+    MYSQL_TYPE_DECIMAL: Decimal,
+    MYSQL_TYPE_DATE: _dt.date.fromisoformat,
+    MYSQL_TYPE_DATETIME: _dt.datetime.fromisoformat,
+    MYSQL_TYPE_TIMESTAMP: _dt.datetime.fromisoformat,
+}
+
+
+def decode_text_rows(pkts: list[bytes], coltypes: list[int]) -> list[tuple]:
+    """Text-protocol row packets as tuples of values converted by column
+    type (ints, floats, ``Decimal``, dates, datetimes, else ``str``).
+
+    The rows are decoded a column at a time: numpy reads every row's
+    lenenc prefix of the column at once (0xFB is NULL; the 2-, 3- and
+    8-byte prefixes of cells of 251 bytes or more are read per value),
+    gathers the cells into one Arrow column and pyarrow casts it."""
+    n = len(pkts)
+    if not n or not coltypes:
+        return [()] * n
+    buf = np.frombuffer(b"".join(pkts), dtype=np.uint8)
+    lens = np.fromiter(map(len, pkts), np.int64, n)
+    ends = np.cumsum(lens)
+    row0 = ends - lens
+    pos = row0
+    cols = []
+    for coltype in coltypes:
+        if (pos >= ends).any():
+            raise ValueError("text row shorter than its column count")
+        first = buf[pos]
+        null = first == 0xFB
+        size = first.astype(np.int64)
+        head = np.ones(n, dtype=np.int64)
+        size[null] = 0
+        for i in np.flatnonzero(first > 0xFB):
+            at = int(pos[i] - row0[i])
+            size[i], after = read_lenenc_int(pkts[i], at)
+            head[i] = after - at
+        start = pos + head
+        pos = start + size
+        if (pos > ends).any():
+            raise ValueError("text row cell runs past its packet")
+        cols.append(_parse_column(_gather(buf, start, size, null), coltype))
+    return list(zip(*cols))
+
+
+def _gather(buf: np.ndarray, start: np.ndarray, size: np.ndarray,
+            null: np.ndarray) -> pa.Array:
+    """The cells ``buf[start[i]:start[i] + size[i]]`` as one string column
+    (NULL where ``null``); invalid UTF-8 raises."""
+    offsets = np.zeros(len(start) + 1, dtype=np.int64)
+    np.cumsum(size, out=offsets[1:])
+    idx = np.repeat(start - offsets[:-1], size) + np.arange(offsets[-1])
+    valid = (pa.py_buffer(np.packbits(~null, bitorder="little"))
+             if null.any() else None)
+    arr = pa.Array.from_buffers(
+        pa.large_binary(), len(start),
+        [valid, pa.py_buffer(offsets), pa.py_buffer(buf[idx])])
+    return arr.cast(pa.large_string())
+
+
+def _parse_column(arr: pa.Array, coltype: int) -> list:
+    """Python values of one text column, as ``int(text)``, ``float(text)``
+    and the ``_TEXT_PARSE`` parsers give them.  pyarrow parses plain
+    integers and floats; text it refuses (a sign, an integer beyond
+    int64) goes through the Python parser."""
+    number = _TEXT_NUMBERS.get(coltype)
+    if number is None:
+        parse = _TEXT_PARSE.get(coltype)
+    else:
+        try:
+            return _py_list(arr.cast(number[0]))
+        except pa.ArrowInvalid:
+            parse = number[1]
+    values = _py_list(arr)
+    if parse is None:
+        return values
+    if arr.null_count:
+        return [None if v is None else parse(v) for v in values]
+    return list(map(parse, values))
+
+
+def _py_list(arr: pa.Array) -> list:
+    """``arr.to_pylist()`` of a string or number column, through numpy
+    (pyarrow's own builds a scalar per value, ~20x slower)."""
+    if not arr.null_count or pa.types.is_large_string(arr.type):
+        return arr.to_numpy(zero_copy_only=False).tolist()
+    values = arr.fill_null(0).to_numpy().tolist()
+    for i in np.flatnonzero(arr.is_null().to_numpy(zero_copy_only=False)):
+        values[i] = None
+    return values

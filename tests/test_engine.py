@@ -1653,6 +1653,55 @@ def test_system_parts_introspection(engine):
     engine.sql("drop table sp_u")
 
 
+def test_system_parts_reports_key_values(engine):
+    """system.parts reports a partition by its key value, not Spark's
+    %XX-escaped directory name: ``b/c`` and ``2021-03-14 02:30:00``."""
+    engine.sql("create table spk_s (k String, v Int64) partition by k")
+    engine.sql("insert into spk_s values ('b/c', 1), ('a=b%', 2), ('plain', 3)")
+    engine.sql("create table spk_t (dt DateTime, v Int64) partition by dt")
+    engine.sql("insert into spk_t values ('2021-03-14 02:30:00', 1)")
+    got = sorted(
+        (r.table, r.partition, r.rows)
+        for r in engine.sql(
+            "select table, partition, rows from system.parts "
+            "where table in ('spk_s', 'spk_t')"
+        ).collect()
+    )
+    assert got == [("spk_s", "a=b%", 1), ("spk_s", "b/c", 1),
+                   ("spk_s", "plain", 1), ("spk_t", "2021-03-14 02:30:00", 1)]
+    engine.sql("drop table spk_s")
+    engine.sql("drop table spk_t")
+
+
+def test_partition_values_with_spaces(engine):
+    """DROP/DETACH/ATTACH/MOVE PARTITION name a quoted value holding a
+    space, as a DateTime identity key has: '2021-03-14 02:30:00'."""
+    for t in ("fdt", "fdt2"):
+        engine.sql(f"create table {t} (dt DateTime, x Int64) partition by dt")
+    engine.sql(
+        "insert into fdt values ('2021-03-14 02:30:00', 1), "
+        "('2021-03-14 02:30:00', 2), ('2021-03-15 00:00:00', 4)"
+    )
+
+    def tot(t="fdt"):
+        r = engine.sql(f"select coalesce(sum(x), 0) as s, count(*) as n from {t}")
+        return tuple(r.collect()[0])
+
+    v = "'2021-03-14 02:30:00'"
+    engine.sql(f"alter table fdt detach partition {v}")
+    assert tot() == (4, 1)
+    engine.sql(f"alter table fdt attach partition {v}")
+    assert tot() == (7, 3)
+    engine.sql(f"alter table fdt move partition {v} to table fdt2")
+    assert tot() == (4, 1) and tot("fdt2") == (3, 2)
+    engine.sql(f"alter table fdt2 drop partition {v}")
+    assert tot("fdt2") == (0, 0)
+    engine.sql("alter table fdt drop partition '2021-03-15 00:00:00'")
+    assert tot() == (0, 0)
+    engine.sql("drop table fdt")
+    engine.sql("drop table fdt2")
+
+
 def test_system_tables_and_columns(engine):
     """system.tables / system.columns: declared-BQL metadata, catalog-only."""
     engine.sql(
@@ -3712,3 +3761,12 @@ def test_kill_five_concurrent_victims_reaper_contention(engine):
     ).count() > 0:
         time.sleep(0.2)
     assert engine.sql("show processlist").count() == 0
+
+
+def test_sessions_skip_pyspark_call_site_capture(spark):
+    """``get_spark`` turns PySpark's call-site capture off (a static conf:
+    ~5 extra py4j round trips per Column call when on)."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()

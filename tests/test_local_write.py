@@ -156,7 +156,7 @@ def test_table_with_files_from_both_writers(engine):
     assert (r.n, r.d) == (15, 15)
     assert len(engine.spark.sql("show partitions lw_both").collect()) == 3
     assert [p[:2] for p in _parts(engine, "lw_both")] == [
-        ("__HIVE_DEFAULT_PARTITION__", 6), ("a", 6), ("b%2Fc", 3)]
+        ("__HIVE_DEFAULT_PARTITION__", 6), ("a", 6), ("b/c", 3)]
     assert sorted(
         r.k for r in engine.sql("select k from lw_both where k = 'b/c'").collect()
     ) == ["b/c"] * 3

@@ -1,7 +1,9 @@
 """The doors' shared result path (``sources/batches.result_batches``)
 end to end: the Python values it yields equal a classic ``collect()``,
-an abandoned result leaves no thread and no processlist entry behind,
-and column types the doors print as text answer as before."""
+one Spark job runs per window of ``defaultParallelism`` partitions and
+stays killable on any thread, a failing query answers an error on every
+door, an abandoned result leaves no thread and no processlist entry
+behind, and column types the doors print as text answer as before."""
 
 from __future__ import annotations
 
@@ -68,11 +70,126 @@ def test_batches_yield_the_values_collect_returns(spark):
     assert got == want
 
 
+def _jobs_of(spark, group: str, fn):
+    """(fn(), the number of Spark jobs it ran) with ``group`` set."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "result windows")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("nparts", [1, 4, 9])
+def test_one_job_per_window_in_partition_order(spark, nparts):
+    """A result of n partitions runs ceil(n / defaultParallelism) jobs (a
+    4-partition result one and a 9-partition result three on 4 cores),
+    and its rows arrive in collect()'s order."""
+    step = spark.sparkContext.defaultParallelism
+    for sql in (
+        f"select id, cast(id * 7 % 13 as string) s from range(0, 1000, 1, {nparts})",
+        f"select id, id * 7 % 13 m from range(0, 1000, 1, {nparts}) "
+        "order by m desc, id",
+    ):
+        df = spark.sql(sql)
+        want = [tuple(r) for r in df.collect()]
+        got, jobs = _jobs_of(spark, f"win-{uuid.uuid4().hex[:8]}", lambda: [
+            tuple(r.values()) for b in batches.result_batches(df)
+            for r in b.to_pylist()])
+        assert got == want
+        if "order by" not in sql:
+            assert jobs == -(-nparts // step)
+
+
+@pytest.mark.parametrize("helper_thread", [False, True])
+def test_kill_cancels_the_second_window(spark, helper_thread):
+    """KILL QUERY while the second window's job runs cancels it — also
+    when a thread that never joined the request's job group pulls it."""
+    eng = TensorBaseEngine(spark)
+    sc = spark.sparkContext
+    step = sc.defaultParallelism
+    # the first window answers at once; the second window's tasks sleep
+    # for a minute unless interrupted
+    q = (f"select id, case when spark_partition_id() >= {step} then "
+         "reflect('java.lang.Thread', 'sleep', cast(60000 as bigint)) end z "
+         f"from range(0, {2 * step}, 1, {2 * step})")
+    qid = f"kw-{uuid.uuid4().hex[:8]}"
+    got, err = [], []
+
+    def pull(stream):
+        try:
+            got.extend(stream)
+        except Exception as e:
+            err.append(e)
+
+    def kill_when_second_window_runs(group):
+        deadline = time.time() + 60
+        while time.time() < deadline:
+            if len(sc.statusTracker().getJobIdsForGroup(group)) >= 2 and \
+                    sc.statusTracker().getActiveJobsIds():
+                break
+            time.sleep(0.05)
+        eng.sql(f"kill query where query_id = '{qid}'")
+
+    t0 = time.time()
+    with eng.track_query(q, query_id=qid):
+        group = eng.job_group_for(qid)
+        stream = batches.result_batches(spark.sql(q))
+        killer = threading.Thread(target=kill_when_second_window_runs,
+                                  args=(group,))
+        killer.start()
+        if helper_thread:
+            t = threading.Thread(target=pull, args=(stream,))
+            t.start()
+            t.join(90)
+        else:
+            pull(stream)
+        killer.join(90)
+    assert time.time() - t0 < 45
+    assert err, "the second window was not cancelled"
+    assert len(got) == step  # window 1
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    assert wait_processlist_drained(eng) == 0
+
+
+FINAL_STAGE_FAILS = (
+    "select k, if(c > 0, raise_error('boom'), c) as v from "
+    "(select number % 3 as k, count(*) as c from numbers(100) group by k)"
+)
+# fails in the third window of a 9-partition result: after rows went out
+LATE_WINDOW_FAILS = (
+    "select id, if(id = 95, raise_error('late boom'), id) as v "
+    "from range(0, 100, 1, 9)"
+)
+
+
+@pytest.mark.parametrize("q", [FINAL_STAGE_FAILS, LATE_WINDOW_FAILS])
+def test_failing_query_answers_an_error_on_each_door(doors, q):
+    """A query that fails in its final stage answers an exception on
+    each door, and the same client then answers ``select 1``."""
+    eng, ports = doors
+    with chnative.NativeClient(port=ports["native"]) as c:
+        with pytest.raises(Exception, match="boom"):
+            c.execute(q)
+        assert c.execute("select 1 as x")[1] == [(1,)]
+    with httpwire.HttpClient(port=ports["http"]) as h:
+        with pytest.raises(Exception, match="boom"):
+            h.execute(q)
+        assert h.execute("select 1 as x")[2] == [(1,)]
+    with mysqlwire.MySQLClient(port=ports["mysql"]) as m:
+        with pytest.raises(Exception, match="boom"):
+            m.query(q)
+        assert m.query("select 1 as x")[1] == [(1,)]
+    assert wait_processlist_drained(eng) == 0
+
+
 def _serving_threads(spark) -> int:
-    """JVM threads serving a local-iterator socket to this process."""
+    """JVM threads serving a result window's socket to this process
+    (``PythonRDD.serveIterator`` names them ``serve RDD <id> ...``)."""
     jthreads = spark._jvm.java.lang.Thread.getAllStackTraces().keySet()
     return sum(1 for t in jthreads.toArray()
-               if "serve toLocalIterator" in t.getName())
+               if t.getName().startswith("serve RDD"))
 
 
 def _back_to(count, baseline: int, timeout_s: float = 20.0) -> int:
