@@ -1,28 +1,55 @@
 """Similarity search over embedding columns (array<float>).
 
-- brute-force cosine top-k: the exact baseline.  Query set broadcast against
-  the corpus; dot products via zip_with/aggregate — JVM-side, no Python.
-- IVF (inverted-file) top-k: the scale path.  Corpus is bucketed by nearest
-  centroid once (one shuffle, reusable partitioning); queries probe only the
-  nprobe nearest centroid buckets, so per-query work is corpus/k_centroids *
-  nprobe instead of the full corpus.  At 100 TB the bucketed corpus would be
-  written bucketBy(centroid_id) so repeated query batches never reshuffle.
+Operators:
 
-Centroids are deterministic k-means: trained on a bounded, hash-ordered
-sample driver-side (the standard IVF practice — index libraries train coarse
-quantizers on a sample, never the corpus), maximin init + fixed Lloyd
-iterations in numpy.  No runtime randomness anywhere, so results are
-reproducible and oracle-checkable.
+- brute_force_topk: the exact baseline.  One mapInPandas scan of the corpus
+  with the collected query vectors in the closure; each Arrow batch keeps
+  its top-(k+1) per query and a window ranks the survivors.
+- pq_topk / ivfpq_topk: product-quantized ADC scans (plain, and bucketed by
+  coarse centroid) with the exact cosine of every per-batch survivor
+  computed inside the same scan; two q_id windows (ADC cut, exact re-rank)
+  share one Exchange.  build_ivfpq_index / ivfpq_search_indexed persist and
+  search the code table.
+- ivf_topk / ivf_search_indexed, lsh_topk: bucketed ANN — queries probe
+  k-means buckets (or sign-LSH buckets), candidates join on the bucket key
+  and only candidates are scored.  The corpus is bucketed once (one
+  shuffle); a persisted IVF index is partitioned by centroid_id, so a probe
+  reads nprobe of nlist directories.
+- embedding_near_dup_pairs, semantic_contamination, label_knn_classify:
+  pair scans (bucketed GEMM per centroid; broadcast crossJoins).
+
+Every piece of work has one implementation, shared by all operators:
+
+- numpy kernels: ``_unit`` (unit rows), ``_cos_rows`` (row-wise float64
+  einsum cosine, zero norm -> 0.0 — also the body of the Arrow ``cosine``
+  UDF), ``_order``/``_nearest`` (the (score desc, id asc, NaN last) top-n
+  cut), ``_pq_codes`` (nearest codeword per subspace), ``_train_codebooks``
+  (per-subspace k-means) and ``_train_centroids_np`` (spherical k-means);
+- ``_topk_scan`` + ``_top_cut``: the Arrow top-k scan skeleton and its
+  per-batch cut; ``_adc_slices``: the IVF-PQ ADC per same-centroid slice;
+- ``_query_side``: the query set collected once, with its ADC lookup
+  tables and IVF probe sets;
+- ``_top_rows``/``_rank_tail``: the (score desc, c_id asc) window and the
+  rank <= k, round(cos, 6) result shape; ``_probe_frame``/``_score_probes``:
+  the distributed IVF probe ranking and candidate scoring.
+
+Centroids and codebooks are deterministic k-means, trained driver-side on a
+bounded, hash-ordered sample (index libraries train quantizers on a sample,
+never the corpus): maximin init + fixed Lloyd iterations in numpy.  No
+runtime randomness anywhere, so results are reproducible and
+oracle-checkable.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
 
 def _dot_expr(a, b) -> F.Column:
@@ -51,25 +78,134 @@ def cosine_expr(a, b) -> F.Column:
     return F.when(den > 0, _dot_expr(a, b) / den).otherwise(F.lit(0.0))
 
 
-# DoubleType() instance (not the "double" DDL string): string return types
-# are parsed through the active SparkSession, which does not exist yet at
-# import time — a DataType instance keeps module import session-free.
-@pandas_udf(DoubleType())
+# ---- numpy kernels ----------------------------------------------------------
+
+
+def _unit(X: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm; zero rows stay zero."""
+    n = np.linalg.norm(X, axis=1, keepdims=True)
+    return X / np.where(n > 0, n, 1.0)
+
+
+def _norms(X: np.ndarray) -> np.ndarray:
+    return np.sqrt(np.einsum("ij,ij->i", X, X))
+
+
+def _cos_rows(a: np.ndarray, b: np.ndarray, nb: np.ndarray | None = None) -> np.ndarray:
+    """Row-wise float64 cosine of two (n, dim) matrices: one einsum for the
+    dots, one per side for the norms (``nb``: b's norms, when the caller
+    already holds them).  A zero norm gives 0.0, never NaN (NaN sorts above
+    everything in Spark).  Per-row reductions do not depend on which other
+    rows share the call, so batch composition never changes a score."""
+    num = np.einsum("ij,ij->i", a, b)
+    den = _norms(a) * (_norms(b) if nb is None else nb)
+    return np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
+
+
+def _order(S: np.ndarray, ids: np.ndarray, n: int) -> np.ndarray:
+    """Column indices of each row's ``n`` best scores: score desc, ties to
+    the lower id, NaN last — the order of Spark's (score DESC NULLS LAST,
+    id ASC) window."""
+    return np.lexsort((np.broadcast_to(ids, S.shape), -S), axis=1)[:, :n]
+
+
+def _nearest(S: np.ndarray, ids: np.ndarray, n: int) -> np.ndarray:
+    """The ids of each row's ``n`` best-scoring columns.  With unit
+    centroid rows, dot order is cosine order, so ``S = X @ C.T`` ranks
+    centroids by cosine."""
+    return ids[_order(S, ids, n)]
+
+
+def _top_cut(s, ids, top, qi, q_ids, col):
+    """One per-batch (or per-slice) top cut of a (len(qi), len(ids)) score
+    matrix: each query's ``top`` best candidates as (q_id, c_id, <col>)
+    column arrays, plus the query row and candidate index of every kept
+    pair.  A global top-n row ranks <= n inside any batch or slice that
+    holds it, so a cut of n+1 never depends on batch boundaries."""
+    o = _order(s, ids, top)
+    rep = np.repeat(qi, o.shape[1])
+    flat = o.ravel()
+    cut = {
+        "q_id": q_ids[rep],
+        "c_id": ids[flat],
+        col: np.take_along_axis(s, o, axis=1).ravel(),
+    }
+    return cut, rep, flat
+
+
+def _pq_codes(X: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """Nearest codeword per subspace (codebooks (m, ksub, dsub)):
+    argmin ||x-c||^2 = argmin -2 x.c + ||c||^2, one GEMM per subspace,
+    ties to the lowest code."""
+    m, _ks, dsub = books.shape
+    out = np.empty((len(X), m), dtype=np.int32)
+    for j in range(m):
+        xs = X[:, j * dsub : (j + 1) * dsub]
+        d = -2.0 * (xs @ books[j].T) + (books[j] ** 2).sum(axis=1)
+        out[:, j] = np.argmin(d, axis=1)
+    return out
+
+
+def _ivfpq_codes(Xn: np.ndarray, cents: np.ndarray, books: np.ndarray):
+    """IVF-PQ encoding of unit rows: nearest coarse centroid, then the PQ
+    codes of the residual."""
+    cid = np.argmax(Xn @ cents.T, axis=1)
+    return cid, _pq_codes(Xn - cents[cid], books)
+
+
+def _train_codebooks(x: np.ndarray, m: int, ksub: int, iters: int = 8) -> np.ndarray:
+    """Deterministic product-quantizer training (Jégou et al. 2011): split
+    the rows into m contiguous subvectors and run an independent L2 k-means
+    per subspace — maximin init from row 0 of the hash order, a fixed Lloyd
+    count, ties to the lowest index, empty cells keep their codeword.
+    Returns codebooks of shape (m, min(ksub, n), dim // m)."""
+    dim = x.shape[1]
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    dsub = dim // m
+    ks = min(ksub, len(x))
+    books = np.empty((m, ks, dsub))
+    for j in range(m):
+        xs = x[:, j * dsub : (j + 1) * dsub]
+        chosen = [0]
+        d2 = ((xs - xs[0]) ** 2).sum(axis=1)
+        for _ in range(1, ks):
+            nxt = int(np.argmax(d2))
+            chosen.append(nxt)
+            d2 = np.minimum(d2, ((xs - xs[nxt]) ** 2).sum(axis=1))
+        cb = xs[chosen].copy()
+        for _ in range(iters):
+            # argmin ||x-c||^2 as in _pq_codes, but with the (n, ks) distance
+            # matrix kept bound through the update loop: freed there, glibc
+            # hands the buffer back to the OS and every Lloyd iteration
+            # faults it in again (measured ~1.4x slower training)
+            dist = -2.0 * (xs @ cb.T) + (cb**2).sum(axis=1)
+            assign = np.argmin(dist, axis=1)
+            for c in range(ks):
+                members = xs[assign == c]
+                if len(members):
+                    cb[c] = members.mean(axis=0)
+        books[j] = cb
+    return books
+
+
+# ---- Spark helpers ----------------------------------------------------------
+
+
+@pandas_udf(T.DoubleType())
 def _cosine_pudf(a: pd.Series, b: pd.Series) -> pd.Series:
     # Arrow hands each array column as a Series of np arrays; stacking gives
-    # (batch, dim) matrices and one einsum per batch does all the dots.
-    # NULL embeddings yield NULL (not a stage-killing np.stack crash); zero
-    # vectors yield 0.0, never NaN (NaN sorts above everything in Spark).
+    # (batch, dim) matrices for one _cos_rows per batch.  NULL embeddings
+    # yield NULL (not a stage-killing np.stack crash).  The return type is a
+    # DataType instance: a DDL string would be parsed through the active
+    # SparkSession, which does not exist yet at import time.
     valid = (a.notna() & b.notna()).to_numpy()
     out = np.full(len(a), np.nan)  # NaN -> Arrow null -> Spark NULL
     if valid.any():
-        ma = np.stack(a[valid].to_numpy()).astype(np.float64)
-        mb = np.stack(b[valid].to_numpy()).astype(np.float64)
-        num = np.einsum("ij,ij->i", ma, mb)
-        den = np.sqrt(np.einsum("ij,ij->i", ma, ma)) * np.sqrt(
-            np.einsum("ij,ij->i", mb, mb)
+        out[valid] = _cos_rows(
+            np.stack(a[valid].to_numpy()).astype(np.float64),
+            np.stack(b[valid].to_numpy()).astype(np.float64),
         )
-        out[valid] = np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
     return pd.Series(out)
 
 
@@ -118,6 +254,54 @@ def _spread(
     return df.repartition(target, F.col(id_col))
 
 
+def _topk_scan(emb, queries, id_col, vec_col, n, cols, score, corpus=None):
+    """The Arrow top-k scan: ONE mapInPandas over the corpus — by default
+    ``emb``'s (c_id, v), spread by _spread — with the query side in
+    ``score``'s closure.  ``score(pdf)`` yields each non-empty batch's top
+    cuts as (q_id, c_id, *cols) column dicts, each sent as one pandas
+    frame (adding a column to a built frame costs more than building it
+    whole); ids keep the callers' types (string ids included).  Self
+    matches drop after the scan, so cuts keep one row more than the window
+    downstream."""
+    schema = T.StructType(
+        [
+            T.StructField("q_id", queries.schema[id_col].dataType),
+            T.StructField("c_id", emb.schema[id_col].dataType),
+        ]
+        + [T.StructField(c, T.DoubleType()) for c in cols]
+    )
+
+    def _scan(batches):
+        for pdf in batches:
+            if len(pdf):
+                yield from (pd.DataFrame(cut) for cut in score(pdf) if len(cut["q_id"]))
+
+    if corpus is None:
+        corpus = _spread(
+            emb.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("v")),
+            "c_id",
+            n,
+        )
+    return corpus.mapInPandas(_scan, schema=schema).filter(
+        F.col("q_id") != F.col("c_id")
+    )
+
+
+def _top_rows(df: DataFrame, score: str, n: int, rank: str = "rank", tie: str = "c_id"):
+    """Each q_id's ``n`` best rows by (score desc, ``tie`` asc), numbered in
+    ``rank``.  A NULL score sorts last."""
+    w = W.partitionBy("q_id").orderBy(F.col(score).desc(), F.col(tie))
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= n)
+
+
+def _rank_tail(scored: DataFrame, k: int, c_id: str = "c_id") -> DataFrame:
+    """The result of every top-k operator: (q_id, c_id, rank, cos) with
+    rank <= k by (cos desc, c_id asc) and cos rounded to 6 places."""
+    return _top_rows(scored, "cos", k, tie=c_id).select(
+        "q_id", F.col(c_id).alias("c_id"), "rank", F.round("cos", 6).alias("cos")
+    )
+
+
 def brute_force_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -128,100 +312,32 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k: every query x corpus pair, ranked per query.
 
-    r15: ONE mapInPandas over the corpus with the collected query matrix
-    in the closure, emitting each Arrow batch's top-(k+1) rows per query
-    (the +1 absorbs a query matching itself; any global top-k row ranks
-    <= k+1 inside its own batch, so the cut is batch-boundary
-    independent).  The r14 shape crossJoined corpus x broadcast(queries)
-    and scored the PAIR stream through a pandas UDF — n·nq materialized
-    JVM rows and every corpus vector crossing the Python boundary nq
-    times (at sf1: 4M pair rows ~ 4 GB of duplicated vectors through
-    Arrow).  Now the corpus crosses ONCE and the window input is
-    batches x nq x (k+1) skinny rows.  The per-pair arithmetic is
-    _cosine_pudf's float64 einsum, op for op — per-row reductions are
-    independent of batch composition, so scores are bit-identical
-    (verified old-vs-new at sf0.01/sf0.1 + the SQL oracle hash).
-    NULL semantics preserved exactly: a NULL query or corpus vector
-    scores NaN -> Arrow null -> Spark NULL, which sorts NULLS LAST under
-    cos DESC with the c_id tiebreak — np.lexsort places NaN last the
-    same way."""
-    from pyspark.sql import types as T
+    One _topk_scan over the corpus with the collected query vectors in the
+    closure: each Arrow batch scores every query against its rows
+    (_cos_rows) and keeps each query's top-(k+1) — the +1 absorbs a query
+    matching itself.  The corpus crosses the Python boundary once and the
+    window input is batches x nq x (k+1) skinny rows.  A NULL query or
+    corpus vector scores NaN -> Spark NULL, which sorts last under cos DESC
+    with the c_id tiebreak, as np.lexsort places NaN last."""
+    qrows = queries.select(id_col, vec_col).collect()
+    q_ids = np.array([r[0] for r in qrows])
+    q_vecs = [None if r[1] is None else np.asarray(r[1], dtype=np.float64) for r in qrows]
+    every = np.arange(len(q_ids))
 
-    qrows = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-    ).collect()
-    q_ids = np.array([r.q_id for r in qrows])
-    q_vecs = [
-        None if r.q_vec is None else np.asarray(r.q_vec, dtype=np.float64)
-        for r in qrows
-    ]
-    top_n = k + 1
-
-    # ids keep the caller's type (string ids included); the per-batch
-    # lexsort tie-break orders them as Spark's c_id sort does
-    out_schema = T.StructType(
-        [
-            T.StructField("q_id", queries.schema[id_col].dataType),
-            T.StructField("c_id", emb.schema[id_col].dataType),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
-
-    def _scan(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["c_id"].to_numpy()
-            raw = pdf["c_vec"].to_numpy()
-            valid = np.array([v is not None for v in raw])
-            nb = len(ids)
-            X = (
-                np.stack(raw[valid]).astype(np.float64)
-                if valid.any()
-                else np.empty((0, 1))
-            )
-            nx = np.sqrt(np.einsum("ij,ij->i", X, X)) if len(X) else X[:, 0]
-            s = np.full((len(q_ids), nb), np.nan)
+    def _score(pdf):
+        ids = pdf["c_id"].to_numpy()
+        raw = pdf["v"].to_numpy()
+        valid = np.array([v is not None for v in raw])
+        s = np.full((len(q_ids), len(ids)), np.nan)
+        if valid.any():
+            X = np.stack(raw[valid]).astype(np.float64)
+            nx = _norms(X)
             for qi, qv in enumerate(q_vecs):
-                if qv is None or not valid.any():
-                    continue
-                ma = np.broadcast_to(qv, X.shape)
-                num = np.einsum("ij,ij->i", ma, X)
-                den = np.sqrt(np.einsum("ij,ij->i", ma, ma)) * nx
-                s[qi, valid] = np.where(
-                    den > 0, num / np.where(den > 0, den, 1.0), 0.0
-                )
-            top = min(top_n, nb)
-            order = np.lexsort((np.broadcast_to(ids, s.shape), -s), axis=1)[
-                :, :top
-            ]
-            rep = np.repeat(np.arange(len(q_ids)), top)
-            flat = order.ravel()
-            yield pd.DataFrame(
-                {
-                    "q_id": q_ids[rep],
-                    "c_id": ids[flat],
-                    "cos": np.take_along_axis(s, order, axis=1).ravel(),
-                }
-            )
+                if qv is not None:
+                    s[qi, valid] = _cos_rows(np.broadcast_to(qv, X.shape), X, nx)
+        yield _top_cut(s, ids, k + 1, every, q_ids, "cos")[0]
 
-    scored = (
-        _spread(
-            emb.select(
-                F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
-            ),
-            "c_id",
-            n,
-        )
-        .mapInPandas(_scan, schema=out_schema)
-        .filter(F.col("q_id") != F.col("c_id"))
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", F.col("rank"), F.round("cos", 6).alias("cos"))
-    )
+    return _rank_tail(_topk_scan(emb, queries, id_col, vec_col, n, ["cos"], _score), k)
 
 
 def semantic_contamination(
@@ -238,10 +354,9 @@ def semantic_contamination(
 
     Exact, not bucketed: benchmarks are tiny relative to a 100 TB corpus,
     so the right plan is broadcast(benchmark) x streaming corpus — a
-    map-side Arrow-batched cosine with NO shuffle of the corpus at all
-    (same shape as brute_force_topk).  If the benchmark side ever outgrows
-    the broadcast threshold, swap the benchmark side into the IVF index and
-    probe per corpus row."""
+    map-side Arrow-batched cosine with NO shuffle of the corpus at all.
+    If the benchmark side ever outgrows the broadcast threshold, swap the
+    benchmark side into the IVF index and probe per corpus row."""
     c = _spread(
         corpus.select(
             F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("c_vec")
@@ -262,24 +377,26 @@ def semantic_contamination(
     )
 
 
-def _collect_training_sample(
+def _sample_frame(
     emb: DataFrame, id_col: str, vec_col: str, sample_size: int = 4096
-) -> np.ndarray:
-    """The bounded hash-ordered training sample as a UNIT-NORMALIZED
-    (n, dim) float64 matrix — one collect job, shared by every trainer
-    that needs the same sample (r14: IVF-PQ used to collect the identical
-    rows twice, once for coarse centroids and once for residual
-    codebooks)."""
-    sample = (
+) -> DataFrame:
+    """The bounded training sample as (i, v): the ``sample_size`` non-NULL
+    rows lowest by (md5(id), id) — a uniform but reproducible pseudo-sample."""
+    return (
         emb.filter(F.col(vec_col).isNotNull())
         .select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
         .orderBy(F.md5(F.col("i").cast("string")), F.col("i"))
         .limit(sample_size)
-        .collect()
     )
-    x = np.array([r.v for r in sample], dtype=np.float64)
-    norms = np.linalg.norm(x, axis=1, keepdims=True)
-    return x / np.where(norms > 0, norms, 1.0)
+
+
+def _collect_training_sample(
+    emb: DataFrame, id_col: str, vec_col: str, sample_size: int = 4096
+) -> np.ndarray:
+    """The training sample as a UNIT-NORMALIZED (n, dim) float64 matrix —
+    one collect job, shared by every trainer that needs the same sample."""
+    rows = _sample_frame(emb, id_col, vec_col, sample_size).collect()
+    return _unit(np.array([r.v for r in rows], dtype=np.float64))
 
 
 def _train_centroids_np(
@@ -317,6 +434,21 @@ def _train_centroids_np(
     return cents
 
 
+def _centroid_frame(spark, C: np.ndarray, ids=None) -> DataFrame:
+    """The broadcastable (centroid_id long, cent_vec array<double>) table of
+    a centroid matrix (ids default to 0..k-1)."""
+    schema = T.StructType(
+        [
+            T.StructField("centroid_id", T.LongType(), False),
+            T.StructField("cent_vec", T.ArrayType(T.DoubleType()), False),
+        ]
+    )
+    ids = range(len(C)) if ids is None else ids
+    return spark.createDataFrame(
+        [(int(i), [float(v) for v in c]) for i, c in zip(ids, C)], schema
+    )
+
+
 def train_centroids(
     emb: DataFrame,
     n_centroids: int = 16,
@@ -338,18 +470,7 @@ def train_centroids(
     Returns a tiny (n_centroids)-row DataFrame (centroid_id, cent_vec) meant
     to be broadcast."""
     cents = _train_centroids_np(emb, n_centroids, id_col, vec_col, sample_size, iters)
-    spark = emb.sparkSession
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("centroid_id", T.LongType(), False),
-            T.StructField("cent_vec", T.ArrayType(T.DoubleType()), False),
-        ]
-    )
-    return spark.createDataFrame(
-        [(i, [float(v) for v in cents[i]]) for i in range(len(cents))], schema
-    )
+    return _centroid_frame(emb.sparkSession, cents)
 
 
 def _assign_multi(
@@ -361,17 +482,12 @@ def _assign_multi(
 ) -> DataFrame:
     """Assign every vector to its ``probes`` nearest centroids (multi-probe).
 
-    The centroid matrix rides INSIDE an Arrow-batched UDF (the same shape
-    the r7 fix gave embedding_near_dup_pairs._probe_ids): one corpus pass,
-    one GEMM per batch, n x probes output rows — never the old
-    crossJoin+window, which materialized n x k (vector, centroid) ROWS and
-    went quadratic once auto-sized k started growing with n (r8 sf10 sweep:
-    200k vectors x 196 centroids = 39M wide rows stalled the stage; this
-    pass finishes in seconds).  Ranking is identical to the old window —
-    cosine desc, centroid_id asc — because centroid rows are unit vectors,
-    so per-vector dot order == cosine order; NULL/zero vectors score 0
-    against every centroid and fall to the lowest centroid ids, exactly the
-    old NULLS-LAST + tie-break outcome."""
+    The centroid matrix rides INSIDE an Arrow-batched UDF: one corpus pass,
+    one GEMM per batch, n x probes output rows — never a crossJoin+window,
+    which materializes n x k (vector, centroid) ROWS and goes quadratic once
+    auto-sized k grows with n.  Ranking is cosine desc, centroid_id asc
+    (_nearest); NULL/zero vectors score 0 against every centroid and fall
+    to the lowest centroid ids, the NULLS-LAST + tie-break outcome."""
     rows = cents.orderBy("centroid_id").collect()
     C = np.array([r.cent_vec for r in rows], dtype=np.float64)
     ids = np.array([r.centroid_id for r in rows], dtype=np.int64)
@@ -389,10 +505,8 @@ def _assign_multi_np(
 ) -> DataFrame:
     """Numpy-core of _assign_multi: callers that already hold the centroid
     matrix driver-side (they just trained it) skip the DataFrame
-    round-trip collect job (r14)."""
+    round-trip collect job."""
     n_probe = min(probes, len(ids))
-
-    from pyspark.sql import types as T
 
     @pandas_udf(T.ArrayType(T.LongType()))
     def _top(v: pd.Series) -> pd.Series:
@@ -402,9 +516,7 @@ def _assign_multi_np(
         ]
         if not vals:
             return pd.Series([], dtype=object)
-        S = np.stack(vals) @ C.T
-        order = np.lexsort((np.broadcast_to(ids, S.shape), -S), axis=1)
-        return pd.Series([ids[t].tolist() for t in order[:, :n_probe]])
+        return pd.Series(list(_nearest(np.stack(vals) @ C.T, ids, n_probe)))
 
     return _spread(
         emb.select(F.col(id_col).alias("v_id"), F.col(vec_col).alias("v_vec")),
@@ -426,34 +538,13 @@ def assign_centroids(
     every vector is assigned to its nearest centroid by cosine.
 
     Returns (centroids, assigned) where assigned has centroid_id per row.
-    One broadcast join + one window — a single pass over the corpus."""
-    # train once, keep the matrix: building the centroid DataFrame AND
-    # collecting it back (the pre-r14 shape) paid a scheduled job just to
-    # round-trip numpy -> DataFrame -> numpy
-    cents_np = _train_centroids_np(emb, n_centroids, id_col, vec_col)
-    spark = emb.sparkSession
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("centroid_id", T.LongType(), False),
-            T.StructField("cent_vec", T.ArrayType(T.DoubleType()), False),
-        ]
-    )
-    cents = spark.createDataFrame(
-        [(i, [float(v) for v in cents_np[i]]) for i in range(len(cents_np))],
-        schema,
-    )
+    The trained matrix is kept driver-side, so assignment is one Arrow pass
+    over the corpus with no collect of the centroid table."""
+    cents = _train_centroids_np(emb, n_centroids, id_col, vec_col)
     assigned = _assign_multi_np(
-        emb,
-        cents_np,
-        np.arange(len(cents_np), dtype=np.int64),
-        1,
-        id_col,
-        vec_col,
-        n=n,
+        emb, cents, np.arange(len(cents), dtype=np.int64), 1, id_col, vec_col, n=n
     )
-    return cents, assigned
+    return _centroid_frame(emb.sparkSession, cents), assigned
 
 
 def auto_n_centroids(n: int, target_bucket: int, floor: int = 16, probes: int = 1) -> int:
@@ -470,6 +561,36 @@ def auto_n_bits(n: int, target_bucket: int, min_bits: int = 10) -> int:
     under ``target_bucket`` once n clears the floor's capacity."""
     ratio = max(2, -(-n // max(1, target_bucket)))
     return max(min_bits, (ratio - 1).bit_length())
+
+
+def _probe_frame(
+    queries: DataFrame, cents: DataFrame, nprobe: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Distributed IVF probe ranking: every query crossJoins the broadcast
+    centroid table and keeps its ``nprobe`` best (cos desc, centroid_id asc)
+    as (q_id, q_vec, centroid_id) rows.  A NULL query vector scores NULL
+    against every centroid, so it probes the lowest centroid ids."""
+    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
+    q_cent = q.crossJoin(F.broadcast(cents)).withColumn(
+        "cos_c", cosine(F.col("q_vec"), F.col("cent_vec"))
+    )
+    return _top_rows(q_cent, "cos_c", nprobe, "rn", "centroid_id").select(
+        "q_id", "q_vec", "centroid_id"
+    )
+
+
+def _score_probes(
+    probes: DataFrame, cands: DataFrame, k: int, c_id: str, c_vec: str
+) -> DataFrame:
+    """Candidate scoring of the IVF paths: probe rows join their buckets'
+    candidates on centroid_id, self matches drop, the Arrow cosine scores
+    the pairs and the rank tail keeps the top-k."""
+    scored = (
+        probes.join(cands, "centroid_id")
+        .filter(F.col("q_id") != F.col(c_id))
+        .withColumn("cos", cosine(F.col("q_vec"), F.col(c_vec)))
+    )
+    return _rank_tail(scored, k, c_id)
 
 
 def ivf_topk(
@@ -503,27 +624,8 @@ def ivf_topk(
             n = emb.count()
         n_centroids = auto_n_centroids(n, target_bucket)
     cents, assigned = assign_centroids(emb, n_centroids, id_col, vec_col, n=n)
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-    q_cent = q.crossJoin(F.broadcast(cents)).withColumn(
-        "cos_c", cosine(F.col("q_vec"), F.col("cent_vec"))
-    )
-    wq = W.partitionBy("q_id").orderBy(F.col("cos_c").desc(), F.col("centroid_id"))
-    probes = (
-        q_cent.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("q_id", "q_vec", "centroid_id")
-    )
-    scored = (
-        probes.join(assigned, "centroid_id")
-        .filter(F.col("q_id") != F.col("v_id"))
-        .withColumn("cos", cosine(F.col("q_vec"), F.col("v_vec")))
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("v_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", F.col("v_id").alias("c_id"), "rank", F.round("cos", 6).alias("cos"))
-    )
+    probes = _probe_frame(queries, cents, nprobe, id_col, vec_col)
+    return _score_probes(probes, assigned, k, "v_id", "v_vec")
 
 
 def _hyperplanes(dim: int, n_bits: int, n_tables: int) -> np.ndarray:
@@ -585,53 +687,35 @@ def lsh_topk(
         n_bits = auto_n_bits(n * max(1, probes), target_bucket, min_bits)
     if dim is None:
         # callers that know the embedding width (fixture metadata, catalog
-        # schema) pass ``dim`` and this probe job disappears (r14; it was
-        # one scheduled first() job per search)
+        # schema) pass ``dim`` and this probe job disappears
         dim = len(
             emb.select(vec_col).filter(F.col(vec_col).isNotNull()).first()[0]
         )
     planes = _hyperplanes(dim, n_bits, n_tables)
     powers = 1 << np.arange(n_bits)
-
-    from pyspark.sql import types as T
-
-    sig_schema = T.ArrayType(T.LongType())
-
-    @pandas_udf(sig_schema)
-    def _buckets(v: pd.Series) -> pd.Series:
-        out = []
-        for vec in v:
-            if vec is None:
-                out.append(None)
-                continue
-            x = np.asarray(vec, dtype=np.float64)
-            bits = (np.einsum("tbd,d->tb", planes, x) > 0).astype(np.int64)
-            out.append((bits @ powers).tolist())
-        return pd.Series(out)
-
     n_probes = max(1, min(probes, n_bits if n_bits else 1))
 
-    @pandas_udf(sig_schema)
-    def _probe_buckets(v: pd.Series) -> pd.Series:
-        # flat array of n_tables x n_probes buckets: for each table the
-        # base bucket, then single-bit flips in ascending |margin| order
-        out = []
-        for vec in v:
-            if vec is None:
-                out.append(None)
-                continue
-            x = np.asarray(vec, dtype=np.float64)
-            marg = np.einsum("tbd,d->tb", planes, x)
-            base = ((marg > 0).astype(np.int64) @ powers)  # (t,)
-            flip_order = np.argsort(np.abs(marg), axis=1)  # (t, b)
-            buckets = [base]
-            for j in range(n_probes - 1):
-                buckets.append(base ^ (1 << flip_order[:, j]))
-            out.append(np.stack(buckets, axis=1).reshape(-1).tolist())
-        return pd.Series(out)
+    def _bucket_udf(per_table: int):
+        @pandas_udf(T.ArrayType(T.LongType()))
+        def _buckets(v: pd.Series) -> pd.Series:
+            # flat array of n_tables x per_table buckets: for each table the
+            # base bucket, then single-bit flips in ascending |margin| order
+            out = []
+            for vec in v:
+                if vec is None:
+                    out.append(None)
+                    continue
+                marg = np.einsum("tbd,d->tb", planes, np.asarray(vec, dtype=np.float64))
+                buckets = [(marg > 0).astype(np.int64) @ powers]  # (t,)
+                if per_table > 1:
+                    flip = np.argsort(np.abs(marg), axis=1)  # (t, b)
+                    buckets += [buckets[0] ^ (1 << flip[:, j]) for j in range(per_table - 1)]
+                out.append(np.stack(buckets, axis=1).reshape(-1).tolist())
+            return pd.Series(out)
 
-    def bucketize(df: DataFrame, prefix: str, probe: bool) -> DataFrame:
-        udf = _probe_buckets if probe else _buckets
+        return _buckets
+
+    def bucketize(df: DataFrame, prefix: str, per_table: int) -> DataFrame:
         base = df.select(
             F.col(id_col).alias(f"{prefix}_id"),
             F.col(vec_col).alias(f"{prefix}_vec"),
@@ -641,9 +725,10 @@ def lsh_topk(
         d = base.select(
             f"{prefix}_id",
             f"{prefix}_vec",
-            F.posexplode(udf(F.col(f"{prefix}_vec"))).alias("pos", "bucket"),
+            F.posexplode(_bucket_udf(per_table)(F.col(f"{prefix}_vec"))).alias(
+                "pos", "bucket"
+            ),
         )
-        per_table = n_probes if probe else 1
         return d.select(
             f"{prefix}_id",
             f"{prefix}_vec",
@@ -651,8 +736,8 @@ def lsh_topk(
             "bucket",
         )
 
-    c = bucketize(emb, "c", probe=False)
-    q = bucketize(queries, "q", probe=n_probes > 1)
+    c = bucketize(emb, "c", 1)
+    q = bucketize(queries, "q", n_probes)
     # NOTE (r14, measured): scoring BEFORE the pair dedup (to shuffle
     # skinny (q_id, c_id, cos) rows instead of vector payloads) was tried
     # and REVERTED — a close pair co-occurs in up to n_tables x probes
@@ -667,13 +752,7 @@ def lsh_topk(
         .select("q_id", "q_vec", "c_id", "c_vec")
         .dropDuplicates(["q_id", "c_id"])
     )
-    scored = cand.withColumn("cos", cosine(F.col("q_vec"), F.col("c_vec")))
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank", F.round("cos", 6).alias("cos"))
-    )
+    return _rank_tail(cand.withColumn("cos", cosine(F.col("q_vec"), F.col("c_vec"))), k)
 
 
 def embedding_near_dup_pairs(
@@ -729,8 +808,6 @@ def embedding_near_dup_pairs(
         ).filter(F.col("cos") >= threshold)
         return scored.select("id_a", "id_b", F.round("cos", 6).alias("cos"))
 
-    from pyspark.sql import types as T
-
     if n_centroids is None:
         # hold the expected bucket size (n x probes / k) at target_bucket
         # so per-bucket GEMM work — the only quadratic term — is constant
@@ -742,19 +819,13 @@ def embedding_near_dup_pairs(
             n = emb.count()
         n_centroids = auto_n_centroids(n, target_bucket, probes=probes)
     cents = _train_centroids_np(emb, n_centroids, id_col, vec_col)
-    k = len(cents)
-    n_probe = min(probes, k)
+    cent_ids = np.arange(len(cents))
+    n_probe = min(probes, len(cents))
 
     @pandas_udf(T.ArrayType(T.LongType()))
     def _probe_ids(v: pd.Series) -> pd.Series:
-        # top-`n_probe` centroids by cosine, ties to the lowest centroid_id —
-        # identical ranking to the r2 window (cosine desc, centroid_id asc):
-        # centroid rows are unit vectors, so dot order == cosine order per v.
         X = np.stack(v.to_numpy()).astype(np.float64)
-        S = X @ cents.T  # (batch, k)
-        order = np.lexsort((np.broadcast_to(np.arange(k), S.shape), -S), axis=1)
-        top = order[:, :n_probe]
-        return pd.Series(list(top.astype(np.int64)))
+        return pd.Series(list(_nearest(X @ cents.T, cent_ids, n_probe)))
 
     assigned = _spread(
         emb.filter(F.col(vec_col).isNotNull()).select(
@@ -779,7 +850,7 @@ def embedding_near_dup_pairs(
     def _score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["v_id"].to_numpy()
         X = np.stack(pdf["v_vec"].to_numpy()).astype(np.float64)
-        norms = np.sqrt(np.einsum("ij,ij->i", X, X))
+        norms = _norms(X)
         safe = np.where(norms > 0, norms, 1.0)
         m = len(ids)
         out_a, out_b, out_c = [], [], []
@@ -837,9 +908,9 @@ def label_knn_classify(
         .filter(F.col("q_id") != F.col("c_id"))
         .withColumn("cos", cosine(F.col("q_vec"), F.col("c_vec")))
     )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
-    top = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    votes = top.groupBy("q_id", "c_label").agg(F.count("*").alias("votes"))
+    votes = _top_rows(scored, "cos", k).groupBy("q_id", "c_label").agg(
+        F.count("*").alias("votes")
+    )
     wv = W.partitionBy("q_id").orderBy(F.col("votes").desc(), F.col("c_label"))
     return (
         votes.withColumn("rn", F.row_number().over(wv))
@@ -883,7 +954,7 @@ def build_ivf_index(
     centroid_id, centroids as a side table.  This is the storage layout that
     makes ANN work at 100 TB — a probe reads only nprobe/nlist of the corpus
     via *directory-level partition pruning*, before parquet even opens a
-    footer.  Rebuild is a single pass (one broadcast join + window)."""
+    footer.  Rebuild is a single pass over the corpus."""
     cents, assigned = assign_centroids(emb, n_centroids, id_col, vec_col, n=n)
     assigned.select(
         F.col("v_id").alias(id_col), F.col("v_vec").alias(vec_col), "centroid_id"
@@ -918,9 +989,7 @@ def ivf_index_append(
 
 def _read_parquet_local(path: str):
     """A tiny side table read driver-side with pyarrow — a metadata-scale
-    read that spends ZERO Spark jobs (r14: the per-search spark.read +
-    crossJoin + window + localCheckpoint + distinct-collect chain cost 4
-    scheduled jobs per invocation for a table of nlist rows)."""
+    read that spends ZERO Spark jobs."""
     import pyarrow.parquet as pq
 
     return pq.read_table(path)
@@ -940,23 +1009,18 @@ def ivf_search_indexed(
     the partition column, so the scan shows PartitionFilters and touches only
     the probed directories (asserted in tests/test_plans.py).
 
-    r14: centroids load via pyarrow (no Spark job) and the per-query probe
-    ranking runs driver-side over the collected query matrix — the same
-    einsum float64 arithmetic `_cosine_pudf` applies, the same (cos desc,
-    centroid_id asc) order — replacing a crossJoin+window job, a
-    localCheckpoint materialization and a distinct-collect job with one
-    numpy pass (guide §1.2 step 1: remove whole jobs before tuning them).
-    Equality with the in-memory IVF path stays pinned in tests.
-
-    r15 (VERDICT r14 #6): the driver-side ranking only runs when the query
-    set is small enough to collect safely — above ``max_query_collect``
-    rows the pre-r14 distributed probe ranking (crossJoin + window over
-    broadcast centroids) takes over, so a large query table can never OOM
-    the driver.  Both paths produce identical results (pinned in tests:
-    the ranking is the same (cos desc, centroid_id asc) order with the
-    same NULLS-LAST behavior)."""
-    crows = _read_parquet_local(f"{path}/centroids").to_pylist()
-    crows.sort(key=lambda r: r["centroid_id"])
+    Centroids load via pyarrow (no Spark job).  A query set of at most
+    ``max_query_collect`` rows is collected and ranked against the
+    centroids driver-side, one _cos_rows per query; a larger one stays a
+    DataFrame and takes the distributed ranking (_probe_frame, as ivf_topk),
+    so a large query table can never OOM the driver.  Both rankings are
+    (cos desc, centroid_id asc) with NULL query vectors probing the lowest
+    centroid ids, so both paths give identical results (pinned in tests),
+    and both share the candidate scoring (_score_probes)."""
+    crows = sorted(
+        _read_parquet_local(f"{path}/centroids").to_pylist(),
+        key=lambda r: r["centroid_id"],
+    )
     C = np.array([r["cent_vec"] for r in crows], dtype=np.float64)
     cent_ids = np.array([r["centroid_id"] for r in crows], dtype=np.int64)
     vecs = spark.read.parquet(f"{path}/vectors")
@@ -964,117 +1028,37 @@ def ivf_search_indexed(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
     ).limit(max_query_collect + 1).collect()
     if len(qrows) > max_query_collect:
-        return _ivf_search_indexed_distributed(
-            spark, C, cent_ids, vecs, queries, k, nprobe, id_col, vec_col
+        # checkpointed: the collect below would otherwise re-run the
+        # centroid scoring when the returned plan executes
+        probes = _probe_frame(
+            queries, _centroid_frame(spark, C, cent_ids), nprobe, id_col, vec_col
+        ).localCheckpoint()
+        probe_ids = sorted(
+            {r.centroid_id for r in probes.select("centroid_id").distinct().collect()}
         )
-    n_probe = min(nprobe, len(cent_ids))
-    probe_rows = []
-    probe_ids_set: set[int] = set()
-    for r in qrows:
-        if r.q_vec is None:
-            # _cosine_pudf yields NULL cosines for a NULL query vector;
-            # under (cos desc NULLS LAST, centroid_id asc) that means the
-            # first n_probe centroid ids — replicate exactly
-            chosen = cent_ids[:n_probe]
-        else:
-            qv = np.asarray(r.q_vec, dtype=np.float64)
-            ma = np.broadcast_to(qv, C.shape)
-            num = np.einsum("ij,ij->i", ma, C)
-            den = np.sqrt(np.einsum("ij,ij->i", ma, ma)) * np.sqrt(
-                np.einsum("ij,ij->i", C, C)
-            )
-            cos = np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
-            order = np.lexsort((cent_ids, -cos))
-            chosen = cent_ids[order[:n_probe]]
-        for c in chosen:
-            probe_rows.append((r.q_id, r.q_vec, int(c)))
-            probe_ids_set.add(int(c))
-    from pyspark.sql import types as T
-
-    q_vec_type = queries.schema[vec_col].dataType
-    probes = spark.createDataFrame(
-        probe_rows,
-        T.StructType(
-            [
-                T.StructField("q_id", queries.schema[id_col].dataType),
-                T.StructField("q_vec", q_vec_type),
-                T.StructField("centroid_id", T.LongType()),
-            ]
-        ),
-    )
-    probe_ids = sorted(probe_ids_set)
-    candidates = vecs.filter(F.col("centroid_id").isin(probe_ids))
-    scored = (
-        probes.join(candidates, "centroid_id")
-        .filter(F.col("q_id") != F.col(id_col))
-        .withColumn("cos", cosine(F.col("q_vec"), F.col(vec_col)))
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", F.col(id_col).alias("c_id"), "rank", F.round("cos", 6).alias("cos"))
-    )
-
-
-def _ivf_search_indexed_distributed(
-    spark,
-    C: np.ndarray,
-    cent_ids: np.ndarray,
-    vecs: DataFrame,
-    queries: DataFrame,
-    k: int,
-    nprobe: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Distributed probe ranking for query sets too large to collect (the
-    pre-r14 plan shape): queries stay a DataFrame, each crossJoins the
-    broadcast centroid table and a per-query window keeps the nprobe best
-    (cos desc, centroid_id asc) — identical ranking to the driver-side
-    numpy path, including NULL query vectors falling to the first nprobe
-    centroid ids (NULL cosines sort last, ties break on centroid_id)."""
-    from pyspark.sql import types as T
-
-    cent_schema = T.StructType(
-        [
-            T.StructField("centroid_id", T.LongType(), False),
-            T.StructField("cent_vec", T.ArrayType(T.DoubleType()), False),
-        ]
-    )
-    cents = spark.createDataFrame(
-        [(int(cent_ids[i]), [float(x) for x in C[i]]) for i in range(len(cent_ids))],
-        cent_schema,
-    )
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-    q_cent = q.crossJoin(F.broadcast(cents)).withColumn(
-        "cos_c", cosine(F.col("q_vec"), F.col("cent_vec"))
-    )
-    wq = W.partitionBy("q_id").orderBy(F.col("cos_c").desc(), F.col("centroid_id"))
-    probes = (
-        q_cent.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("q_id", "q_vec", "centroid_id")
-        .localCheckpoint()  # the collect below would otherwise re-run the
-    )                       # centroid scoring when the returned plan executes
-    probe_ids = sorted(
-        {r.centroid_id for r in probes.select("centroid_id").distinct().collect()}
-    )
-    candidates = vecs.filter(F.col("centroid_id").isin(probe_ids))
-    scored = (
-        probes.join(candidates, "centroid_id")
-        .filter(F.col("q_id") != F.col(id_col))
-        .withColumn("cos", cosine(F.col("q_vec"), F.col(vec_col)))
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id", F.col(id_col).alias("c_id"), "rank",
-            F.round("cos", 6).alias("cos"),
+    else:
+        n_probe = min(nprobe, len(cent_ids))
+        probe_rows = []
+        for r in qrows:
+            if r.q_vec is None:
+                chosen = cent_ids[:n_probe]
+            else:
+                qv = np.broadcast_to(np.asarray(r.q_vec, dtype=np.float64), C.shape)
+                chosen = _nearest(_cos_rows(qv, C)[None], cent_ids, n_probe)[0]
+            probe_rows += [(r.q_id, r.q_vec, int(c)) for c in chosen]
+        probes = spark.createDataFrame(
+            probe_rows,
+            T.StructType(
+                [
+                    T.StructField("q_id", queries.schema[id_col].dataType),
+                    T.StructField("q_vec", queries.schema[vec_col].dataType),
+                    T.StructField("centroid_id", T.LongType()),
+                ]
+            ),
         )
-    )
+        probe_ids = sorted({c for *_, c in probe_rows})
+    candidates = vecs.filter(F.col("centroid_id").isin(probe_ids))
+    return _score_probes(probes, candidates, k, id_col, vec_col)
 
 
 def _train_pq_np(
@@ -1087,44 +1071,13 @@ def _train_pq_np(
     iters: int = 8,
     x: np.ndarray | None = None,
 ) -> np.ndarray:
-    """Deterministic product-quantizer training (FAISS PQ convention, public:
-    Jégou et al. 2011 "Product Quantization for Nearest Neighbor Search"):
-    split the (L2-normalized) vector into m contiguous subvectors and run an
-    independent small L2 k-means per subspace on the same bounded
-    hash-ordered sample train_centroids uses.  Maximin init + fixed Lloyd
-    count, ties to the lowest index — no seeds, bit-identical every run.
-    Returns codebooks of shape (m, ksub, dim//m).  ``x``: a pre-collected
-    unit-normalized sample matrix (skips the collect job)."""
+    """Product-quantizer codebooks (_train_codebooks, shape
+    (m, ksub, dim//m)) on the same bounded hash-ordered, L2-normalized
+    sample train_centroids uses.  ``x``: a pre-collected unit-normalized
+    sample matrix (skips the collect job)."""
     if x is None:
         x = _collect_training_sample(emb, id_col, vec_col, sample_size)
-    dim = x.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    ks = min(ksub, len(x))
-    books = np.empty((m, ks, dsub))
-    for j in range(m):
-        xs = x[:, j * dsub : (j + 1) * dsub]
-        # maximin init on L2 distance, start from row 0 of the hash order
-        chosen = [0]
-        d2 = ((xs - xs[0]) ** 2).sum(axis=1)
-        for _ in range(1, ks):
-            nxt = int(np.argmax(d2))
-            chosen.append(nxt)
-            d2 = np.minimum(d2, ((xs - xs[nxt]) ** 2).sum(axis=1))
-        cb = xs[chosen].copy()
-        for _ in range(iters):
-            # argmin over ||x-c||^2 = const - 2 x.c + ||c||^2: one GEMM per
-            # iter instead of the O(n*k*d) broadcast-subtract temporary
-            # (ties -> lowest code, np.argmin contract)
-            dist = -2.0 * (xs @ cb.T) + (cb**2).sum(axis=1)
-            assign = np.argmin(dist, axis=1)
-            for c in range(ks):
-                members = xs[assign == c]
-                if len(members):
-                    cb[c] = members.mean(axis=0)
-        books[j] = cb
-    return books
+    return _train_codebooks(x, m, ksub, iters)
 
 
 def pq_encode(
@@ -1138,26 +1091,58 @@ def pq_encode(
     codebooks ride the UDF closure (m*ksub*dsub doubles — KBs).  The encoded
     corpus is dim*8 / m bytes-per-vector smaller: the representation that
     makes 100 TB of embeddings scannable from memory."""
-    from pyspark.sql import types as T
-
-    m, ks, dsub = codebooks.shape
 
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def _codes(v: pd.Series) -> pd.Series:
-        X = np.stack(v.to_numpy()).astype(np.float64)
-        n = np.linalg.norm(X, axis=1, keepdims=True)
-        X = X / np.where(n > 0, n, 1.0)
-        out = np.empty((len(X), m), dtype=np.int32)
-        for j in range(m):
-            xs = X[:, j * dsub : (j + 1) * dsub]
-            # ||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2 -> argmin over c
-            d = -2.0 * (xs @ codebooks[j].T) + (codebooks[j] ** 2).sum(axis=1)
-            out[:, j] = np.argmin(d, axis=1)
-        return pd.Series(list(out))
+        X = _unit(np.stack(v.to_numpy()).astype(np.float64))
+        return pd.Series(list(_pq_codes(X, codebooks)))
 
     return emb.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("v_id"), _codes(F.col(vec_col)).alias("codes")
     )
+
+
+class _Queries(NamedTuple):
+    """The query side of the PQ scans (see _query_side)."""
+
+    ids: np.ndarray
+    Q: np.ndarray  # (nq, dim) raw float64 rows: the exact re-rank's input
+    Qn: np.ndarray  # unit rows
+    lut: np.ndarray  # (m, nq, ksub): LUT[j] = Qn_j . codebook_j
+    sim_qc: np.ndarray | None = None  # (nq, nlist) query . centroid
+    probing: dict | None = None  # centroid id -> rows of the queries probing it
+
+
+def _query_side(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    books: np.ndarray,
+    cents: np.ndarray | None = None,
+    nprobe: int = 0,
+    rows=None,
+) -> _Queries:
+    """The non-NULL query set collected once (one job, unless the caller
+    passes the (id, vector) rows it already holds), normalized, with its
+    per-subspace ADC lookup tables and — given coarse centroids — each
+    query's ``nprobe`` nearest centroids.  An empty or all-NULL query set
+    gives (0, dim) matrices, so every scan over it emits nothing and the
+    operator returns an empty result with its usual schema."""
+    if rows is None:
+        rows = (
+            queries.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col).collect()
+        )
+    m, _ks, dsub = books.shape
+    Q = np.array([r[1] for r in rows], dtype=np.float64).reshape(len(rows), m * dsub)
+    Qn = _unit(Q)
+    lut = np.stack([Qn[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)])
+    qs = _Queries(np.array([r[0] for r in rows]), Q, Qn, lut)
+    if cents is None:
+        return qs
+    sim_qc = Qn @ cents.T
+    order = np.argsort(-sim_qc, axis=1)[:, : min(nprobe, len(cents))]
+    probing = {c: np.nonzero((order == c).any(axis=1))[0] for c in range(len(cents))}
+    return qs._replace(sim_qc=sim_qc, probing=probing)
 
 
 def pq_topk(
@@ -1175,164 +1160,68 @@ def pq_topk(
     IVFPQ+refine shape):
 
     1. train codebooks on a bounded sample (driver, deterministic);
-    2. encode the corpus once (Arrow pass — the only full-corpus work);
-    3. ADC scan: per partition, score every code against every query with a
-       per-query lookup table (LUT[j][code] = q_sub . codeword) — a numpy
-       gather+sum per batch, no float vectors touched — and emit only each
-       batch's top candidates per query;
-    4. global candidate cut to k*cand_mult per query (window over the skinny
-       ADC rows), then EXACT cosine re-rank of just those candidates.
+    2. ONE _topk_scan encodes each corpus batch, scores every code against
+       every query with per-query lookup tables (LUT[j][code] = q_sub .
+       codeword — a numpy gather+sum, no float dot products), keeps each
+       batch's top-(k*cand_mult+1) candidates per query and computes their
+       EXACT cosine (_cos_rows) from the raw vectors already in hand;
+    3. two q_id windows — the global ADC cut to k*cand_mult per query, then
+       the exact re-rank over the carried cos — share one Exchange, with no
+       join after the scan.
 
     Queries ride the closure as a (nq, dim) matrix (bounded by contract —
-    same envelope as brute_force_topk's broadcast).  Corpus bytes moved:
-    m ints per row in stage 3, k*cand_mult vectors per query in stage 4."""
-    from pyspark.sql import types as T
+    same envelope as brute_force_topk's broadcast)."""
+    import hashlib
 
-    # ONE collect job fetches the training sample AND the query set (r14;
-    # they were two scheduled jobs): a tagged union, with the sample branch
-    # re-sorted driver-side by the exact Spark ordering key (md5 of the
-    # stringified id, then id — hashlib.md5 hexdigest == Spark md5() text)
-    # so training sees the identical row order regardless of how the union
-    # returns partitions.
-    import hashlib as _hashlib
-
-    from pyspark.sql import types as _T
-
-    # the driver-side re-sort below replays Spark's md5(cast(id as string))
-    # ordering via hashlib.md5(str(id)) — only valid when Python's str()
-    # rendering equals Spark's string cast, i.e. integral/string ids
-    # (ADVICE r14: float/decimal/timestamp ids would silently reorder the
-    # training sample).  Other id types take the separate Spark-ordered
-    # sample collect instead.
-    _id_dt = emb.schema[id_col].dataType
-    _union_ok = isinstance(
-        _id_dt,
-        (_T.ByteType, _T.ShortType, _T.IntegerType, _T.LongType, _T.StringType),
+    # ONE collect job fetches the training sample AND the query set: a
+    # tagged union, with the sample branch re-sorted driver-side by the
+    # exact Spark ordering key (hashlib.md5 hexdigest == Spark md5() text)
+    # so training sees the identical row order however the union returns
+    # partitions.  The re-sort replays md5(cast(id as string)) via
+    # md5(str(id)) — valid only where Python's str() equals Spark's string
+    # cast, i.e. integral/string ids; other id types (float, decimal,
+    # timestamp) take a separate Spark-ordered sample collect instead.
+    union_ok = isinstance(
+        emb.schema[id_col].dataType,
+        (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.StringType),
     )
-    samp_b = (
-        emb.filter(F.col(vec_col).isNotNull())
-        .select(
-            F.lit(0).alias("b"),
-            F.col(id_col).alias("i"),
-            F.col(vec_col).alias("v"),
-        )
-        .orderBy(F.md5(F.col("i").cast("string")), F.col("i"))
-        .limit(4096)
-    )
+    samp_b = _sample_frame(emb, id_col, vec_col).select(F.lit(0).alias("b"), "i", "v")
     q_b = queries.filter(F.col(vec_col).isNotNull()).select(
         F.lit(1).alias("b"), F.col(id_col).alias("i"), F.col(vec_col).alias("v")
     )
-    if _union_ok:
+    if union_ok:
         rows = samp_b.unionByName(q_b).collect()
         srows = sorted(
             (r for r in rows if r["b"] == 0),
-            key=lambda r: (_hashlib.md5(str(r["i"]).encode()).hexdigest(), r["i"]),
+            key=lambda r: (hashlib.md5(str(r["i"]).encode()).hexdigest(), r["i"]),
         )
     else:
         srows = samp_b.collect()  # Spark-ordered: no driver-side re-sort
         rows = srows + q_b.collect()  # b-tags still partition the two sets
-    xs = np.array([r["v"] for r in srows], dtype=np.float64)
-    nn = np.linalg.norm(xs, axis=1, keepdims=True)
-    xs = xs / np.where(nn > 0, nn, 1.0)
-    books = _train_pq_np(emb, m, ksub, id_col, vec_col, x=xs)
-
-    qrows = [r for r in rows if r["b"] == 1]
-    q_ids = np.array([r["i"] for r in qrows])
-    Q = np.stack([np.asarray(r["v"], dtype=np.float64) for r in qrows])
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Qn = Q / np.where(qn > 0, qn, 1.0)
-    dsub = Q.shape[1] // m
-    # LUT[j]: (nq, ksub) dot products of query subvector vs codebook entries
-    lut = np.stack(
-        [Qn[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)]
+    xs = _unit(np.array([r["v"] for r in srows], dtype=np.float64))
+    books = _train_codebooks(xs, m, ksub)
+    qs = _query_side(
+        queries, id_col, vec_col, books, rows=[(r["i"], r["v"]) for r in rows if r["b"]]
     )
+    every = np.arange(len(qs.ids))
     k2 = k * cand_mult
 
-    out_schema = T.StructType(
-        [
-            T.StructField("q_id", queries.schema[id_col].dataType),
-            T.StructField("c_id", emb.schema[id_col].dataType),
-            T.StructField("adc", T.DoubleType()),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
+    def _score(pdf):
+        ids = pdf["c_id"].to_numpy()
+        X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+        C = _pq_codes(_unit(X), books)
+        s = qs.lut[0][:, C[:, 0]]  # sum_j LUT[j][:, C[:, j]]: (nq, nb)
+        for j in range(1, m):
+            s = s + qs.lut[j][:, C[:, j]]
+        cut, rep, flat = _top_cut(s, ids, k2 + 1, every, qs.ids, "adc")
+        cut["cos"] = _cos_rows(qs.Q[rep], X[flat])
+        yield cut
 
-    def _encode_adc_scan(batches):
-        # r14 fused encode + ADC into ONE Arrow pass; r15 (VERDICT r14 #5
-        # and what's-wrong #4) additionally computes the EXACT cosine for
-        # each per-batch survivor inside the same pass: the raw query
-        # matrix and the batch's raw vectors are both already in hand, so
-        # the re-rank's broadcast join + second Python eval + the
-        # post-ArrowEvalPython re-shuffle disappear from the plan, and
-        # candidate rows carry two doubles instead of the raw vector
-        # (the r14 carried-vector volume is gone entirely).  The cosine
-        # arithmetic is _cosine_pudf's, op for op: float64 stacks of the
-        # raw vectors, one einsum for num, two for the norms, 0.0 for
-        # zero norms — bit-identical to the r14 join re-rank (verified by
-        # result-set equality sweeps + the sim_pq_rerank_full oracle).
-        # The per-batch top-(k2+1) cut is batch-boundary-independent (any
-        # global top-k2 row ranks <= k2 inside its own batch), so results
-        # are identical under any partitioning.
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["v_id"].to_numpy()
-            raw = pdf["v"].to_numpy()
-            X = np.stack(raw).astype(np.float64)
-            n = np.linalg.norm(X, axis=1, keepdims=True)
-            Xn = X / np.where(n > 0, n, 1.0)
-            C = np.empty((len(X), m), dtype=np.int32)
-            for j in range(m):
-                xs = Xn[:, j * dsub : (j + 1) * dsub]
-                d = -2.0 * (xs @ books[j].T) + (books[j] ** 2).sum(axis=1)
-                C[:, j] = np.argmin(d, axis=1)
-            # sum_j LUT[j][:, C[:, j]] -> (nq, nb) approximate dot products
-            s = lut[0][:, C[:, 0]]
-            for j in range(1, m):
-                s = s + lut[j][:, C[:, j]]
-            nb = len(ids)
-            top = min(k2 + 1, nb)  # +1 absorbs a query matching itself
-            # per-batch top candidates per query; ties -> lower c_id (lexsort)
-            order = np.lexsort((np.broadcast_to(ids, s.shape), -s), axis=1)[:, :top]
-            qi = np.repeat(np.arange(len(q_ids)), top)
-            flat = order.ravel()
-            ma = Q[qi]        # raw float64 queries, row per candidate pair
-            mb = X[flat]      # raw float64 batch vectors
-            num = np.einsum("ij,ij->i", ma, mb)
-            den = np.sqrt(np.einsum("ij,ij->i", ma, ma)) * np.sqrt(
-                np.einsum("ij,ij->i", mb, mb)
-            )
-            cos = np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
-            yield pd.DataFrame(
-                {
-                    "q_id": q_ids[qi],
-                    "c_id": ids[flat],
-                    "adc": np.take_along_axis(s, order, axis=1).ravel(),
-                    "cos": cos,
-                }
-            )
-
-    adc = (
-        _spread(
-            emb.filter(F.col(vec_col).isNotNull()).select(
-                F.col(id_col).alias("v_id"), F.col(vec_col).alias("v")
-            ),
-            "v_id",
-            n,
-        )
-        .mapInPandas(_encode_adc_scan, schema=out_schema)
-        .filter(F.col("q_id") != F.col("c_id"))
+    adc = _topk_scan(
+        emb.filter(F.col(vec_col).isNotNull()),
+        queries, id_col, vec_col, n, ["adc", "cos"], _score,
     )
-    wa = W.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("c_id"))
-    cand = adc.withColumn("rn", F.row_number().over(wa)).filter(F.col("rn") <= k2)
-    # exact re-rank over the already-carried cos column: both windows are
-    # q_id-partitioned, so they share ONE Exchange — no joins after the scan
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank", F.round("cos", 6).alias("cos"))
-    )
+    return _rank_tail(_top_rows(adc, "adc", k2, "rn"), k)
 
 
 def l2_normalize(
@@ -1390,9 +1279,6 @@ def _pca_moments_np(
     centroid/codebook training, PCA moments are cheap to make exact: the
     reduction is a fixed-size matrix sum, so corpus size only adds
     partials, never state."""
-    import pandas as _pd
-    from pyspark.sql import types as T
-
     schema = T.StructType(
         [
             T.StructField("n", T.LongType()),
@@ -1413,7 +1299,7 @@ def _pca_moments_np(
             gg = X.T @ X
             g = gg if g is None else g + gg
         if n:
-            yield _pd.DataFrame({"n": [n], "s": [s.tolist()], "g": [g.ravel().tolist()]})
+            yield pd.DataFrame({"n": [n], "s": [s.tolist()], "g": [g.ravel().tolist()]})
 
     parts = (
         emb.filter(F.col(vec_col).isNotNull())
@@ -1463,7 +1349,6 @@ def pca_project(
     (mean, components) ride the closure.  The k-dim output is the
     dimensionality-reduction lever: downstream ANN/clustering shuffles
     shrink by dim/k."""
-    from pyspark.sql import types as T
 
     @pandas_udf(T.ArrayType(T.DoubleType()))
     def _proj(v: pd.Series) -> pd.Series:
@@ -1495,18 +1380,35 @@ def ivfpq_topk(
     scores candidates from lookup tables, and an exact re-rank fixes the
     top-k.
 
-    One Arrow pass encodes the corpus (nearest centroid + residual codes —
-    centroids AND codebooks ride the closure); search touches only probed
-    buckets via an applyInPandas group per centroid (the same equi-join-on-
-    centroid_id topology the plain IVF uses, so at 100 TB the encoded
-    corpus would be written PARTITIONED BY centroid_id and a probe reads
-    nprobe directories of m-byte codes).  Residual PQ matters: residuals
-    are centered near zero, so the same codebook budget quantizes them
-    ~one centroid-radius finer than raw vectors."""
+    In memory this is ONE corpus pass (_ivfpq_topk_fused); at 100 TB the
+    encoded corpus is written PARTITIONED BY centroid_id (build_ivfpq_index)
+    and a probe reads nprobe directories of m-byte codes.  Residual PQ
+    matters: residuals are centered near zero, so the same codebook budget
+    quantizes them ~one centroid-radius finer than raw vectors."""
     cents, books = _train_ivfpq_np(emb, n_centroids, m, ksub, id_col, vec_col)
     return _ivfpq_topk_fused(
         emb, queries, cents, books, k, nprobe, cand_mult, id_col, vec_col, n=n
     )
+
+
+def _adc_slices(qs: _Queries, cid, codes, ids, top):
+    """IVF-PQ ADC per same-centroid slice of a batch: each slice is scored
+    against the queries probing its centroid — LUT sum over j = 0..m-1,
+    then the query.centroid term (q.(centroid + residual)) — and cut to
+    each query's ``top`` best (_top_cut).  Yields (cut, query row of each
+    kept pair, batch row of each kept pair)."""
+    for c in np.unique(cid):
+        qi = qs.probing.get(int(c))
+        if qi is None or not len(qi):
+            continue
+        rows = np.nonzero(cid == c)[0]
+        C = codes[rows]
+        s = qs.lut[0][qi][:, C[:, 0]]
+        for j in range(1, len(qs.lut)):
+            s = s + qs.lut[j][qi][:, C[:, j]]
+        s = s + qs.sim_qc[qi, int(c)][:, None]
+        cut, rep, flat = _top_cut(s, ids[rows], top, qi, qs.ids, "adc")
+        yield cut, rep, rows[flat]
 
 
 def _ivfpq_topk_fused(
@@ -1521,123 +1423,28 @@ def _ivfpq_topk_fused(
     vec_col: str,
     n: int | None = None,
 ) -> DataFrame:
-    """In-memory IVF-PQ search as ONE corpus pass (r15, VERDICT r14 #7):
-    encode (nearest centroid + residual codes), per-centroid-slice ADC,
-    AND the exact cosine for each per-slice survivor — all inside a single
-    mapInPandas over the raw embeddings.  The r14 shape ran TWO chained
-    Python stages (encode, then score) and re-ranked by joining the
-    candidate ids back against a SECOND full scan of the embeddings plus a
-    broadcast-join of the queries and a third Python eval; with the raw
-    vectors already in hand inside the scan, all of that collapses to two
-    q_id-partitioned windows sharing one Exchange.  Every piece of
-    arithmetic is element-for-element the r14 code's (_ivfpq_encode's
-    encode, _score_slice's LUT+sim_qc ADC, _cosine_pudf's float64 einsum
-    cosine), and per-slice top-(k2+1) cuts are slice-boundary-independent,
-    so results are bit-identical (pinned by the indexed-vs-memory equality
-    test and the sim_ivfpq_full_cover oracle).  The INDEXED path keeps the
-    join re-rank: its code table deliberately stores m-byte codes, not raw
+    """In-memory IVF-PQ search as ONE _topk_scan over the raw embeddings:
+    encode (_ivfpq_codes), per-centroid-slice ADC (_adc_slices) AND the
+    exact cosine of each per-slice survivor, then the same two
+    q_id-partitioned windows as pq_topk.  The INDEXED path keeps a join
+    re-rank: its code table deliberately stores m-byte codes, not raw
     vectors (_ivfpq_search)."""
-    from pyspark.sql import types as T
-
-    m, _ks, dsub = books.shape
-    nlist = len(cents)
-    qrows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-        .collect()
-    )
-    q_ids = np.array([r.q_id for r in qrows])
-    Q = np.stack([np.asarray(r.q_vec, dtype=np.float64) for r in qrows])
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Qn = Q / np.where(qn > 0, qn, 1.0)
-    sim_qc = Qn @ cents.T
-    order_q = np.argsort(-sim_qc, axis=1)[:, : min(nprobe, nlist)]
-    probing = {
-        int(c): np.nonzero((order_q == c).any(axis=1))[0] for c in range(nlist)
-    }
-    lut = np.stack(
-        [Qn[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)]
-    )
+    qs = _query_side(queries, id_col, vec_col, books, cents, nprobe)
     k2 = k * cand_mult
 
-    out_schema = T.StructType(
-        [
-            T.StructField("q_id", queries.schema[id_col].dataType),
-            T.StructField("c_id", emb.schema[id_col].dataType),
-            T.StructField("adc", T.DoubleType()),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
+    def _score(pdf):
+        ids = pdf["c_id"].to_numpy()
+        X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+        cid, codes = _ivfpq_codes(_unit(X), cents, books)
+        for cut, rep, sel in _adc_slices(qs, cid, codes, ids, k2 + 1):
+            cut["cos"] = _cos_rows(qs.Q[rep], X[sel])
+            yield cut
 
-    def _scan(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["v_id"].to_numpy()
-            raw = pdf["v"].to_numpy()
-            X = np.stack(raw).astype(np.float64)
-            nn = np.linalg.norm(X, axis=1, keepdims=True)
-            Xn = X / np.where(nn > 0, nn, 1.0)
-            cid = np.argmax(Xn @ cents.T, axis=1)
-            R = Xn - cents[cid]
-            codes = np.empty((len(X), m), dtype=np.int32)
-            for j in range(m):
-                rj = R[:, j * dsub : (j + 1) * dsub]
-                d = -2.0 * (rj @ books[j].T) + (books[j] ** 2).sum(axis=1)
-                codes[:, j] = np.argmin(d, axis=1)
-            for c in np.unique(cid):
-                qi = probing.get(int(c))
-                if qi is None or not len(qi):
-                    continue
-                mask = cid == c
-                sids = ids[mask]
-                C = codes[mask]
-                s = lut[0][qi][:, C[:, 0]]
-                for j in range(1, m):
-                    s = s + lut[j][qi][:, C[:, j]]
-                s = s + sim_qc[qi, int(c)][:, None]
-                top = min(k2 + 1, len(sids))
-                o = np.lexsort((np.broadcast_to(sids, s.shape), -s), axis=1)[
-                    :, :top
-                ]
-                rep = np.repeat(qi, top)
-                flat = o.ravel()
-                sel = np.nonzero(mask)[0][flat]
-                ma = Q[rep]
-                mb = X[sel]
-                num = np.einsum("ij,ij->i", ma, mb)
-                den = np.sqrt(np.einsum("ij,ij->i", ma, ma)) * np.sqrt(
-                    np.einsum("ij,ij->i", mb, mb)
-                )
-                cos = np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
-                yield pd.DataFrame(
-                    {
-                        "q_id": q_ids[rep],
-                        "c_id": sids[flat],
-                        "adc": np.take_along_axis(s, o, axis=1).ravel(),
-                        "cos": cos,
-                    }
-                )
-
-    adc = (
-        _spread(
-            emb.filter(F.col(vec_col).isNotNull()).select(
-                F.col(id_col).alias("v_id"), F.col(vec_col).alias("v")
-            ),
-            "v_id",
-            n,
-        )
-        .mapInPandas(_scan, schema=out_schema)
-        .filter(F.col("q_id") != F.col("c_id"))
+    adc = _topk_scan(
+        emb.filter(F.col(vec_col).isNotNull()),
+        queries, id_col, vec_col, n, ["adc", "cos"], _score,
     )
-    wa = W.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("c_id"))
-    cand = adc.withColumn("rn", F.row_number().over(wa)).filter(F.col("rn") <= k2)
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank", F.round("cos", 6).alias("cos"))
-    )
+    return _rank_tail(_top_rows(adc, "adc", k2, "rn"), k)
 
 
 def _train_ivfpq_np(
@@ -1648,40 +1455,13 @@ def _train_ivfpq_np(
     id_col: str,
     vec_col: str,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Driver-side IVF-PQ training on the bounded hash-ordered sample:
-    spherical coarse centroids + per-subspace residual codebooks.  The
-    sample is collected ONCE and shared between the coarse k-means and the
-    residual codebooks (r14; it was two identical collect jobs)."""
+    """Driver-side IVF-PQ training on the bounded hash-ordered sample,
+    collected ONCE: spherical coarse centroids, then per-subspace
+    codebooks on the residuals to each row's nearest centroid."""
     xs = _collect_training_sample(emb, id_col, vec_col)
-    cents = _train_centroids_np(
-        emb, n_centroids, id_col, vec_col, x=xs
-    )  # unit rows
-    dim = xs.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
+    cents = _train_centroids_np(emb, n_centroids, id_col, vec_col, x=xs)  # unit rows
     res = xs - cents[np.argmax(xs @ cents.T, axis=1)]
-    # per-subspace k-means on RESIDUALS (maximin init, fixed Lloyd, GEMM form)
-    ks = min(ksub, len(res))
-    books = np.empty((m, ks, dsub))
-    for j in range(m):
-        rj = res[:, j * dsub : (j + 1) * dsub]
-        chosen = [0]
-        d2 = ((rj - rj[0]) ** 2).sum(axis=1)
-        for _ in range(1, ks):
-            nxt = int(np.argmax(d2))
-            chosen.append(nxt)
-            d2 = np.minimum(d2, ((rj - rj[nxt]) ** 2).sum(axis=1))
-        cb = rj[chosen].copy()
-        for _ in range(8):
-            dist = -2.0 * (rj @ cb.T) + (cb**2).sum(axis=1)
-            assign = np.argmin(dist, axis=1)
-            for c in range(ks):
-                members = rj[assign == c]
-                if len(members):
-                    cb[c] = members.mean(axis=0)
-        books[j] = cb
-    return cents, books
+    return cents, _train_codebooks(res, m, ksub)
 
 
 def _ivfpq_encode(
@@ -1692,13 +1472,11 @@ def _ivfpq_encode(
     vec_col: str,
     n: int | None = None,
 ) -> DataFrame:
-    """One Arrow pass: nearest centroid + residual codes per vector."""
-    from pyspark.sql import types as T
-
-    m, _ks, dsub = books.shape
+    """One Arrow pass: nearest centroid + residual codes per vector, with
+    v_id in the caller's id type."""
     enc_schema = T.StructType(
         [
-            T.StructField("v_id", T.LongType()),
+            T.StructField("v_id", emb.schema[id_col].dataType),
             T.StructField("centroid_id", T.IntegerType()),
             T.StructField("codes", T.ArrayType(T.IntegerType())),
         ]
@@ -1706,19 +1484,14 @@ def _ivfpq_encode(
 
     def _encode(batches):
         for pdf in batches:
-            ids = pdf["v_id"].to_numpy()
-            X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            nn = np.linalg.norm(X, axis=1, keepdims=True)
-            X = X / np.where(nn > 0, nn, 1.0)
-            cid = np.argmax(X @ cents.T, axis=1)
-            R = X - cents[cid]
-            codes = np.empty((len(X), m), dtype=np.int32)
-            for j in range(m):
-                rj = R[:, j * dsub : (j + 1) * dsub]
-                d = -2.0 * (rj @ books[j].T) + (books[j] ** 2).sum(axis=1)
-                codes[:, j] = np.argmin(d, axis=1)
+            X = _unit(np.stack(pdf["v"].to_numpy()).astype(np.float64))
+            cid, codes = _ivfpq_codes(X, cents, books)
             yield pd.DataFrame(
-                {"v_id": ids, "centroid_id": cid.astype(np.int32), "codes": list(codes)}
+                {
+                    "v_id": pdf["v_id"].to_numpy(),
+                    "centroid_id": cid.astype(np.int32),
+                    "codes": list(codes),
+                }
             )
 
     return _spread(
@@ -1734,92 +1507,32 @@ def _ivfpq_search(
     enc: DataFrame,
     emb: DataFrame,
     queries: DataFrame,
-    cents: np.ndarray,
-    books: np.ndarray,
+    qs: _Queries,
     k: int,
-    nprobe: int,
     cand_mult: int,
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    from pyspark.sql import types as T  # noqa: F401 (schema types below)
-
-    m, _ks, dsub = books.shape
-    nlist = len(cents)
-    # ---- query side: probe sets + per-bucket ADC via applyInPandas ----
-    qrows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-        .collect()
-    )
-    q_ids = np.array([r.q_id for r in qrows])
-    Q = np.stack([np.asarray(r.q_vec, dtype=np.float64) for r in qrows])
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Qn = Q / np.where(qn > 0, qn, 1.0)
-    sim_qc = Qn @ cents.T  # (nq, nlist): query . centroid term of the score
-    order = np.argsort(-sim_qc, axis=1)[:, : min(nprobe, nlist)]
-    probing = {int(c): np.nonzero((order == c).any(axis=1))[0] for c in range(nlist)}
-    lut = np.stack(
-        [Qn[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)]
-    )
+    """ADC scan of a (partition-pruned) code table, then the global
+    k*cand_mult cut and an exact re-rank that joins the raw embeddings
+    back.  The scan is a mapInPandas, not a groupBy(centroid_id): ADC needs
+    only each row's own centroid, so batches may mix centroids and
+    _adc_slices scores each same-centroid slice."""
     k2 = k * cand_mult
 
-    adc_schema = T.StructType(
-        [
-            T.StructField("q_id", queries.schema[id_col].dataType),
-            T.StructField("c_id", emb.schema[id_col].dataType),
-            T.StructField("adc", T.DoubleType()),
-        ]
-    )
-
-    def _score_slice(ids, C, cid):
-        """ADC-score one same-centroid slice against the queries probing
-        it; per-slice top-(k2+1) cut.  Any partitioning into slices gives
-        the same final result: a global top-k2 row ranks <= k2 inside any
-        slice that contains it, so the global window cut downstream sees
-        every survivor (same argument as the per-batch PQ cut)."""
-        qi = probing.get(cid)
-        if qi is None or not len(qi):
-            return None
-        s = lut[0][qi][:, C[:, 0]]
-        for j in range(1, m):
-            s = s + lut[j][qi][:, C[:, j]]
-        s = s + sim_qc[qi, cid][:, None]  # q.(centroid + residual)
-        top = min(k2 + 1, len(ids))
-        o = np.lexsort((np.broadcast_to(ids, s.shape), -s), axis=1)[:, :top]
-        rep = np.repeat(qi, top)
-        return pd.DataFrame(
-            {
-                "q_id": q_ids[rep],
-                "c_id": ids[o.ravel()],
-                "adc": np.take_along_axis(s, o, axis=1).ravel(),
-            }
+    def _score(pdf):
+        slices = _adc_slices(
+            qs,
+            pdf["centroid_id"].to_numpy(),
+            np.stack(pdf["codes"].to_numpy()),
+            pdf["v_id"].to_numpy(),
+            k2 + 1,
         )
+        for cut, _rep, _rows in slices:
+            yield cut
 
-    def _score_batches(batches):
-        # r14: mapInPandas over the (partition-pruned) code stream instead
-        # of groupBy(centroid_id).applyInPandas — the ADC score needs no
-        # cross-row grouping, only each row's OWN centroid id, so the
-        # bucket Exchange was a whole shuffle stage spent on nothing
-        # (guide §2.4).  Batches may mix centroids; score per same-cid
-        # slice within the batch.
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cids = pdf["centroid_id"].to_numpy()
-            ids_all = pdf["v_id"].to_numpy()
-            C_all = np.stack(pdf["codes"].to_numpy())
-            for cid in np.unique(cids):
-                mask = cids == cid
-                out = _score_slice(ids_all[mask], C_all[mask], int(cid))
-                if out is not None and len(out):
-                    yield out
-
-    adc = enc.mapInPandas(_score_batches, schema=adc_schema).filter(
-        F.col("q_id") != F.col("c_id")
-    )
-    wa = W.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("c_id"))
-    cand = adc.withColumn("rn", F.row_number().over(wa)).filter(F.col("rn") <= k2)
+    adc = _topk_scan(emb, queries, id_col, vec_col, None, ["adc"], _score, corpus=enc)
+    cand = _top_rows(adc, "adc", k2, "rn")
     c = emb.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"))
     q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
     scored = (
@@ -1828,12 +1541,7 @@ def _ivfpq_search(
         .join(F.broadcast(q), "q_id")
         .withColumn("cos", cosine(F.col("q_vec"), F.col("c_vec")))
     )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank", F.round("cos", 6).alias("cos"))
-    )
+    return _rank_tail(scored, k)
 
 
 def build_ivfpq_index(
@@ -1856,8 +1564,6 @@ def build_ivfpq_index(
     enc = _ivfpq_encode(emb, cents, books, id_col, vec_col, n=n)
     enc.write.mode("overwrite").partitionBy("centroid_id").parquet(f"{path}/codes")
     spark = emb.sparkSession
-    from pyspark.sql import types as T
-
     cent_schema = T.StructType(
         [
             T.StructField("centroid_id", T.IntegerType(), False),
@@ -1896,19 +1602,16 @@ def ivfpq_search_indexed(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Search a persisted IVF-PQ index: centroids/codebooks load driver-side
-    (tiny), the probe set becomes an IN filter on the codes table's
+    with pyarrow (tiny, zero Spark jobs), the query set is collected once
+    (_query_side), its probe set becomes an IN filter on the codes table's
     partition column (PartitionFilters — only probed directories are read),
-    ADC + exact re-rank run exactly as the in-memory path, so results are
-    identical (asserted in tests)."""
-    # side tables are nlist / m*ksub rows — pyarrow reads them driver-side
-    # with zero Spark jobs (r14; was two scheduled read+collect jobs)
-    cent_rows = _read_parquet_local(f"{path}/centroids").to_pylist()
-    cents = np.stack(
-        [
-            np.asarray(r["vec"])
-            for r in sorted(cent_rows, key=lambda r: r["centroid_id"])
-        ]
+    and ADC + exact re-rank run as _ivfpq_search, so results equal the
+    in-memory path's (asserted in tests)."""
+    cent_rows = sorted(
+        _read_parquet_local(f"{path}/centroids").to_pylist(),
+        key=lambda r: r["centroid_id"],
     )
+    cents = np.stack([np.asarray(r["vec"]) for r in cent_rows])
     book_rows = _read_parquet_local(f"{path}/codebooks").to_pylist()
     mm = max(r["subspace"] for r in book_rows) + 1
     ks = max(r["code"] for r in book_rows) + 1
@@ -1916,22 +1619,9 @@ def ivfpq_search_indexed(
     books = np.empty((mm, ks, dsub))
     for r in book_rows:
         books[r["subspace"], r["code"]] = r["vec"]
-    # probe-set partition pruning: nprobe nearest centroids per query,
-    # unioned into an IN filter on the partition column (a bounded
-    # driver-side computation over the collected query matrix)
-    qrows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(vec_col).alias("q_vec"))
-        .collect()
-    )
-    Q = np.stack([np.asarray(r.q_vec, dtype=np.float64) for r in qrows])
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Qn = Q / np.where(qn > 0, qn, 1.0)
-    order = np.argsort(-(Qn @ cents.T), axis=1)[:, : min(nprobe, len(cents))]
-    probe_ids = sorted({int(c) for c in order.ravel()})
+    qs = _query_side(queries, id_col, vec_col, books, cents, nprobe)
+    probe_ids = sorted(c for c, qi in qs.probing.items() if len(qi))
     codes = spark.read.parquet(f"{path}/codes").filter(
         F.col("centroid_id").isin(probe_ids)
     )
-    return _ivfpq_search(
-        codes, emb, queries, cents, books, k, nprobe, cand_mult, id_col, vec_col
-    )
+    return _ivfpq_search(codes, emb, queries, qs, k, cand_mult, id_col, vec_col)

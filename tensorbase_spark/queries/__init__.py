@@ -31,271 +31,9 @@ class Query:
     bench: bool = False  # include in bench.py headline set
 
 
-# Queries the round-1 driver already hash-verified (CORRECTNESS_r01.json).
-# The driver checks the FIRST ~50 registry entries per round, so these go
-# LAST: every slot ahead of them buys a fresh hard-correctness row for a
-# query family that has none yet (VERDICT r1 item #1).
-R01_VERIFIED = frozenset(
-    """q1_pricing_summary q3_shipping_priority q5_local_supplier
-    filter_predicates between_in_null case_cast join_inner_agg
-    join_left_count join_right_full join_cross_filter join_semi join_anti
-    join_using agg_basic_stats agg_count_distinct agg_having
-    agg_group_by_expr count_star orderby_limit_topk sort_multi_key
-    setop_union_all setop_union setop_intersect setop_except
-    distinct_select cte_revenue scalar_subquery_agg join_range_bands
-    q6_forecast_revenue q12_shipmode_priority q14_promo_effect
-    q18_large_orders q4_order_priority q10_returned_items
-    q19_disjunctive_predicates q7_volume_shipping rollup_hierarchy
-    q2_min_cost_supplier q8_market_share q9_product_type_profit
-    q11_important_part_share q13_customer_distribution q15_top_supplier
-    q16_supplier_relationship q17_small_quantity_revenue
-    q20_potential_promotion q21_suppliers_kept_waiting
-    q22_global_sales_opportunity window_row_number window_rank_dense""".split()
-)
-
-# Round-2 driver-verified set (CORRECTNESS_r02.json) — like R01_VERIFIED,
-# these queries already have green rows and yield their head slots.
-R02_VERIFIED = frozenset(
-    """window_lag_lead window_running_sum window_first_last_ntile
-    window_cume_dist window_nth_value window_range_frame
-    events_tumbling_window events_sessionize ch_date_parts ch_time_parts
-    ch_to_date_datetime ch_string_funcs ch_uuid_roundtrip ch_math_funcs
-    ch_array_hofs ch_split_pad ch_limit_by regex_funcs crypto_hash_funcs
-    datetime_extract_trunc string_parts_funcs nullif_coalesce
-    agg_array_collect grouping_sets_rollup math_trig_funcs
-    string_width_funcs timestamp_family engine_ddl_insert_select
-    engine_partition_prune engine_join_prune ch_aggregate_combinators
-    ch_json_extract numbers_table_function csv_ingest_roundtrip
-    ndjson_ingest_roundtrip remote_loopback remote_jdbc_federation
-    dedup_exact dedup_stats_by_source dedup_ngram_jaccard
-    dedup_embedding_cosine dedup_neardup_clusters sim_brute_force_topk
-    sim_knn_classify embedding_quantize_int8 text_token_counts
-    text_quality_scores text_lang_id multimodal_png_decode""".split()
-)
-
-# Round-3 driver-verified set (CORRECTNESS_r03.json hash-green rows).
-R03_VERIFIED = frozenset(
-    """stream_tumbling_window stream_sliding_window stream_session_window
-    stream_stateful_rollup stream_dedup_users stream_stream_join
-    stream_append_ingest corpus_quality_pipeline corpus_split_train_val_test
-    corpus_cap_per_source corpus_contamination_scan corpus_build_end_to_end
-    corpus_sample_stratified events_window_funnel events_retention
-    events_json_extract join_asof pivot_status text_fingerprints
-    text_pii_redaction text_url_extract text_chunking multimodal_wav_decode
-    multimodal_features multimodal_thumbnails multimodal_frame_plan
-    ch_array_hofs2 ch_minute_buckets agg_quantiles agg_top_k_words
-    array_functions ch_cast_multiif avro_ingest_roundtrip
-    engine_bucketed_join engine_meta_lifecycle sim_ivf_full_probe
-    sim_lsh_full_cover dedup_minhash_bands_sql dedup_simhash_fp_sql
-    agg_approx_distinct_check dedup_incremental_index
-    corpus_temperature_sample corpus_shuffle_shards contamination_semantic
-    stream_incremental_dedup engine_alter_columns engine_system_parts""".split()
-)
-
-# Round-4 driver-verified set (CORRECTNESS_r04.json hash-green rows, plus
-# the rows-only approximates that got their rows-only driver evidence).
-R04_VERIFIED = frozenset(
-    """ch_agg_extras ch_quantile_family corpus_pack_sequences
-    ch_array_join_clause ch_string_replace_extract ch_stats_family
-    ch_calendar_funcs ch_with_totals ch_with_fill ch_sample_clause
-    ch_sequence_uniq ch_distinct_on ch_join_strictness ch_asof_join_sql
-    ch_url_ip_funcs ch_dictionary_lookup ch_state_merge ch_star_modifiers
-    engine_ttl_lifecycle engine_query_log engine_projection_rollup
-    ch_map_tuple_funcs ch_qualify_dedup engine_mutations
-    engine_materialized_view engine_outfile_roundtrip engine_zorder_read
-    stream_mv_ingest join_skew_salted events_anomaly_zscore
-    corpus_bloom_decontaminate corpus_mixture_to_budget text_unigram_logprob
-    text_repetition_filters dedup_lines_global text_bpe_merges_check
-    sim_pq_rerank_full sim_ivfpq_full_cover embedding_pca_variance
-    sim_ivf_indexed sim_ivfpq_indexed agg_approx_distinct dedup_minhash_lsh
-    dedup_simhash sim_ivf_topk sim_lsh_topk""".split()
-)
-
-# Round-5 driver-verified set (CORRECTNESS_r05.json: 46 hash-green rows +
-# the 3 rows-only approximates that got their driver rows).  Excludes the
-# one r5 failure, ch_everyday_funcs3 (oracle HUGEINT->float64 dtype bug,
-# fixed for r6 — see engine_queries.py CH_EVERYDAY3_ORACLE).
-R05_VERIFIED = frozenset(
-    """ch_array_set_ops ch_group_by_all ch_ilike_ops ch_limit_with_ties
-    ch_named_window ch_prewhere ch_qualify_distinct ch_recursive_cte
-    ch_scalar_with ch_setop_all corpus_rag_prep_end_to_end
-    dedup_substring_windows dedup_url_canonical embedding_l2_normalize
-    embedding_mean_pool engine_codec_compression engine_enum_case
-    engine_explain_catalog engine_optimize_compaction engine_optimize_dedup
-    engine_order_by_expr engine_partition_ops engine_projection_alias
-    engine_projection_mutation engine_query_cache engine_query_params
-    events_funnel_strict events_transition_matrix join_asof_forward
-    sim_ivf_index_append sim_ivfpq_topk sim_pq_topk text_bm25_topk
-    text_bpe_tokenize text_ngram_novelty window_interval_range""".split()
-)
-
-# Round-6 driver-verified set (CORRECTNESS_r06.json, 50/50 green): with
-# these, every registry query has cumulative driver evidence — they all
-# yield their head slots.
-R06_VERIFIED = frozenset(
-    """ch_everyday_funcs3 stream_corpus_maintenance engine_replacing_final
-    engine_summing_final ch_rollup_cube_suffix engine_plain_view
-    dedup_keep_best text_zipf_slope ch_weighted_aggs ch_bracket_arrays
-    ch_with_fill_dates ch_everyday_funcs5 engine_lightweight_delete
-    ch_merge_table_function text_gopher_rules text_c4_clean
-    text_boilerplate_lines ch_window_timeseries corpus_dsir_weights
-    engine_file_url_roundtrip metrics_binary_auc metrics_pr_points
-    engine_backup_restore ch_combinators2 corpus_classifier_loop
-    ch_everyday_funcs6 text_html_extract multimodal_audio_dedup
-    join_skew_salted""".split()
-)
-
-# Round-7 driver-verified set (CORRECTNESS_r07.json, 50/50 green).
-R07_VERIFIED = frozenset(
-    """engine_ingest_reinterp engine_buffer_flush ch_cast_type_names
-    ch_uuid_text_funcs ch_everyday_funcs7 ch_everyday_funcs8
-    corpus_semantic_dedup dedup_edit_distance dedup_embedding_cosine
-    multimodal_ahash_dedup engine_collapsing_cdc ch_paste_join
-    engine_null_distributed ch_histogram_agg ch_topk_weighted
-    ch_entropy_kv ch_everyday_funcs4 agg_top_k_words
-    engine_ingest_partitioned engine_ddl_insert_select engine_nested_type
-    engine_aggregating_mv ch_uuid_roundtrip case_cast q1_pricing_summary
-    join_skew_salted q3_shipping_priority q5_local_supplier
-    filter_predicates between_in_null join_inner_agg join_left_count
-    join_right_full join_cross_filter join_semi join_anti join_using
-    agg_basic_stats agg_count_distinct agg_having agg_group_by_expr
-    count_star orderby_limit_topk sort_multi_key setop_union_all
-    setop_union setop_intersect setop_except distinct_select
-    cte_revenue""".split()
-)
-
-# Round-8 driver-verified set (CORRECTNESS_r08.json, 47 hash-green + the
-# 3 rows-only ANN approximates that were deliberately re-headed after
-# their auto-sizing change).
-R08_VERIFIED = frozenset(
-    """agg_array_collect ch_aggregate_combinators ch_array_hofs
-    ch_date_parts ch_entropy_kv ch_everyday_funcs4 ch_everyday_funcs9
-    ch_histogram_agg ch_json_extract ch_limit_by ch_math_funcs
-    ch_split_pad ch_topk_weighted corpus_semantic_dedup
-    dedup_embedding_cosine dedup_neardup_clusters dedup_ngram_jaccard
-    engine_buffer_flush engine_ddl_insert_select engine_ingest_reinterp
-    engine_null_distributed join_range_bands q10_returned_items
-    q11_important_part_share q12_shipmode_priority
-    q13_customer_distribution q14_promo_effect q15_top_supplier
-    q16_supplier_relationship q17_small_quantity_revenue q18_large_orders
-    q19_disjunctive_predicates q20_potential_promotion
-    q21_suppliers_kept_waiting q22_global_sales_opportunity
-    q2_min_cost_supplier q4_order_priority q6_forecast_revenue
-    q7_volume_shipping q8_market_share q9_product_type_profit
-    remote_thrift_federation rollup_hierarchy scalar_subquery_agg
-    sim_ivf_indexed sim_ivf_topk sim_lsh_topk window_rank_dense
-    window_row_number wire_native_roundtrip""".split()
-)
-
-# Round-9 head: every head slot buys FRESH evidence (VERDICT r8 #7) —
-# (a) the query NEW this round (the MySQL wire protocol round trip),
-# then (b) every query whose IMPLEMENTATION changed behavior or plan in
-# round 9: the native wire round trip (CityHash128 >=128B final-combine
-# fix changes large-frame checksum bytes; Date/DateTime range checks),
-# multi-probe LSH (+ its full-cover companion, same hashing module), the
-# Arrow df-map collect under ngram-jaccard (+ its clusters consumer),
-# and the dist-agg queries riding the nested-subquery count(*) scope
-# change.  Everything else is driver-verified r1..r8 and yields its
-# slot to the staleness-ordered tail.
-R09_VERIFIED = frozenset(
-    """ch_describe_query ch_entropy_kv ch_everyday_funcs10
-    ch_everyday_funcs11 ch_everyday_funcs13 ch_everyday_funcs14
-    ch_everyday_funcs4 ch_everyday_funcs5 ch_histogram_agg
-    ch_parameterized_view ch_string_funcs ch_time_parts
-    ch_to_date_datetime ch_topk_weighted ch_url_hierarchy
-    ch_vector_distances crypto_hash_funcs csv_ingest_roundtrip
-    datetime_extract_trunc dedup_exact dedup_neardup_clusters
-    dedup_ngram_jaccard dedup_stats_by_source embedding_quantize_int8
-    engine_aggregating_mv engine_detach_attach engine_join_prune
-    engine_partition_prune engine_system_functions events_sessionize
-    events_tumbling_window grouping_sets_rollup math_trig_funcs
-    multimodal_phash_dedup multimodal_png_decode ndjson_ingest_roundtrip
-    nullif_coalesce numbers_table_function regex_funcs
-    remote_jdbc_federation remote_mysql_federation
-    remote_native_federation remote_sharded_scatter sim_lsh_full_cover
-    stream_mv_ingest url_http_federation wire_http_roundtrip
-    wire_mysql_roundtrip wire_native_roundtrip""".split()
-)
-
-
-R10_VERIFIED = frozenset(
-    """agg_approx_distinct_check agg_quantiles array_functions
-    avro_ingest_roundtrip ch_array_hofs2 ch_cast_multiif
-    ch_everyday_funcs16 ch_minute_buckets
-    ch_parameterized_view contamination_semantic corpus_build_end_to_end
-    corpus_cap_per_source corpus_contamination_scan
-    corpus_quality_pipeline corpus_sample_stratified
-    corpus_shuffle_shards corpus_split_train_val_test
-    corpus_temperature_sample dedup_incremental_index
-    dedup_minhash_bands_sql dedup_simhash_fp_sql engine_alter_columns
-    engine_bucketed_join engine_kill_query engine_meta_lifecycle
-    engine_system_parts events_json_extract events_retention
-    events_window_funnel join_asof remote_loopback sim_brute_force_topk
-    sim_knn_classify string_parts_funcs string_width_funcs text_lang_id
-    text_quality_scores text_token_counts timestamp_family
-    url_http_federation window_cume_dist window_first_last_ntile
-    window_lag_lead window_nth_value window_range_frame
-    window_running_sum wire_http_roundtrip wire_mysql_roundtrip
-    wire_native_roundtrip""".split()
-)
-# ch_everyday_funcs17 was r10-green but its toDaysSinceYearZero offset
-# changed in r11 (ADVICE fix) — listed in PRIORITY_HEAD instead.
-
-
-R11_VERIFIED = frozenset(
-    """ch_agg_extras ch_array_join_clause ch_asof_join_sql
-    ch_calendar_funcs ch_dictionary_lookup ch_distinct_on
-    ch_everyday_funcs17 ch_everyday_funcs18 ch_everyday_funcs19
-    ch_everyday_funcs20 ch_join_strictness
-    ch_map_tuple_funcs ch_qualify_dedup ch_quantile_family
-    ch_sample_clause ch_sequence_uniq ch_star_modifiers ch_state_merge
-    ch_stats_family ch_string_replace_extract ch_url_ip_funcs
-    ch_with_fill ch_with_totals corpus_bloom_decontaminate
-    corpus_mixture_to_budget corpus_pack_sequences dedup_lines_global
-    multimodal_features multimodal_frame_plan multimodal_thumbnails
-    multimodal_wav_decode pivot_status sim_ivf_full_probe
-    stream_append_ingest stream_dedup_users stream_incremental_dedup
-    stream_session_window stream_sliding_window stream_stateful_rollup
-    stream_stream_join stream_tumbling_window text_chunking
-    text_fingerprints text_pii_redaction text_url_extract""".split()
-)
-# ch_everyday_funcs21 and the wire roundtrips were r11-green but their
-# implementations changed in r12 (extractGroups named groups; kill-aware
-# stream loop / per-run job groups) — listed in PRIORITY_HEAD instead.
-
-
-# Round-12 driver-verified set (CORRECTNESS_r12.json: 46 hash-green rows
-# + the 4 rows-only approximates that got their driver rows, each paired
-# with a hash-green companion — see APPROX_COMPANION).  Excludes
-# ch_everyday_funcs26 (its accurateCast / bitmask templates changed in
-# r13 — PRIORITY_HEAD) and the wire roundtrips (door request paths
-# changed in r13: collect-detection regex, session-budget locking).
-R12_VERIFIED = frozenset(
-    """ch_array_set_ops ch_everyday_funcs21 ch_everyday_funcs22
-    ch_everyday_funcs23 ch_everyday_funcs24 ch_everyday_funcs25
-    ch_group_by_all ch_ilike_ops ch_limit_with_ties ch_named_window
-    ch_prewhere ch_qualify_distinct ch_recursive_cte ch_scalar_with
-    ch_setop_all corpus_rag_prep_end_to_end dedup_substring_windows
-    dedup_url_canonical embedding_l2_normalize embedding_mean_pool
-    embedding_pca_variance engine_codec_compression engine_enum_case
-    engine_explain_catalog engine_kill_query engine_materialized_view
-    engine_mutations engine_optimize_compaction engine_optimize_dedup
-    engine_order_by_expr engine_outfile_roundtrip engine_partition_ops
-    engine_projection_alias engine_projection_rollup engine_query_log
-    engine_ttl_lifecycle engine_zorder_read events_anomaly_zscore
-    sim_ivfpq_full_cover sim_pq_rerank_full text_bpe_merges_check
-    text_repetition_filters text_unigram_logprob
-    agg_approx_distinct dedup_minhash_lsh dedup_simhash
-    sim_ivfpq_indexed""".split()
-)
-
-
 # Every rows-only approximate (oracle=None) and the hash-verified oracle
-# companion that backs it (COVERAGE.md's mapping table, VERDICT r11 #7).
-# The rotation couples them: a companion inherits the staleness rank of
-# its approximates, so whenever an approximate re-enters the driver's
-# check window its companion lands in the SAME window (VERDICT r12 #5) —
-# the rows-only evidence and the hash evidence stay contemporaneous.
+# companion that backs it (COVERAGE.md's mapping table): an approximate's
+# rows-only evidence is only as good as the exact check standing behind it.
 APPROX_COMPANION = {
     "agg_approx_distinct": "agg_approx_distinct_check",
     "dedup_minhash_lsh": "dedup_minhash_bands_sql",
@@ -310,27 +48,8 @@ APPROX_COMPANION = {
 }
 
 
-PRIORITY_HEAD = [
-    # round-13 behavior-changed implementations: accurateCast is strict
-    # (raises on failed conversion) and bitmask explosions cover bit 63
-    # (funcs26); both wire doors' request paths changed (collect-shape
-    # detection regex; HTTP session budget read under srv.lock); tier 29
-    # moved greatCircleDistance to CH's sphere radius (funcs3's gcd
-    # values), tier 31 corrected boundingRatio to the endpoint slope
-    # (ch_weighted_aggs), and tier 32's sequenceMatch returns tinyint
-    # where the old 2-step fast path returned boolean (ch_sequence_uniq).
-    "ch_everyday_funcs26", "wire_http_roundtrip", "wire_native_roundtrip",
-    "ch_everyday_funcs3", "ch_weighted_aggs", "ch_sequence_uniq",
-    # (b) new round-13 queries
-    "ch_everyday_funcs27", "ch_everyday_funcs28", "ch_everyday_funcs29",
-    "ch_everyday_funcs30", "ch_everyday_funcs31", "ch_everyday_funcs32",
-    "ch_everyday_funcs33", "ch_everyday_funcs34", "ch_everyday_funcs35", "ch_everyday_funcs36",
-    "ch_everyday_funcs37", "ch_everyday_funcs38",
-    "ch_everyday_funcs39", "ch_everyday_funcs40",
-]
-
-
 def registry() -> dict[str, Query]:
+    """Every query by name, in registration order (module by module)."""
     from tensorbase_spark.queries import (
         chdialect,
         chfuncs,
@@ -365,44 +84,4 @@ def registry() -> dict[str, Query]:
             if name in out:
                 raise ValueError(f"duplicate query name: {name}")
             out[name] = q
-
-    rounds = [
-        R01_VERIFIED, R02_VERIFIED, R03_VERIFIED, R04_VERIFIED,
-        R05_VERIFIED, R06_VERIFIED, R07_VERIFIED, R08_VERIFIED,
-        R09_VERIFIED, R10_VERIFIED, R11_VERIFIED, R12_VERIFIED,
-    ]
-    verified = frozenset().union(*rounds)
-    head = [n for n in PRIORITY_HEAD if n in out]
-    mid_unverified = [
-        n for n in out if n not in PRIORITY_HEAD and n not in verified
-    ]
-    # oracle-backed before rows-only: a hash row is a stronger signal
-    mid_unverified.sort(key=lambda n: out[n].oracle is None)
-    # staleness rotation (r8): the driver re-hashes only the ~50-entry
-    # window head, so order the verified tail by the round that LAST
-    # checked each query, oldest first — spare window slots continuously
-    # refresh the stalest evidence instead of re-checking the same
-    # insertion-order prefix every round
-    def _last_verified(n: str) -> int:
-        return max(i for i, r in enumerate(rounds) if n in r)
-
-    def _rank(n: str) -> int:
-        own = _last_verified(n)
-        # a rows-only approximate's hash-verified companion inherits the
-        # approximate's staleness: both enter the driver's check window
-        # together, so the weaker rows-only evidence is always paired
-        # with a contemporaneous hash row (VERDICT r12 #5)
-        inherited = [
-            _last_verified(a)
-            for a, c in APPROX_COMPANION.items()
-            if c == n and a in verified and a not in PRIORITY_HEAD
-        ]
-        return min([own, *inherited])
-
-    tail_verified = sorted(
-        (n for n in out if n in verified and n not in PRIORITY_HEAD),
-        key=lambda n: (_rank(n), n),
-    )
-    ordered = head + mid_unverified + tail_verified
-    assert len(ordered) == len(out)
-    return {n: out[n] for n in ordered}
+    return out

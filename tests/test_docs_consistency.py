@@ -40,14 +40,6 @@ def test_plans_close_lines_carry_no_registry_counts(  # VERDICT r7 #8
     assert not stale, f"hardcoded counts in PLANS.md: {stale}"
 
 
-def test_priority_head_names_exist():
-    from tensorbase_spark.queries import PRIORITY_HEAD, registry
-
-    reg = registry()
-    missing = [n for n in PRIORITY_HEAD if n not in reg]
-    assert not missing, f"PRIORITY_HEAD names not in registry: {missing}"
-
-
 def test_oracle_keys_subset_of_queries():
     import __spark_entry__ as e
 
@@ -58,8 +50,8 @@ def test_oracle_keys_subset_of_queries():
 def test_approx_companion_mapping_complete():
     """Every rows-only approximate (oracle=None) must name a hash-verified
     oracle companion in APPROX_COMPANION, and every companion must exist
-    with a full oracle — the rotation couples their window entries
-    (VERDICT r12 #5), so a broken mapping silently decouples evidence."""
+    with a full oracle — a broken mapping leaves an approximate's rows-only
+    evidence with no exact check behind it."""
     from tensorbase_spark.queries import APPROX_COMPANION, registry
 
     reg = registry()

@@ -160,6 +160,72 @@ def test_brute_force_topk_keeps_string_ids(spark):
     )
 
 
+def test_ivfpq_indexed_keeps_string_ids(spark, tmp_path):
+    """The persisted IVF-PQ code table keeps the caller's id type: over
+    string ids the indexed search equals the in-memory IVF-PQ search."""
+    emb = spark.read.parquet(f"{SF0001}/embeddings.parquet")
+    emb = emb.withColumn("vec_id", F.format_string("v%08d", "vec_id"))
+    q = emb.filter(F.col("vec_id").endswith("00"))
+    idx = f"{tmp_path}/ivfpq"
+    similarity.build_ivfpq_index(emb, idx, n_centroids=16)
+    got = similarity.ivfpq_search_indexed(spark, idx, emb, q, k=5, nprobe=8)
+    assert dict(got.dtypes)["c_id"] == "string"
+    want = similarity.ivfpq_topk(emb, q, k=5, n_centroids=16, nprobe=8)
+    rows = sorted(tuple(r) for r in got.collect())
+    assert len(rows) == 5 * q.count()
+    assert rows == sorted(tuple(r) for r in want.collect())
+
+
+@pytest.fixture(scope="module")
+def ann_indexes(spark, tmp_path_factory):
+    """Persisted IVF and IVF-PQ indexes over the sf0.001 embeddings."""
+    emb = spark.read.parquet(f"{SF0001}/embeddings.parquet")
+    root = str(tmp_path_factory.mktemp("ann_indexes"))
+    similarity.build_ivf_index(emb, f"{root}/ivf", n_centroids=16)
+    similarity.build_ivfpq_index(emb, f"{root}/ivfpq", n_centroids=16)
+    return root
+
+
+_TOPK_OPS = {
+    "brute_force_topk": lambda spark, emb, q, idx: similarity.brute_force_topk(emb, q, k=5),
+    "ivf_topk": lambda spark, emb, q, idx: similarity.ivf_topk(
+        emb, q, k=5, n_centroids=16, nprobe=4
+    ),
+    "lsh_topk": lambda spark, emb, q, idx: similarity.lsh_topk(
+        emb, q, k=5, n_bits=4, n_tables=4
+    ),
+    "pq_topk": lambda spark, emb, q, idx: similarity.pq_topk(emb, q, k=5),
+    "ivfpq_topk": lambda spark, emb, q, idx: similarity.ivfpq_topk(
+        emb, q, k=5, n_centroids=16, nprobe=4
+    ),
+    "ivf_search_indexed": lambda spark, emb, q, idx: similarity.ivf_search_indexed(
+        spark, f"{idx}/ivf", q, k=5
+    ),
+    "ivfpq_search_indexed": lambda spark, emb, q, idx: similarity.ivfpq_search_indexed(
+        spark, f"{idx}/ivfpq", emb, q, k=5
+    ),
+}
+
+
+@pytest.mark.parametrize("query_set", ["empty", "all_null"])
+@pytest.mark.parametrize("op", list(_TOPK_OPS))
+def test_topk_empty_or_null_query_set(spark, ann_indexes, op, query_set):
+    """An empty or all-NULL query set is an ordinary input for every top-k
+    operator: the usual result schema, and no row with a score (a NULL
+    query vector has no cosine, so at most NULL-cos rows come back)."""
+    emb = spark.read.parquet(f"{SF0001}/embeddings.parquet")
+    q = emb.filter(F.col("vec_id") % 100 == 0)
+    if query_set == "empty":
+        q = q.filter(F.lit(False))
+    else:
+        q = q.withColumn("embedding", F.lit(None).cast(emb.schema["embedding"].dataType))
+    df = _TOPK_OPS[op](spark, emb, q, ann_indexes)
+    assert df.dtypes == [
+        ("q_id", "bigint"), ("c_id", "bigint"), ("rank", "int"), ("cos", "double")
+    ]
+    assert all(r.cos is None for r in df.collect())
+
+
 def test_ivf_recall_vs_brute_force(spark):
     emb = spark.read.parquet(f"{SF0001}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") % 100 == 0)
@@ -1678,10 +1744,18 @@ def test_bm25_empty_term_query_returns_no_rows(spark):
     assert sorted(tuple(r) for r in out) == sorted(tuple(r) for r in gen)
 
 
-def test_pq_topk_batch_size_invariant(spark):
-    """The r14 fused encode+ADC emits per-batch top-(k2+1) candidates; the
-    global result must not depend on Arrow batch boundaries (any global
-    top-k2 row ranks <= k2 inside its own batch)."""
+_BATCH_CUT_OPS = {
+    "pq_topk": lambda S, emb, q: S.pq_topk(emb, q, k=5),
+    "brute_force_topk": lambda S, emb, q: S.brute_force_topk(emb, q, k=5),
+    "ivfpq_topk": lambda S, emb, q: S.ivfpq_topk(emb, q, k=5, n_centroids=16, nprobe=8),
+}
+
+
+@pytest.mark.parametrize("op", list(_BATCH_CUT_OPS))
+def test_pq_topk_batch_size_invariant(spark, op):
+    """The top-k scans emit per-batch top-(n+1) candidates; the global
+    result must not depend on Arrow batch boundaries (any global top-n row
+    ranks <= n inside its own batch)."""
     from tensorbase_spark.pipeline import similarity as S
 
     SF = "/root/testdata/sf0.001"
@@ -1690,12 +1764,13 @@ def test_pq_topk_batch_size_invariant(spark):
 
     emb = load_table(spark, SF, "embeddings")
     q = emb.filter(F.col("vec_id") % 100 == 0)
+    run = _BATCH_CUT_OPS[op]
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-        small = sorted(tuple(r) for r in S.pq_topk(emb, q, k=5).collect())
+        small = sorted(tuple(r) for r in run(S, emb, q).collect())
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        big = sorted(tuple(r) for r in S.pq_topk(emb, q, k=5).collect())
+        big = sorted(tuple(r) for r in run(S, emb, q).collect())
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
     assert small == big
