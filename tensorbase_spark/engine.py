@@ -7,7 +7,8 @@ against a sled store, and SELECTs are re-parsed and executed by a vendored
 DataFusion.  This module is the same shape on Spark: a regex dispatcher
 classifies commands, meta/DDL commands run against the Spark catalog, and
 queries are dialect-translated and handed to spark.sql — Catalyst plays the
-role DataFusion plays in the reference.
+role DataFusion plays in the reference.  The storage shim — the files under
+each table's location: appends, rewrites, listings — is storage.py.
 
 Command surface (reference citation -> here):
 - CREATE DATABASE [IF NOT EXISTS]       mgmt.rs:473
@@ -41,7 +42,6 @@ from __future__ import annotations
 
 import contextlib
 import datetime as _dt
-import functools
 import os as _os
 import re
 import threading
@@ -58,13 +58,16 @@ from tensorbase_spark.functions.clickhouse import (
     CH_PARAMETRIC_TEMPLATES,
     CH_SQL_TEMPLATES,
 )
+from tensorbase_spark.storage import (
+    _MONOTONIC_PTK_FNS,
+    PTK_COL,
+    PartitionSpec,
+    TableStore,
+    jprops,
+    live_files,
+    parse_partition_expr,
+)
 from tensorbase_spark.types import parse_bql_type
-
-PTK_COL = "__ptk"
-
-# serializes bloom-writing inserts: the per-column parquet bloom keys are
-# set/unset on the process-global Hadoop configuration around insertInto
-_BLOOM_WRITE_LOCK = threading.Lock()
 
 
 def _order_col(key: str):
@@ -1218,93 +1221,6 @@ def _extract_with_fill(sql: str):
     return sql[: m.start()].rstrip(), m.group("col"), desc, frm, to, step, interp
 
 
-# Reference rejects blocks that split into >=1000 partitions
-# (crates/runtime/src/write.rs:52-56).
-MAX_PARTS_PER_INSERT = 1000
-
-_MONOTONIC_PTK_FNS = {
-    # fn name -> python evaluator over a date/datetime/int literal.
-    # Monotonic in the source column, so range predicates map through.
-    "toYYYYMMDD": lambda d: d.year * 10000 + d.month * 100 + d.day,
-    "toYYYYMM": lambda d: d.year * 100 + d.month,
-    "toYear": lambda d: d.year,
-    "toYYYY": lambda d: d.year,
-}
-
-
-def _check_parts(nparts: int) -> None:
-    if nparts >= MAX_PARTS_PER_INSERT:
-        raise ValueError(
-            f"insert spans {nparts} partitions >= {MAX_PARTS_PER_INSERT} "
-            "(reference guard, crates/runtime/src/write.rs:52-56)"
-        )
-
-
-# The partition directory of a driver-side write is named by this column:
-# the key cast to a string in the session time zone, as Spark's writer
-# names it, with '' read as NULL (Spark's Empty2Null), the default partition.
-_PTK_PATH = "__ptk_path"
-
-
-@functools.cache
-def _ptk_path_column() -> F.Column:
-    return F.nullif(F.col(PTK_COL).cast("string"), F.lit(""))
-
-# Parquet codecs the driver-side write produces as Spark's writer does:
-# pyarrow's name, parquet-mr's default level and Spark's file extension.
-_LOCAL_CODECS = {
-    "snappy": ("snappy", None, ".snappy"),
-    "zstd": ("zstd", 3, ".zstd"),
-    "gzip": ("gzip", 6, ".gz"),
-    "uncompressed": ("none", None, ""),
-    "none": ("none", None, ""),
-}
-
-
-@dataclass(frozen=True)
-class PartitionSpec:
-    """Parsed PARTITION BY clause: identity column, CH fn over a column, or
-    rem(col, n)."""
-
-    source_col: str
-    fn: str | None = None  # None = identity
-    rem_n: int | None = None
-
-    @functools.cache
-    def ptk_column(self) -> F.Column:
-        """The key as a Column, built once per spec: each step of building
-        it is a py4j round trip, ~120 of them for a ``toYYYYMM`` key."""
-        if self.fn is None:
-            return F.col(self.source_col)
-        if self.fn == "rem":
-            return CH_FUNCTIONS["rem"](self.source_col, self.rem_n).cast("long")
-        return CH_FUNCTIONS[self.fn](F.col(self.source_col)).cast("long")
-
-
-_PARTITION_RE = re.compile(
-    r"^(?:(?P<fn>[A-Za-z_][A-Za-z0-9_]*)\s*\(\s*(?P<col>[A-Za-z_][A-Za-z0-9_]*)"
-    r"\s*(?:,\s*(?P<n>\d+)\s*)?\)|(?P<bare>[A-Za-z_][A-Za-z0-9_]*))$"
-)
-
-
-def parse_partition_expr(expr: str) -> PartitionSpec:
-    m = _PARTITION_RE.match(expr.strip())
-    if not m:
-        raise ValueError(f"unsupported partition expression: {expr!r}")
-    if m.group("bare"):
-        return PartitionSpec(m.group("bare"))
-    fn, col, n = m.group("fn"), m.group("col"), m.group("n")
-    if fn == "rem":
-        if n is None:
-            raise ValueError("rem(col, N) requires N")
-        return PartitionSpec(col, "rem", int(n))
-    if fn not in _MONOTONIC_PTK_FNS and fn not in CH_FUNCTIONS:
-        raise ValueError(f"unsupported partition function: {fn}")
-    if n is not None:
-        raise ValueError(f"{fn} takes one argument")
-    return PartitionSpec(col, fn)
-
-
 # ---------------------------------------------------------------------------
 # Dialect translation: ClickHouse function calls -> Spark SQL text
 # ---------------------------------------------------------------------------
@@ -1741,12 +1657,14 @@ class TensorBaseEngine:
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
+        # the table files: appends, rewrites, listings and the write lock
+        self.storage = TableStore(spark)
+        self._catalog_table = self.storage.catalog_table
         self._partition_specs: dict[str, PartitionSpec] = {}
         # declared BQL column types per table (_bql_cols_for); dropped
         # wherever _partition_specs is, and on CREATE
         self._bql_cols_cache: dict[str, dict] = {}
         self._create_scripts: dict[str, str] = {}
-        self._jclasses: dict[str, object] = {}  # _jclass lookups
         # materialized views: src table -> [(mv, tgt, select, src_as_written)]
         self._mvs: dict[str, list[tuple[str, str, str, str]]] = {}
         self._mv_depth = 0
@@ -1756,8 +1674,9 @@ class TensorBaseEngine:
         self._query_log: list[tuple] = []
         # CH projections: src table -> [ProjectionSpec]
         self._projections: dict[str, list[ProjectionSpec]] = {}
-        # OPTIMIZE compaction target (bytes per output file for
-        # unpartitioned tables); SET optimize_target_file_bytes overrides
+        # OPTIMIZE compaction target (bytes per output file of an
+        # unpartitioned or ZORDER rewrite); SET optimize_target_file_bytes
+        # overrides
         self._optimize_file_bytes: int = 128 << 20
         # upstream-CH query result cache (SET use_query_cache = 1):
         # key -> (catalog_version, pandas result, schema).  Any
@@ -1795,15 +1714,8 @@ class TensorBaseEngine:
         # concurrent front-door ingest (the reference's ingest bench pools
         # 12 connections, bench_ingestion.rs:6-40): _buffer_lock guards
         # the pending-list bookkeeping (append/steal must not lose a block
-        # arriving mid-flush); _buffer_write_lock serializes every append,
-        # engine-wide (two concurrent Spark appends to one table race on
-        # the committer's _temporary dir; the driver-side write of a
-        # driver-local block uses no _temporary dir but takes it too)
+        # arriving mid-flush); storage.lock serializes the writes
         self._buffer_lock = threading.Lock()
-        # REENTRANT: _write_block fires materialized-view propagation,
-        # which re-enters insert_df (and thus this lock) on the same
-        # thread — a plain Lock self-deadlocks on any MV-equipped table
-        self._buffer_write_lock = threading.RLock()
         # live query registry (system.processes / SHOW PROCESSLIST / KILL
         # QUERY): query_id -> in-flight entry.  Populated by track_query()
         # — the HTTP/native/MySQL front doors wrap each request, and
@@ -1839,11 +1751,6 @@ class TensorBaseEngine:
         FOOTERS (metadata-only reads — the local stand-in for a metastore
         stats query; never a data scan), file counts and bytes on disk.
         Un-partitioned tables report partition='all'."""
-        import os
-        from urllib.parse import unquote
-
-        import pyarrow.parquet as pq
-
         db = self.spark.catalog.currentDatabase()
         rows = []
         for t in self.spark.catalog.listTables(db):
@@ -1851,32 +1758,12 @@ class TensorBaseEngine:
                 continue
             if t.name.endswith("__detached_tbl"):
                 continue  # CH hides detached tables from system.* too
-            qualified = f"{db}.{t.name}"
-            try:
-                loc = (
-                    self.spark.sql(f"DESCRIBE TABLE EXTENDED {qualified}")
-                    .filter("col_name = 'Location'")
-                    .first()
-                    .data_type.replace("file:", "")
-                )
-            except Exception:
-                continue
-            if not os.path.isdir(loc):
-                continue
             parts: dict[str, list[int]] = {}  # partition -> [rows, bytes, files]
-            for dirpath, _dirs, files in os.walk(loc):
-                pfs = [f for f in files if f.endswith(".parquet")]
-                if not pfs:
-                    continue
-                rel = os.path.relpath(dirpath, loc)
-                # the key value, not Spark's %XX-escaped directory name
-                partition = unquote(rel.split("=", 1)[1]) if "=" in rel else "all"
-                agg = parts.setdefault(partition, [0, 0, 0])
-                for f in pfs:
-                    p = os.path.join(dirpath, f)
-                    agg[0] += pq.ParquetFile(p).metadata.num_rows
-                    agg[1] += os.path.getsize(p)
-                    agg[2] += 1
+            for f in self.storage.files(f"{db}.{t.name}"):
+                agg = parts.setdefault(f.partition or "all", [0, 0, 0])
+                agg[0] += f.rows
+                agg[1] += f.bytes
+                agg[2] += 1
             for partition, (n, b, nf) in sorted(parts.items()):
                 rows.append((db, t.name, partition, n, b, nf))
         self.spark.createDataFrame(
@@ -1892,8 +1779,6 @@ class TensorBaseEngine:
         metadata-only, like _refresh_system_parts."""
         import os
 
-        import pyarrow.parquet as pq
-
         wh = self.spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
         rows = []
         if os.path.isdir(wh):
@@ -1907,16 +1792,11 @@ class TensorBaseEngine:
                     pdir = os.path.join(root, part)
                     if not os.path.isdir(pdir):
                         continue
-                    n = b = nf = 0
-                    for dirpath, _dirs, files in os.walk(pdir):
-                        for f in files:
-                            if not f.endswith(".parquet"):
-                                continue
-                            p = os.path.join(dirpath, f)
-                            n += pq.ParquetFile(p).metadata.num_rows
-                            b += os.path.getsize(p)
-                            nf += 1
-                    rows.append((db, tbl, part, n, b, nf))
+                    files = live_files(pdir)
+                    rows.append((
+                        db, tbl, part, sum(f.rows for f in files),
+                        sum(f.bytes for f in files), len(files),
+                    ))
         self.spark.createDataFrame(
             rows,
             "database string, table string, partition string, "
@@ -2048,60 +1928,6 @@ class TensorBaseEngine:
             return name
         return f"{self.spark.catalog.currentDatabase()}.{name}"
 
-    def _catalog_table(self, qualified: str):
-        """The session catalog's JVM ``CatalogTable`` for ``qualified``, or
-        None for temp views and missing tables.  One ``getTableMetadata``
-        call (~0.5 ms); ``spark.catalog.getTable`` costs ~10 ms more."""
-        db, _, tbl = qualified.rpartition(".")
-        if not db:
-            db = self.spark.catalog.currentDatabase()
-        try:
-            return self._jcatalog.getTableMetadata(self._jident(tbl, db))
-        except Exception:
-            return None
-
-    @functools.cached_property
-    def _jcatalog(self):
-        return self.spark._jsparkSession.sessionState().catalog()
-
-    def _jident(self, tbl: str, db: str):
-        return self._jclass("org.apache.spark.sql.catalyst.TableIdentifier")(
-            tbl, self._jclass("scala.Some")(db)
-        )
-
-    def _jclass(self, dotted: str):
-        """A JVM class, or the Scala object of a name ending in ``$``, looked
-        up once per engine: each step of a py4j package path is a round
-        trip."""
-        hit = self._jclasses.get(dotted)
-        if hit is None:
-            hit = self.spark.sparkContext._jvm
-            for step in dotted.split("."):
-                hit = getattr(hit, step)
-            if dotted.endswith("$"):
-                hit = getattr(hit, "MODULE$")
-            self._jclasses[dotted] = hit
-        return hit
-
-    @staticmethod
-    def _jprops(jmap) -> dict:
-        """A Scala ``Map[String, String]`` (a table's properties or storage
-        options) as a dict, in four py4j round trips rather than four per
-        entry: keys and values each joined on a control character, or read
-        entry by entry when a value holds it."""
-        keys = jmap.keys().mkString("\x01")
-        if not keys:
-            return {}
-        ks, vs = keys.split("\x01"), jmap.values().mkString("\x01").split("\x01")
-        if len(ks) == len(vs):
-            return dict(zip(ks, vs))
-        it = jmap.iterator()
-        out: dict = {}
-        while it.hasNext():
-            kv = it.next()
-            out[kv._1()] = kv._2()
-        return out
-
     def _table_props(self, qualified: str) -> dict:
         """tb.* properties of a MANAGED engine table; {} for temp views,
         views and missing tables.
@@ -2116,7 +1942,7 @@ class TensorBaseEngine:
         meta = self._catalog_table(qualified)
         if meta is None or meta.tableType().name() not in ("MANAGED", "EXTERNAL"):
             return {}
-        return self._jprops(meta.properties())
+        return jprops(meta.properties())
 
     def _resolve_alias(self, qualified: str) -> str:
         """Distributed/Buffer alias -> local target table.  The in-memory
@@ -2176,7 +2002,7 @@ class TensorBaseEngine:
     def _table_props_view(self, qualified: str) -> dict:
         """View properties via the JVM catalog (tb.* on alias views)."""
         meta = self._catalog_table(qualified)
-        return {} if meta is None else self._jprops(meta.properties())
+        return {} if meta is None else jprops(meta.properties())
 
     def flush_buffer(self, alias: str) -> None:
         """Flush a Buffer alias's pending blocks to its target as ONE
@@ -2200,8 +2026,9 @@ class TensorBaseEngine:
         # partitions of near-empty write tasks — coalesce (no shuffle)
         # back to the core count before the one partitioned write
         out = out.coalesce(self.spark.sparkContext.defaultParallelism)
-        with self._buffer_write_lock:
-            self._write_block(self._resolve_alias(alias), out)
+        target = self._resolve_alias(alias)
+        with self.storage.lock(target):
+            self._write_block(target, out)
 
     def _spec_for(self, name: str) -> PartitionSpec | None:
         q = self._qualify(name)
@@ -2963,27 +2790,13 @@ class TensorBaseEngine:
             # is footer validation — every file's metadata must parse and
             # the footer row total must cover the files (metadata-only,
             # never a data scan)
-            import os
-
-            import pyarrow.parquet as pq
-
             name = self._qualify(c.split()[-1])
-            loc = (
-                self.spark.sql(f"DESCRIBE TABLE EXTENDED {name}")
-                .filter("col_name = 'Location'")
-                .first()
-                .data_type.replace("file:", "")
-            )
-            nfiles = nrows = 0
-            for dirpath, _dirs, files in os.walk(loc):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        nrows += pq.ParquetFile(
-                            os.path.join(dirpath, f)
-                        ).metadata.num_rows
-                        nfiles += 1
+            if self._catalog_table(name) is None:
+                raise ValueError(f"CHECK TABLE: no table {name}")
+            files = self.storage.files(name)
             return self.spark.createDataFrame(
-                [(1, nfiles, nrows)], "result: int, files: long, rows: long"
+                [(1, len(files), sum(f.rows for f in files))],
+                "result: int, files: long, rows: long",
             )
         if low.startswith(("backup table ", "restore table ")):
             return self._backup_restore(c)
@@ -3030,8 +2843,8 @@ class TensorBaseEngine:
             )
         if re.match(r"(?is)^explain\s+estimate\b", c):
             # CH EXPLAIN ESTIMATE: per-referenced-table part/row/byte
-            # counts (not a plan) — served from the same parquet-footer
-            # walk system.parts uses, so it is metadata-only
+            # counts (not a plan) — from the parquet footers of the
+            # referenced tables only, so it is metadata-only
             body = c[len("explain"):].strip()[len("estimate"):]
             db = self.spark.catalog.currentDatabase()
             refs = {
@@ -3042,19 +2855,20 @@ class TensorBaseEngine:
                     body,
                 )
             }
-            self._refresh_system_parts()
-            parts = self.spark.table("global_temp.tb_system_parts")
-            names = [r.split(".", 1)[1] for r in sorted(refs) if "." in r]
-            return (
-                parts.filter(
-                    (F.col("database") == db) & F.col("table").isin(names)
-                )
-                .groupBy("database", "table")
-                .agg(
-                    F.sum("part_count").alias("parts"),
-                    F.sum("rows").alias("rows"),
-                    F.sum("bytes_on_disk").alias("bytes_on_disk"),
-                )
+            est = []
+            for name in sorted({r.split(".", 1)[1] for r in refs if "." in r}):
+                if name.endswith("__detached_tbl"):
+                    continue  # CH hides detached tables from system.* too
+                files = self.storage.files(f"{db}.{name}")
+                if files:
+                    est.append((
+                        db, name, len(files), sum(f.rows for f in files),
+                        sum(f.bytes for f in files),
+                    ))
+            return self.spark.createDataFrame(
+                est,
+                "database string, table string, parts long, rows long, "
+                "bytes_on_disk long",
             )
         if low.startswith("explain"):
             # CH EXPLAIN variants (PLAN/PIPELINE/SYNTAX/AST) all map to the
@@ -3556,19 +3370,17 @@ class TensorBaseEngine:
             for d in self.spark.catalog.listDatabases():
                 for t in self.spark.catalog.listTables(d.name):
                     # listTables(db) also returns TEMP VIEWS, which have
-                    # no database — db-qualifying them makes DESCRIBE
-                    # throw and would abort the whole ownership proof.
-                    # A temp view cannot own a warehouse path: skip.
+                    # no database: a temp view cannot own a warehouse path
                     if t.isTemporary:
                         continue
-                    rows = self.spark.sql(
-                        f"describe formatted `{d.name}`.`{t.name}`"
-                    ).collect()
-                    for r in rows:
-                        if (r.col_name or "").strip() == "Location" and (
-                            r.data_type or ""
-                        ).rstrip("/").endswith(path.rstrip("/")):
-                            return
+                    meta = self._catalog_table(f"{d.name}.{t.name}")
+                    uri = None if meta is None else meta.storage().locationUri()
+                    if (
+                        uri is not None
+                        and uri.isDefined()
+                        and uri.get().getPath().rstrip("/").endswith(path.rstrip("/"))
+                    ):
+                        return
         except Exception:
             return  # cannot prove the path is orphaned: leave it alone
         # Move the orphan ASIDE rather than deleting it: the proof above
@@ -3796,58 +3608,32 @@ class TensorBaseEngine:
                 | F.expr(f"({expiry}) is null")
             )
         if m.group("z"):
-            out = self._optimize_zorder(name, df, spec, m.group("z"))
-            if ttl:
-                self._rebuild_projections(name)
-            return out
-        if spec:
-            tmp = df.repartition(F.col(PTK_COL))
+            self._optimize_zorder(name, df, spec, m.group("z"))
         else:
-            # size-based compaction: one shuffle task per target-file-size
-            # slice of the CURRENT table bytes.  coalesce(1) here would be a
-            # single-task full-table rewrite — a scale-killer at 100 TB for
-            # any unpartitioned table; a byte-budgeted repartition keeps the
-            # rewrite wide and the output files merge-sized.
-            n_files = max(
-                1, -(-self._table_bytes(name) // self._optimize_file_bytes)
-            )
-            tmp = df.repartition(n_files)
-        sort_txt = m.group("sort") or props.get("tb.order_by")
-        if sort_txt:
-            keys = [_order_col(k) for k in _split_depth0(sort_txt)]
-            tmp = tmp.sortWithinPartitions(*keys)
-        # Spark refuses to overwrite a table from a plan that reads it —
-        # stage through a temp parquet dir first, then overwrite.
-        stage = f"{self.spark.conf.get('spark.sql.warehouse.dir')}/optimize_stage_tmp"
-        tmp.write.mode("overwrite").parquet(stage)
-        self.spark.read.parquet(stage).write.insertInto(name, overwrite=True)
+            if spec:
+                tmp = df.repartition(F.col(PTK_COL))
+            else:
+                # size-based compaction: one shuffle task per
+                # target-file-size slice.  coalesce(1) here would be a
+                # single-task full-table rewrite — a scale-killer at 100 TB
+                # for any unpartitioned table; a byte-budgeted repartition
+                # keeps the rewrite wide and the output files merge-sized.
+                tmp = df.repartition(self._rewrite_file_count(name))
+            sort_txt = m.group("sort") or props.get("tb.order_by")
+            if sort_txt:
+                keys = [_order_col(k) for k in _split_depth0(sort_txt)]
+                tmp = tmp.sortWithinPartitions(*keys)
+            self.storage.rewrite(name, tmp)
         if ttl:  # the rewrite dropped expired rows — refresh hidden rollups
             self._rebuild_projections(name)
         return self.spark.sql("SELECT 1 AS ok")
 
-    def _table_bytes(self, name: str) -> int:
-        """Bytes on disk of an engine table's parquet files (filesystem
-        metadata only — the same walk _refresh_system_parts does; a real
-        metastore supplies this from stats)."""
-        import os
-
-        try:
-            loc = (
-                self.spark.sql(f"DESCRIBE TABLE EXTENDED {name}")
-                .filter("col_name = 'Location'")
-                .first()
-                .data_type.replace("file:", "")
-            )
-        except Exception:
-            return 0
-        total = 0
-        for dirpath, _dirs, files in os.walk(loc):
-            total += sum(
-                os.path.getsize(os.path.join(dirpath, f))
-                for f in files
-                if f.endswith(".parquet")
-            )
-        return total
+    def _rewrite_file_count(self, name: str) -> int:
+        """Output files of a size-budgeted rewrite: the table's bytes on
+        disk (file metadata only; a real metastore supplies them from
+        stats) over ``optimize_target_file_bytes``."""
+        nbytes = sum(f.bytes for f in self.storage.files(name))
+        return max(1, -(-nbytes // self._optimize_file_bytes))
 
     _MV_RE = re.compile(
         r"(?is)^create\s+materialized\s+view\s+(?P<mv>[\w.]+)\s+to\s+"
@@ -4499,17 +4285,14 @@ class TensorBaseEngine:
         name = self._qualify(m.group("name"))
         path = m.group("p2") or m.group("p1")
         if m.group("verb").lower() == "backup":
-            loc = (
-                self.spark.sql(f"DESCRIBE TABLE EXTENDED {name}")
-                .filter("col_name = 'Location'")
-                .first()
-                .data_type.replace("file:", "")
-            )
+            meta = self._catalog_table(name)
+            if meta is None:
+                raise ValueError(f"BACKUP: no table {name}")
             if os.path.exists(path):
                 raise ValueError(
                     f"backup target exists: {path} (CH refuses to overwrite)"
                 )
-            shutil.copytree(loc, os.path.join(path, "data"))
+            shutil.copytree(meta.location().getPath(), os.path.join(path, "data"))
             script = self._create_scripts.get(name) or self._table_props(
                 name
             ).get("tb.create_script")
@@ -4517,10 +4300,7 @@ class TensorBaseEngine:
                 raise ValueError(f"no create script recorded for {name}")
             with open(os.path.join(path, "create.sql"), "w") as f:
                 f.write(script)
-            nfiles = sum(
-                len([x for x in fs if x.endswith(".parquet")])
-                for _d, _s, fs in os.walk(path)
-            )
+            nfiles = len(live_files(os.path.join(path, "data")))
             return self.spark.createDataFrame(
                 [(1, nfiles, path)], "result: int, files: long, path: string"
             )
@@ -4536,12 +4316,7 @@ class TensorBaseEngine:
             script.strip(),
         )
         self.sql(script)
-        loc = (
-            self.spark.sql(f"DESCRIBE TABLE EXTENDED {name}")
-            .filter("col_name = 'Location'")
-            .first()
-            .data_type.replace("file:", "")
-        )
+        loc = self._catalog_table(name).location().getPath()
         shutil.rmtree(loc, ignore_errors=True)
         shutil.copytree(os.path.join(path, "data"), loc)
         if self._spec_for(name) is not None:
@@ -4763,25 +4538,7 @@ class TensorBaseEngine:
                     out_cols.append(F.col(col))
             new = affected.select(*out_cols)
 
-        stage = f"{self.spark.conf.get('spark.sql.warehouse.dir')}/mutate_stage_tmp"
-        new.write.mode("overwrite").parquet(stage)
-        staged = self.spark.read.parquet(stage)
-        if ptk_pred is not None:
-            # bounded collects: partition-value lists, not data
-            before = {r[0] for r in affected.select(PTK_COL).distinct().collect()}
-            after = {r[0] for r in staged.select(PTK_COL).distinct().collect()}
-            prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                staged.write.insertInto(name, overwrite=True)
-            finally:
-                self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-            for v in sorted(before - after):  # fully-emptied partitions
-                self.spark.sql(
-                    f"ALTER TABLE {name} DROP IF EXISTS PARTITION ({PTK_COL} = '{v}')"
-                )
-        else:
-            staged.write.insertInto(name, overwrite=True)
+        self.storage.rewrite(name, new, where=ptk_pred)
         # CH rewrites projection parts with every mutation — keep the
         # hidden rollups consistent with the post-mutation base
         self._rebuild_projections(name)
@@ -4952,20 +4709,15 @@ class TensorBaseEngine:
             )
         else:
             new_df = df.withColumnRenamed(actual, new)
-        stage = (
-            f"{self.spark.conf.get('spark.sql.warehouse.dir')}/alter_cols_stage_tmp"
-        )
-        new_df.write.mode("overwrite").parquet(stage)
-        staged = self.spark.read.parquet(stage)
 
-        self.spark.sql(f"DROP TABLE {name}")
-        self._partition_specs.pop(name, None)
-        self._bql_cols_cache.pop(name, None)
-        self._create_scripts.pop(name, None)
-        self._create_table(new_script)
-        order = self.spark.table(name).columns
-        staged.select(*order).write.insertInto(name)
-        self.spark.catalog.refreshTable(name)
+        def recreate() -> None:
+            self.spark.sql(f"DROP TABLE {name}")
+            self._partition_specs.pop(name, None)
+            self._bql_cols_cache.pop(name, None)
+            self._create_scripts.pop(name, None)
+            self._create_table(new_script)
+
+        self.storage.rewrite(name, new_df, recreate=recreate)
         # a projection over a dropped/renamed/retyped column is rebuilt
         # against the new schema or unregistered if its SELECT broke
         self._rebuild_projections(name)
@@ -5006,15 +4758,16 @@ class TensorBaseEngine:
         ]
         return work.withColumn("__zkey", F.expr(" | ".join(terms))).drop(*tmp_cols)
 
-    def _optimize_zorder(self, name: str, df: DataFrame, spec, zexpr: str) -> DataFrame:
+    def _optimize_zorder(self, name: str, df: DataFrame, spec, zexpr: str) -> None:
         """``OPTIMIZE TABLE t ZORDER BY (c1, c2[, ...])`` — multi-dimensional
         clustering (beyond the reference, whose OPTIMIZE only flushes,
         mgmt.rs:938): rows are laid out along the Morton curve of the named
         columns, so parquet row-group/file min-max stats become selective on
         EVERY zorder column at once — selective scans prune on c2 even when
         c1 is absent from the predicate, where a plain SORT BY only serves
-        its leading column.  File count = ceil(rows / tb.optimize.rowsPerFile
-        [default 1 Mi]); partitioned tables cluster within each partition."""
+        its leading column.  Files are sized as plain OPTIMIZE sizes them
+        (``_rewrite_file_count``); partitioned tables cluster within each
+        partition."""
         cols = [x.strip() for x in _split_depth0(_strip_outer_parens(zexpr))]
         if not cols:
             raise ValueError("ZORDER BY: empty column list")
@@ -5027,8 +4780,7 @@ class TensorBaseEngine:
                     f"ZORDER BY: column {col!r} of type {t} is not orderable "
                     "numerically; zorder supports numeric/date/timestamp"
                 )
-        rows_per_file = int(self.spark.conf.get("tb.optimize.rowsPerFile", "1048576"))
-        n_files = max(1, -(-df.count() // rows_per_file))
+        n_files = self._rewrite_file_count(name)
         work = self._zorder_key(df, cols)
         parts = [F.col(PTK_COL)] if spec else []
         tmp = (
@@ -5036,13 +4788,8 @@ class TensorBaseEngine:
             .sortWithinPartitions(*parts, F.col("__zkey"))
             .drop("__zkey")
         )
-        # localCheckpoint breaks the read-own-table lineage (so insertInto
-        # overwrite is legal) AND pins one output file per range partition —
-        # a parquet stage dir would get re-combined by the small-file
-        # coalescing of the re-read, shredding the clustered boundaries
-        tmp = tmp.localCheckpoint(eager=True)
-        tmp.write.insertInto(name, overwrite=True)
-        return self.spark.sql("SELECT 1 AS ok")
+        # one output file per range partition: the rewrite keeps them
+        self.storage.rewrite(name, tmp)
 
     # -- INSERT paths -------------------------------------------------------
 
@@ -5302,11 +5049,8 @@ class TensorBaseEngine:
         # Distributed alias: writes land in the local target table
         name = self._resolve_alias(name)
         out = self._cast_block(name, src, subset)
-        # serialize appends: two concurrent Spark writes into one table race
-        # on the committer's _temporary dir.  Driver-side writes use no
-        # _temporary dir (unique hidden temp names, then renames), but the
-        # lock stays engine-wide for both paths for now.
-        with self._buffer_write_lock:
+        # held over the materialized views' writes too, which re-enter it
+        with self.storage.lock(name):
             return self._write_block(name, out)
 
     def _cast_block(
@@ -5478,43 +5222,15 @@ class TensorBaseEngine:
         return q
 
     def _write_block(self, name: str, out: DataFrame) -> DataFrame:
-        """Write tail of the insert path: Null-engine discard, the partition
-        key and the >=1000-parts guard, the write, MV insert triggers.
-
-        The cast block and its key are one projection.  When Catalyst folds
-        it into driver-local rows (a door's Arrow block, ``INSERT ...
-        VALUES``), the driver writes the files with no Spark job
-        (``_write_local``); any other source, and a table whose write needs
-        Spark's writer, takes ``_write_spark``."""
-        spec = self._spec_for(name)
+        """Write tail of the insert path: the append (``storage``), then the
+        materialized views' insert triggers.  ENGINE = Null discards the
+        write, reads stay empty — but its MV insert triggers still fire over
+        the cast block (CH's standard ingest-through-Null fan-out idiom),
+        and the discard pays no job."""
         meta = self._catalog_table(name)
-        props = {} if meta is None else self._jprops(meta.properties())
-        if (props.get("tb.engine") or "").lower() == "null":
-            # ENGINE = Null: the write is discarded, reads stay empty — but
-            # MV insert triggers still fire over the cast block (CH's
-            # standard ingest-through-Null fan-out idiom).  Checked BEFORE
-            # the partition guard/shuffle: a discard must not pay a job.
-            if self._mvs.get(name):
-                if self._mv_depth >= 8:
-                    raise ValueError(
-                        "materialized-view chain deeper than 8 (cycle?)"
-                    )
-                self._mv_depth += 1
-                try:
-                    self._propagate_mvs(name, out)
-                finally:
-                    self._mv_depth -= 1
-            return self.spark.sql("SELECT 1 AS ok")
-        if spec is not None:
-            out = out.withColumn(PTK_COL, spec.ptk_column())
-        bloom = [
-            c.strip()
-            for c in props.get("tb.bloom_cols", "").split(",")
-            if c.strip()
-        ]
-        # pyarrow writes no bloom filters
-        if bloom or not self._write_local(name, meta, out, spec is not None):
-            self._write_spark(name, out, spec, bloom)
+        props = {} if meta is None else jprops(meta.properties())
+        if (props.get("tb.engine") or "").lower() != "null":
+            self.storage.append(name, meta, props, out, self._spec_for(name))
         if self._mvs.get(name):
             # CH materialized views are insert triggers: each view's SELECT
             # runs over the inserted block only (cast, target-named), and
@@ -5523,195 +5239,10 @@ class TensorBaseEngine:
                 raise ValueError("materialized-view chain deeper than 8 (cycle?)")
             self._mv_depth += 1
             try:
-                self._propagate_mvs(name, out.drop(PTK_COL))
+                self._propagate_mvs(name, out)
             finally:
                 self._mv_depth -= 1
         return self.spark.sql("SELECT 1 AS ok")
-
-    def _write_local(self, name: str, meta, out: DataFrame, keyed: bool) -> bool:
-        """Append a driver-local block from the driver, with no Spark job,
-        as the reference appends a block on its server (write.rs:69-136).
-
-        The rows Catalyst folded the cast and the key into are read out as
-        Arrow in the JVM; the guard counts their keys; one parquet file per
-        partition is written under a hidden temp name, which Spark's listing
-        skips; new partitions are registered in one catalog call; and only
-        then are the files renamed into place.  A reader so sees none of the
-        block, or its files appearing whole, never a row twice.  A failure
-        before the renames removes the temp files and the directories it
-        made.  There is no ``_temporary`` committer directory.
-
-        Returns False, having written nothing, when the block does not fold
-        to a LocalRelation or the table needs Spark's writer: buckets, a
-        float key (Spark's key equality is not Arrow's), storage options or
-        a codec pyarrow does not write, or a non-local location."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        from tensorbase_spark.sources import batches
-
-        if meta is None or meta.bucketSpec().isDefined():
-            return False
-        opts = self._jprops(meta.storage().properties())
-        codec = _LOCAL_CODECS.get(
-            (
-                opts.pop("compression", None)
-                or opts.pop("parquet.compression", None)
-                or self.spark.conf.get("spark.sql.parquet.compression.codec")
-            ).lower()
-        )
-        loc = meta.location()
-        if opts or codec is None or loc.getScheme() != "file":
-            return False
-        if keyed:
-            out = out.withColumn(_PTK_PATH, _ptk_path_column())
-        plan = out._jdf.queryExecution().optimizedPlan()
-        if plan.getClass().getSimpleName() != "LocalRelation":
-            return False
-        block = batches.local_rows(plan, self.spark)
-        if block is None:
-            return True  # no rows: nothing to write
-        if keyed and pa.types.is_floating(block.schema.field(PTK_COL).type):
-            return False
-        data = block.drop_columns([PTK_COL, _PTK_PATH] if keyed else [])
-        parts = [("", data)]
-        if keyed:
-            _check_parts(pc.count_distinct(block[PTK_COL], mode="all").as_py())
-            enc = block[_PTK_PATH].combine_chunks().dictionary_encode("encode")
-            idx = enc.indices.to_numpy(zero_copy_only=False)
-            counts = np.bincount(idx, minlength=len(enc.dictionary))
-            data = data.take(np.argsort(idx, kind="stable"))
-            path = self._jclass(
-                "org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils"
-            ).getPartitionPathString
-            starts = np.cumsum(counts) - counts
-            parts = [
-                (path(PTK_COL, key), data.slice(st, n))
-                for key, st, n in zip(enc.dictionary.to_pylist(), starts, counts)
-            ]
-        comp, level, ext = codec
-        # dictionary pages on strings only: parquet-mr writes integers
-        # PLAIN, and a dictionary per small block only grows them
-        strings = [
-            f.name for f in data.schema
-            if pa.types.is_string(f.type) or pa.types.is_large_string(f.type)
-        ]
-        root, stamp = loc.getPath(), _uuid.uuid4()
-        staged: list[tuple[str, str]] = []  # (temp, final) file paths
-        made: list[str] = []  # partition directories this write created
-        try:
-            for i, (frag, part) in enumerate(parts):
-                d = _os.path.join(root, frag)
-                if not _os.path.isdir(d):
-                    _os.makedirs(d)
-                    made.append(d)
-                tmp = _os.path.join(d, f".tb-{stamp}-{i:05d}.tmp")
-                staged.append(
-                    (tmp, _os.path.join(d, f"part-{i:05d}-{stamp}-c000{ext}.parquet"))
-                )
-                pq.write_table(
-                    part, tmp, compression=comp, compression_level=level,
-                    use_dictionary=strings, store_schema=False,
-                )
-            if keyed and meta.tracksPartitionsInCatalog():
-                self._add_partitions(name, [frag for frag, _ in parts])
-        except BaseException:
-            for tmp, _ in staged:
-                with contextlib.suppress(OSError):
-                    _os.remove(tmp)
-            for d in reversed(made):
-                with contextlib.suppress(OSError):
-                    _os.rmdir(d)
-            raise
-        for tmp, final in staged:
-            _os.rename(tmp, final)
-        self.spark.catalog.refreshTable(name)
-        return True
-
-    def _add_partitions(self, name: str, frags: list[str]) -> None:
-        """Register the partition directories ``frags`` (``__ptk=v``) with
-        one ``ALTER TABLE ADD IF NOT EXISTS PARTITION`` command, their specs
-        parsed as Spark's writer parses the directories it wrote."""
-        parse = self._jclass(
-            "org.apache.spark.sql.execution.datasources.PartitioningUtils$"
-        ).parsePathFragment
-        none = self._jclass("scala.Option").empty()
-        tuple2 = self._jclass("scala.Tuple2")
-        db, _, tbl = name.rpartition(".")
-        self._jclass(
-            "org.apache.spark.sql.execution.command.AlterTableAddPartitionCommand"
-        )(
-            self._jident(tbl, db),
-            self._jclass("org.apache.spark.api.python.PythonUtils").toSeq(
-                [tuple2(parse(f), none) for f in frags]
-            ),
-            True,
-        ).run(self.spark._jsparkSession)
-
-    def _write_spark(
-        self, name: str, out: DataFrame, spec: PartitionSpec | None, bloom: list
-    ) -> None:
-        """Spark's write of a keyed block: the guard (a job, unless the
-        key's partition count is static), the partition-aligned shuffle,
-        bloom writer options and ``insertInto``."""
-        if spec is not None:
-            if spec.fn == "rem" and spec.rem_n < MAX_PARTS_PER_INSERT:
-                # rem(col, n) bounds the partition count STATICALLY at n —
-                # the guard needs no job at all (measured: the distinct
-                # count was 19 s of a 90 s bulk ingest on the reference's
-                # own bench_ingestion.rs shape, rem(a,100) at 134M rows)
-                nparts = spec.rem_n
-            else:
-                nparts = (
-                    out.select(PTK_COL)
-                    .distinct()
-                    .limit(MAX_PARTS_PER_INSERT + 1)
-                    .count()
-                )
-                _check_parts(nparts)
-            # partition-aligned write: without this every task writes one
-            # file per ptk value it happens to see (tasks x partitions small
-            # files — the classic Hive-partitioned-append failure at scale);
-            # hash-clustering on __ptk bounds it at ~one file per partition
-            # at ANY shuffle width (each ptk hashes to exactly one task), so
-            # width is sized to the cluster (defaultParallelism), not to
-            # nparts — 100 writer tasks for a 256Ki-row block is pure task
-            # overhead (measured: width=100 cost ~1.17 s/block on the
-            # reference's bench_ingestion.rs shape vs ~0.9 s at core count).
-            # The reference gets the file bound for free from its per-(part,
-            # column) append files (write.rs:69-136).
-            if nparts > 1:
-                width = min(nparts, max(self.spark.sparkContext.defaultParallelism, 8))
-                out = out.repartition(width, F.col(PTK_COL))
-        if bloom:
-            # The per-column bloom keys live on the process-global Hadoop
-            # configuration (insertInto carries no writer options), so
-            # concurrent bloom-writing inserts — e.g. a streaming
-            # foreachBatch block landing while a batch insert runs — would
-            # race on set/unset; serialize them behind a process lock.
-            # Inserts without bloom columns skip the lock (no shared state).
-            hc = self.spark.sparkContext._jsc.hadoopConfiguration()
-            with _BLOOM_WRITE_LOCK:
-                try:
-                    for bc in bloom:
-                        # parquet-mr writer honors these per-column hadoop
-                        # keys
-                        hc.set(f"parquet.bloom.filter.enabled#{bc}", "true")
-                        hc.set(f"parquet.bloom.filter.expected.ndv#{bc}", "100000")
-                    out.write.mode("append").insertInto(name)
-                finally:
-                    for bc in bloom:
-                        hc.unset(f"parquet.bloom.filter.enabled#{bc}")
-                        hc.unset(f"parquet.bloom.filter.expected.ndv#{bc}")
-        else:
-            out.write.mode("append").insertInto(name)
-        if out.sparkSession is not self.spark:
-            # a foreachBatch micro-batch session clone wrote the files; the
-            # engine session's cached file listing for the table is stale
-            # until refreshed (same-session writes invalidate automatically)
-            self.spark.catalog.refreshTable(name)
 
     # -- SELECT translation + partition pruning ------------------------------
 

@@ -922,7 +922,7 @@ QUERIES["engine_alter_columns"] = Query(
 
 
 def engine_system_parts(spark, sf_dir):
-    """system.parts introspection (engine.py _refresh_system_parts): row
+    """system.parts introspection (storage.py live_files): row
     counts come from parquet FOOTERS only, so a hash match against the
     oracle's recount from the raw fixture proves the partitioned write
     placed every row in the right partition — without scanning data."""

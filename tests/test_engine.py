@@ -719,6 +719,7 @@ def test_optimize_zorder_clusters_both_columns(engine):
     be localized on BOTH columns (a plain SORT BY a leaves b's per-file
     range at ~100%).  Verified from the parquet footers the scans prune on."""
     import glob
+    import os
 
     import pyarrow.parquet as pq
 
@@ -728,25 +729,20 @@ def test_optimize_zorder_clusters_both_columns(engine):
     engine.sql(
         "insert into zt select id, (id * 2654435761) % 4096 from range(4096)"
     )
-    old = spark.conf.get("tb.optimize.rowsPerFile", None)
-    spark.conf.set("tb.optimize.rowsPerFile", "512")
-    try:
-        engine.sql("optimize table zt zorder by (a, b)")
-    finally:
-        if old is None:
-            spark.conf.unset("tb.optimize.rowsPerFile")
-        else:
-            spark.conf.set("tb.optimize.rowsPerFile", old)
+    loc = next(
+        row[1] for row in spark.sql("DESCRIBE FORMATTED zt").collect()
+        if (row[0] or "").strip().lower() == "location"
+    ).replace("file:", "")
+    # files of ~512 rows each
+    nbytes = sum(os.path.getsize(f) for f in glob.glob(f"{loc}/*.parquet"))
+    engine.sql(f"set optimize_target_file_bytes = {nbytes * 512 // 4096}")
+    engine.sql("optimize table zt zorder by (a, b)")
     # layout must not change content
     r = engine.sql(
         "select count(*) as n, sum(a) as sa, sum(b) as sb from zt"
     ).collect()[0]
     assert r.n == 4096 and r.sa == 4096 * 4095 // 2
 
-    loc = next(
-        row[1] for row in spark.sql("DESCRIBE FORMATTED zt").collect()
-        if (row[0] or "").strip().lower() == "location"
-    ).replace("file:", "")
     files = glob.glob(f"{loc}/*.parquet")
     assert len(files) >= 4  # 4096 rows / 512 per file, modulo range skew
 

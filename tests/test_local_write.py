@@ -164,13 +164,13 @@ def test_table_with_files_from_both_writers(engine):
 
 def _spark_writes(engine, monkeypatch) -> list:
     """Record the tables whose blocks take Spark's write."""
-    calls, real = [], engine._write_spark
+    calls, real = [], engine.storage._write_spark
 
     def spy(name, *a):
         calls.append(name)
         return real(name, *a)
 
-    monkeypatch.setattr(engine, "_write_spark", spy)
+    monkeypatch.setattr(engine.storage, "_write_spark", spy)
     return calls
 
 
