@@ -63,6 +63,7 @@ from tensorbase_spark.storage import (
     PTK_COL,
     PartitionSpec,
     TableStore,
+    WaitLock,
     jprops,
     live_files,
     parse_partition_expr,
@@ -1659,6 +1660,7 @@ class TensorBaseEngine:
         self.spark = spark
         # the table files: appends, rewrites, listings and the write lock
         self.storage = TableStore(spark)
+        self.storage.queries = self._other_queries
         self._catalog_table = self.storage.catalog_table
         self._partition_specs: dict[str, PartitionSpec] = {}
         # declared BQL column types per table (_bql_cols_for); dropped
@@ -1674,10 +1676,6 @@ class TensorBaseEngine:
         self._query_log: list[tuple] = []
         # CH projections: src table -> [ProjectionSpec]
         self._projections: dict[str, list[ProjectionSpec]] = {}
-        # OPTIMIZE compaction target (bytes per output file of an
-        # unpartitioned or ZORDER rewrite); SET optimize_target_file_bytes
-        # overrides
-        self._optimize_file_bytes: int = 128 << 20
         # upstream-CH query result cache (SET use_query_cache = 1):
         # key -> (catalog_version, pandas result, schema).  Any
         # catalog-mutating statement bumps the version, invalidating
@@ -1728,7 +1726,7 @@ class TensorBaseEngine:
         # HTTP per-request database/session scope) — a door-private lock
         # would let another door's analysis window observe the bind
         # (r12 review)
-        self.catalog_lock = threading.RLock()
+        self.catalog_lock = WaitLock()
         self._processes: dict[str, dict] = {}
         self._track_tls = threading.local()
         self._proc_views: list[str] = []  # snapshot views pending GC
@@ -1825,8 +1823,8 @@ class TensorBaseEngine:
             ),
             (
                 "optimize_target_file_bytes",
-                str(getattr(self, "_optimize_file_bytes", 128 * 1024 * 1024)),
-                str(getattr(self, "_optimize_file_bytes", 128 * 1024 * 1024))
+                str(self.storage.target_file_bytes),
+                str(self.storage.target_file_bytes)
                 != defaults["optimize_target_file_bytes"],
             ),
             (
@@ -2100,6 +2098,7 @@ class TensorBaseEngine:
                 "query_id": qid, "query": query.strip()[:8192],
                 "user": user, "interface": interface,
                 "started": _time.time(), "killed": False, "jg": jg,
+                "thread": threading.get_ident(),
                 "met": float(
                     max_execution_time if max_execution_time is not None
                     else (self._max_execution_time or 0)
@@ -2179,6 +2178,15 @@ class TensorBaseEngine:
                 self._processes.pop(qid, None)
             for k in props:
                 sc.setLocalProperty(k, prev[k])
+            # a merge's superseded files that waited on this query
+            self.storage.reclaim()
+
+    def _other_queries(self) -> list:
+        """The tracked queries other than this thread's own, as (entry,
+        thread ident) pairs: what a merge's reclaim waits for."""
+        own = getattr(self._track_tls, "qid", None)
+        with self._proc_lock:
+            return [(e, e["thread"]) for q, e in self._processes.items() if q != own]
 
     def check_not_killed(self, qid: str | None = None) -> None:
         """Raise if this thread's tracked query was KILLed (or timed
@@ -2412,7 +2420,7 @@ class TensorBaseEngine:
         }
         k, v = key.lower(), value
         if k == "optimize_target_file_bytes":
-            self._optimize_file_bytes = max(1, int(v))
+            self.storage.target_file_bytes = max(1, int(v))
         elif k == "use_query_cache":
             self._use_query_cache = v.strip().lower() in ("1", "true")
             if not self._use_query_cache:
@@ -2846,20 +2854,16 @@ class TensorBaseEngine:
             # counts (not a plan) — from the parquet footers of the
             # referenced tables only, so it is metadata-only
             body = c[len("explain"):].strip()[len("estimate"):]
-            db = self.spark.catalog.currentDatabase()
             refs = {
                 self._qualify(t)
-                for t, _a in re.findall(
-                    r"(?is)\b(?:from|join)\s+([A-Za-z_][\w.]*)"
-                    r"(?:\s+(?:as\s+)?([A-Za-z_]\w*))?",
-                    body,
-                )
+                for t in re.findall(r"(?is)\b(?:from|join)\s+([A-Za-z_][\w.]*)", body)
             }
             est = []
-            for name in sorted({r.split(".", 1)[1] for r in refs if "." in r}):
+            for ref in sorted(refs):
+                db, _, name = ref.rpartition(".")
                 if name.endswith("__detached_tbl"):
                     continue  # CH hides detached tables from system.* too
-                files = self.storage.files(f"{db}.{name}")
+                files = self.storage.files(ref)
                 if files:
                     est.append((
                         db, name, len(files), sum(f.rows for f in files),
@@ -3569,7 +3573,7 @@ class TensorBaseEngine:
             # CH: OPTIMIZE on a Buffer table flushes it to the target
             self.flush_buffer(name)
             return self.spark.sql("SELECT 1 AS ok")
-        if "*" in self._merges_stopped or name in self._merges_stopped:
+        if self._merges_stopped_for(name):
             # CH: OPTIMIZE cannot proceed while merges are stopped for the
             # table (SYSTEM STOP MERGES); fail loudly rather than queue
             raise ValueError(
@@ -3633,7 +3637,7 @@ class TensorBaseEngine:
         disk (file metadata only; a real metastore supplies them from
         stats) over ``optimize_target_file_bytes``."""
         nbytes = sum(f.bytes for f in self.storage.files(name))
-        return max(1, -(-nbytes // self._optimize_file_bytes))
+        return max(1, -(-nbytes // self.storage.target_file_bytes))
 
     _MV_RE = re.compile(
         r"(?is)^create\s+materialized\s+view\s+(?P<mv>[\w.]+)\s+to\s+"
@@ -3919,9 +3923,7 @@ class TensorBaseEngine:
             self._rebuild_projections(name)
             return self.spark.sql("SELECT 1 AS ok")
 
-        self.spark.sql(
-            f"ALTER TABLE {name} DROP IF EXISTS PARTITION ({PTK_COL} = '{v}')"
-        )
+        self.storage.drop_partition(name, v)
         self._rebuild_projections(name)
         return self.spark.sql("SELECT 1 AS ok")
 
@@ -4265,8 +4267,8 @@ class TensorBaseEngine:
     def _backup_restore(self, c: str) -> DataFrame:
         """Upstream-CH ``BACKUP TABLE t TO Disk('name', 'path')`` /
         ``RESTORE TABLE t FROM Disk('name', 'path')`` (plain ``TO 'path'``
-        accepted too).  A backup is the table's parquet files byte-for-byte
-        plus its create script (the same pair CH snapshots: parts +
+        accepted too).  A backup is the table's live parquet files
+        byte-for-byte plus its create script (the same pair CH snapshots: parts +
         metadata SQL); RESTORE re-runs the stored DDL and copies the files
         back, then MSCK-repairs so copied partition directories register.
         File copy, never a data job — the CH contract (backups are IO,
@@ -4292,7 +4294,15 @@ class TensorBaseEngine:
                 raise ValueError(
                     f"backup target exists: {path} (CH refuses to overwrite)"
                 )
-            shutil.copytree(meta.location().getPath(), os.path.join(path, "data"))
+            # the live files only, each partition's under its canonical
+            # directory, wherever the catalog locates it: RESTORE's MSCK
+            # REPAIR registers those directories
+            for f in self.storage.files(name):
+                d = os.path.join(path, "data", "" if f.partition is None
+                                 else self.storage.partition_dir(f.partition))
+                os.makedirs(d, exist_ok=True)
+                shutil.copy2(f.path, d)
+            os.makedirs(os.path.join(path, "data"), exist_ok=True)
             script = self._create_scripts.get(name) or self._table_props(
                 name
             ).get("tb.create_script")
@@ -5221,6 +5231,11 @@ class TensorBaseEngine:
                 )
         return q
 
+    def _merges_stopped_for(self, name: str) -> bool:
+        """Whether SYSTEM STOP MERGES holds for table ``name``: OPTIMIZE
+        refuses it and an append merges none of its files."""
+        return "*" in self._merges_stopped or name in self._merges_stopped
+
     def _write_block(self, name: str, out: DataFrame) -> DataFrame:
         """Write tail of the insert path: the append (``storage``), then the
         materialized views' insert triggers.  ENGINE = Null discards the
@@ -5230,7 +5245,8 @@ class TensorBaseEngine:
         meta = self._catalog_table(name)
         props = {} if meta is None else jprops(meta.properties())
         if (props.get("tb.engine") or "").lower() != "null":
-            self.storage.append(name, meta, props, out, self._spec_for(name))
+            self.storage.append(name, meta, props, out, self._spec_for(name),
+                                merge=not self._merges_stopped_for(name))
         if self._mvs.get(name):
             # CH materialized views are insert triggers: each view's SELECT
             # runs over the inserted block only (cast, target-named), and

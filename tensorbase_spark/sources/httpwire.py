@@ -84,6 +84,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
 from tensorbase_spark.sources import batches
+from tensorbase_spark.storage import WaitLock
 from tensorbase_spark.sources.chnative import (
     Reader,
     compress_frame,
@@ -1360,7 +1361,8 @@ class HttpChServer(ThreadingHTTPServer):
     def __init__(self, engine, host: str = "127.0.0.1", port: int = 0):
         super().__init__((host, port), _HttpHandler)
         self.engine = engine
-        self.lock = threading.Lock()  # serializes engine session mutation
+        # serializes engine session mutation
+        self.lock = WaitLock(threading.Lock())
         self.sessions: dict[str, dict] = {}
         # session_id -> absolute expiry (CH session_timeout, default 60 s);
         # swept opportunistically on each request under self.lock
@@ -1383,7 +1385,7 @@ def _engine_snapshot(eng) -> dict:
         "params": dict(eng._params),
         "use_query_cache": eng._use_query_cache,
         "uint64_storage": eng._uint64_storage,
-        "optimize_file_bytes": eng._optimize_file_bytes,
+        "optimize_file_bytes": eng.storage.target_file_bytes,
         # max_execution_time deliberately NOT round-tripped through the
         # shared engine: the per-request/per-session budget is resolved
         # at track time in _run, so it can never arm a watchdog on a
@@ -1396,7 +1398,7 @@ def _engine_restore(eng, snap: dict) -> None:
     eng._params = dict(snap["params"])
     eng._use_query_cache = snap["use_query_cache"]
     eng._uint64_storage = snap["uint64_storage"]
-    eng._optimize_file_bytes = snap["optimize_file_bytes"]
+    eng.storage.target_file_bytes = snap["optimize_file_bytes"]
     try:
         eng.spark.catalog.setCurrentDatabase(snap["database"])
     except Exception:
